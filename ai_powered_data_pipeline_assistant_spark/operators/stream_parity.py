@@ -673,7 +673,11 @@ def neardup_cluster_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     from ai_powered_data_pipeline_assistant_spark.streaming.cluster_stream import (
         drop_state,
         process_cluster_batch,
+        read_redirects,
         resolved_roots,
+    )
+    from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
+        state_tables,
     )
 
     nb = CLUSTER_STREAM_BATCHES
@@ -911,9 +915,11 @@ def phash_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_powered_data_pipeline_assistant_spark.operators.multimodal import (
         media_table,
     )
+    from ai_powered_data_pipeline_assistant_spark.streaming import (
+        state_compaction as sc,
+    )
     from ai_powered_data_pipeline_assistant_spark.streaming.phash_stream import (
-        _state_tables,
-        _table_path,
+        STATE_SPECS,
         compact_phash_state,
         drop_state,
         process_phash_batch,
@@ -933,10 +939,10 @@ def phash_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state,
                 f"{tmp}/pairs",
             )
-        tables = _state_tables(state)
+        tables = sc.state_tables(state, STATE_SPECS)
         pre = {k: spark.table(n).count() for k, n in tables.items()}
         pre_files = {
-            k: hadoop_fs.count_parquet(spark, _table_path(state, k))
+            k: hadoop_fs.count_parquet(spark, sc.table_path(state, k))
             for k in tables
         }
         post_files = compact_phash_state(spark, state)
@@ -1372,14 +1378,15 @@ def media_pipeline_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_powered_data_pipeline_assistant_spark.operators.multimodal import (
         media_table,
     )
+    from ai_powered_data_pipeline_assistant_spark.streaming import (
+        media_pipeline,
+        phash_stream,
+        state_compaction as sc,
+    )
     from ai_powered_data_pipeline_assistant_spark.streaming.media_pipeline import (
-        _state_tables,
         compact_media_state,
         drop_state,
         process_media_batch,
-    )
-    from ai_powered_data_pipeline_assistant_spark.streaming.phash_stream import (
-        _state_tables as _phash_tables,
     )
 
     nb = MEDIA_CRAWL_BATCHES
@@ -1396,8 +1403,10 @@ def media_pipeline_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 media.filter(F.col("media_id") % nb == i), i, state, out,
                 compact_every=2,
             )
-        tables = dict(_state_tables(state))
-        tables.update(_phash_tables(f"{state}/phash"))
+        tables = sc.state_tables(state, media_pipeline.STATE_SPECS)
+        tables.update(
+            sc.state_tables(f"{state}/phash", phash_stream.STATE_SPECS)
+        )
         pre = {k: spark.table(n).count() for k, n in tables.items()}
         compact_media_state(spark, state)
         post = {k: spark.table(n).count() for k, n in tables.items()}
@@ -1485,12 +1494,15 @@ def cluster_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_lsh_pairs_for,
     )
     from ai_powered_data_pipeline_assistant_spark.streaming.cluster_stream import (
-        _read_redirects,
-        _roots_table,
+        STATE_SPECS,
         compact_cluster_state,
         drop_state,
         process_cluster_batch,
+        read_redirects,
         resolved_roots,
+    )
+    from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
+        state_tables,
     )
 
     nb = CLUSTER_STREAM_BATCHES
@@ -1514,7 +1526,7 @@ def cluster_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             eager=True,
             require_barrier=True,
         )
-        red_before = _read_redirects(spark, state).count()
+        red_before = read_redirects(spark, state).count()
         stats = compact_cluster_state(spark, state)
         after = materialize_barrier(
             resolved_roots(spark, state).select("doc_id", "cluster_id")
@@ -1522,7 +1534,7 @@ def cluster_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         preserved = (
             before.exceptAll(after).count() + after.exceptAll(before).count()
         ) == 0
-        roots_rows = spark.table(_roots_table(state)).count()
+        roots_rows = spark.table(state_tables(state, STATE_SPECS)["roots"]).count()
         agg = after.agg(
             F.count("*").cast("long").alias("nd"),
             F.countDistinct("cluster_id").cast("long").alias("nc"),
@@ -1674,9 +1686,11 @@ def substring_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction preserves every row, and compaction never increases the
     file count."""
     from ai_powered_data_pipeline_assistant_spark import hadoop_fs
+    from ai_powered_data_pipeline_assistant_spark.streaming import (
+        state_compaction as sc,
+    )
     from ai_powered_data_pipeline_assistant_spark.streaming.substring_stream import (
-        _state_table,
-        _wins_path,
+        STATE_SPECS,
         compact_substring_state,
         drop_state,
         process_substring_batch,
@@ -1696,9 +1710,11 @@ def substring_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state_dir,
                 f"{tmp}/acct",
             )
-        table = _state_table(state_dir)
+        table = sc.state_tables(state_dir, STATE_SPECS)["wins"]
         pre_rows = spark.table(table).count()
-        pre_files = hadoop_fs.count_parquet(spark, _wins_path(state_dir))
+        pre_files = hadoop_fs.count_parquet(
+            spark, sc.table_path(state_dir, "wins")
+        )
         post_files = compact_substring_state(spark, state_dir)
         post_rows = spark.table(table).count()
         n_docs = docs.count()
@@ -2249,10 +2265,12 @@ def neardup_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes it via the shared shingle CTE), sizes = docs — and
     compaction preserves every row (all counts are taken AFTER
     `compact_neardup_state`, so a row lost or duplicated in the
-    fold-to-one-generation rewrite flips the driver hash)."""
+    compaction rewrite flips the driver hash)."""
+    from ai_powered_data_pipeline_assistant_spark.streaming import (
+        state_compaction as sc,
+    )
     from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
-        _state_generations,
-        _state_tables,
+        STATE_SPECS,
         compact_neardup_state,
         drop_state,
         process_neardup_batch,
@@ -2272,11 +2290,13 @@ def neardup_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state_dir,
                 f"{tmp}/pairs",
             )
-        tables = _state_tables(state_dir)
+        tables = sc.state_tables(state_dir, STATE_SPECS)
         pre = {k: spark.table(n).count() for k, n in tables.items()}
         compact_neardup_state(spark, state_dir)
         post = {k: spark.table(n).count() for k, n in tables.items()}
-        generations = len(_state_generations(spark, state_dir, "bands"))
+        # copies of the bands table holding data after compaction (the
+        # live dir plus any swap asides) — exactly one
+        generations = len(sc.state_copies(spark, state_dir, "bands"))
         n_docs = docs.count()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -172,8 +172,10 @@ EXECUTES_AT_BUILD: frozenset[str] = frozenset(
 # crosssource_dup_matrix, neardup_degree_stats, neardup_similarity_
 # histogram, item_recommendations, centroid_label_accuracy, bpe_pair_
 # counts and chunk_documents. Every slot carries an oracle AND is
-# driver-representable — both halves enforced on every pytest by
-# tests/test_driver_sim_hardening.py. Rows-only entries are NEVER
+# driver-representable. Oracle presence is enforced on every pytest by
+# tests/test_driver_sim_hardening.py; representability by that file's
+# full-tier test (SPARK_GRAFT_FULL_TESTS=1) and by
+# `scripts/driver_sim.py --window`. Rows-only entries are NEVER
 # windowed — their currency is their scalarized audit twins.
 _DRIVER_WINDOW: tuple[str, ...] = (
     # -- restructured this round --

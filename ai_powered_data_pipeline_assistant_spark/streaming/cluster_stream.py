@@ -61,9 +61,6 @@ the next compaction.
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -72,69 +69,27 @@ from ai_powered_data_pipeline_assistant_spark.execution import (
     materialize,
     materialize_barrier,
 )
+from ai_powered_data_pipeline_assistant_spark.streaming import (
+    state_compaction as sc,
+)
 
-CLUSTER_STATE_BUCKETS = 4
-_ROOTS_SCHEMA = "doc_id long, root long, batch_id long"
+STATE_SPECS: sc.StateSpecs = {
+    "roots": ("cc_roots", "doc_id long, root long", ["doc_id"])
+}
 MAX_FLATTEN_ROUNDS = 30
-
-
-def _roots_table(state_dir: str) -> str:
-    if ":" in state_dir.split("/", 1)[0]:
-        key = state_dir.rstrip("/")
-    else:
-        key = os.path.abspath(state_dir)
-    return f"cc_roots_{hashlib.md5(key.encode()).hexdigest()[:12]}"
-
-
-def _roots_path(state_dir: str) -> str:
-    return f"{state_dir.rstrip('/')}/roots"
 
 
 def _redirects_path(state_dir: str) -> str:
     return f"{state_dir.rstrip('/')}/redirects"
 
 
-def _create_state(spark: SparkSession, state_dir: str, table: str) -> None:
-    """Create the roots table with its bucket layout, or re-register
-    surviving files in a fresh session (the substring-stream pattern).
-    Refuses to bootstrap EMPTY state while remnants of a crashed
-    compaction swap hold the only intact copy — silently forgetting the
-    accumulated assignment would relabel every historical component
-    (the substring module's swap-aside remnant guard)."""
-    if spark.catalog.tableExists(table):
-        return
-    from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
-        guard_swap_remnants,
-    )
-
-    live_has_data = guard_swap_remnants(
-        spark, state_dir, "roots", "cluster stream"
-    )
-    path = _roots_path(state_dir)
-    if live_has_data:
-        spark.sql(
-            f"CREATE TABLE {table} (doc_id long, root long, batch_id long) "
-            f"USING PARQUET PARTITIONED BY (batch_id) "
-            f"CLUSTERED BY (doc_id) SORTED BY (doc_id) "
-            f"INTO {CLUSTER_STATE_BUCKETS} BUCKETS "
-            f"LOCATION '{path}'"
-        )
-        spark.sql(f"ALTER TABLE {table} RECOVER PARTITIONS")
-    else:
-        (
-            spark.createDataFrame([], _ROOTS_SCHEMA)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .bucketBy(CLUSTER_STATE_BUCKETS, "doc_id")
-            .sortBy("doc_id")
-            .option("path", path)
-            .format("parquet")
-            .saveAsTable(table)
-        )
+def _create_state(spark: SparkSession, state_dir: str) -> str:
+    tables = sc.create_state(spark, state_dir, STATE_SPECS, "cluster stream")
+    return tables["roots"]
 
 
 def drop_state(spark: SparkSession, state_dir: str) -> None:
-    spark.sql(f"DROP TABLE IF EXISTS {_roots_table(state_dir)}")
+    sc.drop_state(spark, state_dir, STATE_SPECS)
 
 
 def _flat_redirects(redirects: DataFrame) -> DataFrame:
@@ -176,7 +131,7 @@ def _flat_redirects(redirects: DataFrame) -> DataFrame:
     )
 
 
-def _read_redirects(spark: SparkSession, state_dir: str) -> DataFrame:
+def read_redirects(spark: SparkSession, state_dir: str) -> DataFrame:
     path = _redirects_path(state_dir)
     if hadoop_fs.has_parquet(spark, path):
         return spark.read.parquet(path)
@@ -194,21 +149,16 @@ def process_cluster_batch(
     from ai_powered_data_pipeline_assistant_spark.operators.neardup_cluster import (
         connected_components,
     )
-    from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
-        _insert_dynamic,
-    )
 
     spark = pairs.sparkSession
-    table = _roots_table(state_dir)
-    if not spark.catalog.tableExists(table):
-        _create_state(spark, state_dir, table)
+    table = _create_state(spark, state_dir)
 
     pairs = materialize(pairs.select("a_id", "b_id"))
     # strictly PRE-batch state (replay rule: a replayed batch must not
     # read its own partial writes)
     pre = F.col("batch_id") < batch_id
     roots_s = spark.table(table).filter(pre)
-    flat = _flat_redirects(_read_redirects(spark, state_dir).filter(pre))
+    flat = _flat_redirects(read_redirects(spark, state_dir).filter(pre))
 
     ends = pairs.select(F.col("a_id").alias("doc_id")).unionByName(
         pairs.select(F.col("b_id").alias("doc_id"))
@@ -281,11 +231,8 @@ def process_cluster_batch(
     # exactly-once appends: dynamic overwrite of the batch's own
     # partitions (bucketed insertInto for roots, plain parquet for the
     # merge log)
-    _insert_dynamic(
-        new_roots.select("doc_id", "root", "batch_id"),
-        table,
-        bucket_cols=["doc_id"],
-        n_buckets=CLUSTER_STATE_BUCKETS,
+    sc.insert_dynamic(
+        spark, [(new_roots.select("doc_id", "root", "batch_id"), table)]
     )
     (
         # rebalance: one advisory-sized file per batch partition instead
@@ -316,10 +263,8 @@ def resolved_roots(spark: SparkSession, state_dir: str) -> DataFrame:
     transactional views should snapshot between batches or filter both
     tables to ``batch_id <= last_completed_batch`` — the same
     strictly-pre-batch rule `process_cluster_batch` itself applies."""
-    table = _roots_table(state_dir)
-    if not spark.catalog.tableExists(table):
-        _create_state(spark, state_dir, table)
-    flat = _flat_redirects(_read_redirects(spark, state_dir))
+    table = _create_state(spark, state_dir)
+    flat = _flat_redirects(read_redirects(spark, state_dir))
     return (
         spark.table(table)
         .select("doc_id", F.col("root").alias("root0"))
@@ -342,8 +287,8 @@ def compact_cluster_state(spark: SparkSession, state_dir: str) -> dict[str, int]
     redirect log stays at RECENT merge events instead of all merge events
     ever.
 
-    Mechanics — the shared `state_compaction` fold-all-but-newest core
-    plus this module's two-table twist:
+    Mechanics — the shared `state_compaction` lifecycle with this
+    module's fold hook:
 
     1. ``max_bid`` is the global newest batch across roots AND redirects
        (the crash window sits between a batch's roots write and its
@@ -356,9 +301,7 @@ def compact_cluster_state(spark: SparkSession, state_dir: str) -> dict[str, int]
        dynamic-overwrites its own partition, and its pre-batch reads see
        exactly the same resolved state the original run computed, so the
        replay reproduces identical rows (the strictly-pre-batch rule).
-    3. The staged copy swaps in via `hadoop_fs.swap_dirs` (write-new-
-       then-swap; `_create_state`'s remnant guard covers a crash between
-       the renames), THEN the absorbed redirect partitions
+    3. After the roots swap, the absorbed redirect partitions
        (``batch_id < max_bid``) are deleted. A crash between the swap and
        the deletes leaves absorbed redirect rows behind — harmless: their
        old_roots no longer appear as any roots row's label (the flat map
@@ -371,74 +314,56 @@ def compact_cluster_state(spark: SparkSession, state_dir: str) -> dict[str, int]
     newest batch consistent. Returns row/file accounting:
     ``{"roots_files": …, "redirect_rows": …, "redirect_partitions": …}``.
     """
-    table = _roots_table(state_dir)
-    _create_state(spark, state_dir, table)
-    from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
-        HISTORY_BATCH_ID,
-        newest_batch_id,
-        write_staged_bucketed,
-    )
+    redirects = read_redirects(spark, state_dir)
+    folded_at: list[int] = []  # the max_bid the fold ran with, if any
 
-    live = _roots_path(state_dir)
-    staged = f"{live}_staged"
-    hadoop_fs.delete_recursive(spark, staged)  # leftovers of a dead run
-    tmp_name = f"{table}_compact"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-    redirects = _read_redirects(spark, state_dir)
-    max_bid_roots = newest_batch_id(spark, [table])
-    max_bid_red = redirects.agg(F.max("batch_id")).first()[0]
-    cands = [b for b in (max_bid_roots, max_bid_red) if b is not None]
-    if not cands:
-        return {
-            "roots_files": hadoop_fs.count_parquet(spark, live),
-            "redirect_rows": 0,
-            "redirect_partitions": 0,
-        }
-    max_bid = max(cands)
-    flat_hist = _flat_redirects(redirects.filter(F.col("batch_id") < max_bid))
-    hist = (
-        spark.table(table)
-        .filter(F.col("batch_id") != max_bid)
-        .join(
-            F.broadcast(
-                flat_hist.select(F.col("old_root").alias("root"), "final_root")
-            ),
-            "root",
-            "left",
+    def fold(roots: DataFrame, max_bid: int) -> DataFrame:
+        folded_at.append(max_bid)
+        flat_hist = _flat_redirects(
+            redirects.filter(F.col("batch_id") < max_bid)
         )
-        .select(
-            "doc_id",
-            F.coalesce("final_root", "root").alias("root"),
-            F.lit(HISTORY_BATCH_ID).cast("long").alias("batch_id"),
+        hist = (
+            roots.filter(F.col("batch_id") != max_bid)
+            .join(
+                F.broadcast(
+                    flat_hist.select(
+                        F.col("old_root").alias("root"), "final_root"
+                    )
+                ),
+                "root",
+                "left",
+            )
+            .select(
+                "doc_id",
+                F.coalesce("final_root", "root").alias("root"),
+                F.lit(sc.HISTORY_BATCH_ID).cast("long").alias("batch_id"),
+            )
         )
+        newest = roots.filter(F.col("batch_id") == max_bid).select(
+            "doc_id", "root", "batch_id"
+        )
+        return (
+            hist.unionByName(newest)
+            .groupBy("doc_id")
+            .agg(F.min(F.struct("batch_id", "root")).alias("s"))
+            .select("doc_id", F.col("s.root").alias("root"),
+                    F.col("s.batch_id").alias("batch_id"))
+        )
+
+    files = sc.compact_bucketed_state(
+        spark, state_dir, STATE_SPECS, "cluster stream", fold=fold,
+        also_newest=[redirects],
     )
-    newest = spark.table(table).filter(F.col("batch_id") == max_bid).select(
-        "doc_id", "root", "batch_id"
-    )
-    folded = (
-        hist.unionByName(newest)
-        .groupBy("doc_id")
-        .agg(F.min(F.struct("batch_id", "root")).alias("s"))
-        .select("doc_id", F.col("s.root").alias("root"),
-                F.col("s.batch_id").alias("batch_id"))
-    )
-    write_staged_bucketed(
-        folded, ["doc_id"], CLUSTER_STATE_BUCKETS, tmp_name, staged
-    )
-    spark.sql(f"DROP TABLE {tmp_name}")
-    spark.sql(f"DROP TABLE {table}")
-    hadoop_fs.swap_dirs(spark, live, staged)
-    _create_state(spark, state_dir, table)
     # absorbed redirect partitions go last (crash here is harmless; see
     # docstring point 3)
     red_path = _redirects_path(state_dir)
-    for d in hadoop_fs.list_child_dirs(spark, red_path):
-        if d.startswith("batch_id=") and d != f"batch_id={max_bid}":
-            hadoop_fs.delete_recursive(spark, f"{red_path}/{d}")
-    remaining = _read_redirects(spark, state_dir)
+    if folded_at:
+        for d in hadoop_fs.list_child_dirs(spark, red_path):
+            if d.startswith("batch_id=") and d != f"batch_id={folded_at[0]}":
+                hadoop_fs.delete_recursive(spark, f"{red_path}/{d}")
     return {
-        "roots_files": hadoop_fs.count_parquet(spark, live),
-        "redirect_rows": int(remaining.count()),
+        "roots_files": files["roots"],
+        "redirect_rows": int(read_redirects(spark, state_dir).count()),
         "redirect_partitions": len(
             [
                 d

@@ -47,45 +47,34 @@ shared chunk-parity hash SQL.
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_powered_data_pipeline_assistant_spark.execution import materialize
+from ai_powered_data_pipeline_assistant_spark.streaming import (
+    state_compaction as sc,
+)
 
-MEDIA_STATE_BUCKETS = 4
 CURATED_SCHEMA = "media_id long, modality string"
 EXACT_DROPPED_SCHEMA = "media_id long, modality string, keeper_id long"
 
-# (schema, bucket columns) per pipeline-local state table: mdigest is the
-# exact tier's content registry (one row per distinct (modality, digest)
-# ever seen — bounded by distinct contents, not arrivals), msizes the
-# keep-best view's per-survivor byte sizes (bucketed on media_id so the
-# family join reads it in place).
-_STATE_SPECS: dict[str, tuple[str, list[str]]] = {
+# (table-name prefix, data columns, bucket columns) per pipeline-local
+# state table: mdigest is the exact tier's content registry (one row per
+# distinct (modality, digest) ever seen — bounded by distinct contents,
+# not arrivals), msizes the keep-best view's per-survivor byte sizes
+# (bucketed on media_id so the family join reads it in place).
+STATE_SPECS: sc.StateSpecs = {
     "mdigest": (
-        "digest string, modality string, keeper_id long, batch_id long",
+        "media_digests",
+        "digest string, modality string, keeper_id long",
         ["digest"],
     ),
     "msizes": (
-        "media_id long, modality string, bytes long, batch_id long",
+        "media_sizes",
+        "media_id long, modality string, bytes long",
         ["media_id"],
     ),
 }
-
-
-def _state_tables(state_dir: str) -> dict[str, str]:
-    if ":" in state_dir.split("/", 1)[0]:
-        key = state_dir.rstrip("/")
-    else:
-        key = os.path.abspath(state_dir)
-    tag = hashlib.md5(key.encode()).hexdigest()[:12]
-    return {
-        "mdigest": f"media_digests_{tag}",
-        "msizes": f"media_sizes_{tag}",
-    }
 
 
 def _phash_dir(state_dir: str) -> str:
@@ -96,21 +85,8 @@ def _cluster_dir(state_dir: str) -> str:
     return f"{state_dir.rstrip('/')}/cluster"
 
 
-def _create_state(
-    spark: SparkSession, state_dir: str, tables: dict[str, str]
-) -> None:
-    """Create the two pipeline-local state tables with their bucket
-    layouts, or re-register surviving files in a fresh session — the
-    shared `state_compaction.create_bucketed_state` lifecycle (remnant
-    guard, per-table idempotency)."""
-    from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
-        create_bucketed_state,
-    )
-
-    create_bucketed_state(
-        spark, state_dir, _STATE_SPECS, MEDIA_STATE_BUCKETS, tables,
-        "media pipeline",
-    )
+def _create_state(spark: SparkSession, state_dir: str) -> dict[str, str]:
+    return sc.create_state(spark, state_dir, STATE_SPECS, "media pipeline")
 
 
 def drop_state(spark: SparkSession, state_dir: str) -> None:
@@ -121,8 +97,7 @@ def drop_state(spark: SparkSession, state_dir: str) -> None:
         phash_stream,
     )
 
-    for name in _state_tables(state_dir).values():
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    sc.drop_state(spark, state_dir, STATE_SPECS)
     phash_stream.drop_state(spark, _phash_dir(state_dir))
     cluster_stream.drop_state(spark, _cluster_dir(state_dir))
 
@@ -152,18 +127,13 @@ def process_media_batch(
     from ai_powered_data_pipeline_assistant_spark.streaming.jobs import (
         idempotent_append,
     )
-    from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
-        _insert_dynamic_many,
-    )
     from ai_powered_data_pipeline_assistant_spark.streaming.phash_stream import (
         DECISIONS_SCHEMA,
         process_phash_batch,
     )
 
     spark = batch_df.sparkSession
-    tables = _state_tables(state_dir)
-    if not all(spark.catalog.tableExists(t) for t in tables.values()):
-        _create_state(spark, state_dir, tables)
+    tables = _create_state(spark, state_dir)
 
     media = batch_df.select("media_id", "modality", "payload")
     # digest ONCE per arriving blob (32-byte digests shuffle; payload
@@ -241,10 +211,10 @@ def process_media_batch(
     # overwrites of disjoint output dirs; the state appends consume only
     # the already-materialized hashed/groups frames. Overlapped from a
     # driver pool (round 12, guide §2.6) so the sinks' commit latency
-    # hides under the clusterer's pointer-doubling jobs; the reentrant
-    # `_dynamic_overwrite_mode` guard makes the concurrent session-conf
-    # toggles safe. Failures propagate before the checkpoint commit,
-    # exactly as sequentially.
+    # hides under the clusterer's pointer-doubling jobs; every state table
+    # carries dynamic partition overwrite in its own options, so the
+    # concurrent appends share no session conf. Failures propagate before
+    # the checkpoint commit, exactly as sequentially.
     from ai_powered_data_pipeline_assistant_spark.execution import (
         run_concurrently,
     )
@@ -274,7 +244,7 @@ def process_media_batch(
         lambda: idempotent_append(
             dropped_exact, batch_id, f"{out_dir}/exact_dropped"
         ),
-        lambda: _insert_dynamic_many(
+        lambda: sc.insert_dynamic(
             hashed.sparkSession,
             [
                 (
@@ -285,8 +255,6 @@ def process_media_batch(
                         bid.alias("batch_id"),
                     ),
                     tables["mdigest"],
-                    _STATE_SPECS["mdigest"][1],
-                    MEDIA_STATE_BUCKETS,
                 ),
                 (
                     hashed.join(
@@ -295,8 +263,6 @@ def process_media_batch(
                         "media_id", "modality", "bytes", bid.alias("batch_id")
                     ),
                     tables["msizes"],
-                    _STATE_SPECS["msizes"][1],
-                    MEDIA_STATE_BUCKETS,
                 ),
             ],
         ),
@@ -350,8 +316,7 @@ def media_keep_best_state(spark: SparkSession, state_dir: str) -> DataFrame:
         resolved_roots,
     )
 
-    tables = _state_tables(state_dir)
-    _create_state(spark, state_dir, tables)
+    tables = _create_state(spark, state_dir)
     fam = resolved_roots(spark, _cluster_dir(state_dir)).join(
         spark.table(tables["msizes"]).select(
             F.col("media_id").alias("doc_id"), "modality", "bytes"
@@ -377,8 +342,8 @@ def media_keep_best_state(spark: SparkSession, state_dir: str) -> DataFrame:
 def compact_media_state(spark: SparkSession, state_dir: str) -> dict[str, int]:
     """Compact ALL four state surfaces the pipeline maintains — the two
     pipeline-local tables (mdigest/msizes: per-batch file sets folded
-    into ``batch_id = -1`` via the shared fold-all-but-newest core, the
-    `compact_phash_state` mechanics verbatim), the delegated phash state,
+    into ``batch_id = -1`` via the shared `state_compaction` lifecycle),
+    the delegated phash state,
     and the cluster stream's redirect log. Safe on the pipeline's
     ``batch_id % N`` cadence: the newest batch partition is never folded
     anywhere, so the one legally replayable batch keeps its partitions.
@@ -389,14 +354,9 @@ def compact_media_state(spark: SparkSession, state_dir: str) -> dict[str, int]:
     from ai_powered_data_pipeline_assistant_spark.streaming.phash_stream import (
         compact_phash_state,
     )
-    from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
-        compact_bucketed_state,
-    )
 
-    tables = _state_tables(state_dir)
-    out = compact_bucketed_state(
-        spark, state_dir, _STATE_SPECS, MEDIA_STATE_BUCKETS, tables,
-        lambda: _create_state(spark, state_dir, tables),
+    out = sc.compact_bucketed_state(
+        spark, state_dir, STATE_SPECS, "media pipeline"
     )
     phash_files = compact_phash_state(spark, _phash_dir(state_dir))
     out.update({f"phash_{k}": v for k, v in phash_files.items()})

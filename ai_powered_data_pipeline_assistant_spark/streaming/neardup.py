@@ -82,26 +82,19 @@ perceptual twin `streaming/phash_stream.py`.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ai_powered_data_pipeline_assistant_spark import hadoop_fs
 from ai_powered_data_pipeline_assistant_spark.execution import materialize
+from ai_powered_data_pipeline_assistant_spark.streaming import (
+    state_compaction as sc,
+)
 
 PAIRS_SCHEMA = "later_id long, earlier_id long, jaccard double"
 DECISIONS_SCHEMA = (
     "doc_id long, is_dup boolean, best_jaccard double, best_partner long"
 )
 
-# Local-test bucket count. At 100 TB size buckets so one bucket's bands ≈
-# 128 MB–1 GB (≈ corpus_rows × N_BANDS × 24 B / target); the bucket count
-# is fixed at table creation, so provision for the corpus you intend to
-# accumulate (TUNING.md "streaming near-dup state").
-NEARDUP_STATE_BUCKETS = 4
 # Verification fetches candidate partners' postings by a literal
 # doc_id IN (...) for bucket/row-group pruning; above this many distinct
 # partner ids the literal stops being driver-friendly (and the driver
@@ -114,297 +107,23 @@ NEARDUP_STATE_BUCKETS = 4
 NEARDUP_ISIN_CAP = 100_000
 
 
-def _state_tables(state_dir: str) -> dict[str, str]:
-    """Catalog table names for one stream instance, keyed by the state
-    directory (unique per stream; stable across restarts of the same
-    stream). Scheme-qualified dirs (s3a://…, file:/…) are already
-    absolute and must NOT go through os.path.abspath — it would prefix
-    the CWD, so a stream restarted from a different working directory
-    would compute different table names and orphan its state."""
-    if ":" in state_dir.split("/", 1)[0]:  # scheme-qualified → absolute
-        key = state_dir.rstrip("/")
-    else:
-        key = os.path.abspath(state_dir)
-    tag = hashlib.md5(key.encode()).hexdigest()[:12]
-    return {
-        "bands": f"neardup_bands_{tag}",
-        "postings": f"neardup_postings_{tag}",
-        "sizes": f"neardup_sizes_{tag}",
-    }
-
-
-# (schema, bucket columns) per state table — bucket layout is the contract
-# the band join and the verification point reads depend on.
-_STATE_SPECS: dict[str, tuple[str, list[str]]] = {
-    "bands": (
-        "doc_id long, band int, band_key string, batch_id long",
-        ["band", "band_key"],
-    ),
-    "postings": ("doc_id long, h long, batch_id long", ["doc_id"]),
-    "sizes": ("doc_id long, sz long, batch_id long", ["doc_id"]),
+# (table-name prefix, data columns, bucket columns) per state table —
+# the bucket layout is the contract the band join and the verification
+# point reads depend on (lifecycle: `streaming/state_compaction`).
+STATE_SPECS: sc.StateSpecs = {
+    "bands": ("neardup_bands", "doc_id long, band int, band_key string",
+              ["band", "band_key"]),
+    "postings": ("neardup_postings", "doc_id long, h long", ["doc_id"]),
+    "sizes": ("neardup_sizes", "doc_id long, sz long", ["doc_id"]),
 }
 
 
-def _write_bucketed(
-    df: DataFrame, key: str, name: str, path: str,
-    n_buckets: int = NEARDUP_STATE_BUCKETS,
-) -> None:
-    """(Re)create one state table at ``path`` with its bucket layout."""
-    bucket_cols = _STATE_SPECS[key][1]
-    (
-        df.write.mode("overwrite")
-        .partitionBy("batch_id")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .option("path", path)
-        .format("parquet")
-        .saveAsTable(name)
-    )
-
-
-def _create_state(
-    spark: SparkSession, state_dir: str, tables: dict[str, str]
-) -> None:
-    """Create the three state tables with their bucket layouts — or, when
-    the catalog entry is gone but the state FILES survive (a stream
-    restarted in a fresh session: the default catalog is in-memory),
-    RE-REGISTER the existing files instead of overwriting them with empty
-    tables. Idempotent PER TABLE: a crash between the three creations
-    leaves a partial catalog, and the replayed batch must create exactly
-    the missing ones (the handler gates on all three existing)."""
-    for key, (schema, bucket_cols) in _STATE_SPECS.items():
-        if spark.catalog.tableExists(tables[key]):
-            continue
-        path, n_buckets = _state_layout(spark, state_dir, key)
-        if hadoop_fs.has_parquet(spark, path):
-            cols = ", ".join(bucket_cols)
-            data_cols = ", ".join(
-                c.strip() for c in schema.split(",") if "batch_id" not in c
-            )
-            # bucket count comes from the generation dir name, NOT the
-            # module constant: registering re-bucketed files under the
-            # wrong count would silently mis-prune the bucketed joins
-            spark.sql(
-                f"CREATE TABLE {tables[key]} ({data_cols}, batch_id long) "
-                f"USING PARQUET PARTITIONED BY (batch_id) "
-                f"CLUSTERED BY ({cols}) SORTED BY ({cols}) "
-                f"INTO {n_buckets} BUCKETS "
-                f"LOCATION '{path}'"
-            )
-            spark.sql(f"ALTER TABLE {tables[key]} RECOVER PARTITIONS")
-        else:
-            _write_bucketed(
-                spark.createDataFrame([], schema), key, tables[key], path,
-                n_buckets,
-            )
-
-
-def _join(base: str, name: str) -> str:
-    """URI-safe path join (``state_dir`` may be s3a://…/file:/… — os.path
-    semantics are fine for the suffix but keep it scheme-agnostic)."""
-    return f"{base.rstrip('/')}/{name}"
-
-
-_GEN_RE_TMPL = r"^{key}_g(\d+)(?:_b(\d+))?$"
-
-
-def _state_generations(
-    spark: SparkSession, state_dir: str, key: str, committed_only: bool = True
-) -> list[tuple[int, int, str]]:
-    """Compaction generations for one state table, sorted ascending:
-    ``(gen, n_buckets, dirname)``. Generation dirs are ``{key}_g{n}``
-    (created at NEARDUP_STATE_BUCKETS) or ``{key}_g{n}_b{m}`` (re-bucketed
-    to m by `compact_neardup_state(n_buckets=m)`) — the bucket count is
-    ENCODED IN THE DIR NAME so a fresh-session re-registration can never
-    register re-bucketed files under the wrong count (which would
-    silently break the Exchange-free join and the doc_id point reads).
-
-    With ``committed_only`` (the read path) a generation counts only once
-    its ``_SUCCESS`` marker exists: a compaction that died mid-write
-    leaves a partial dir that must NOT shadow the intact previous
-    generation. ``committed_only=False`` (the write path's generation
-    NUMBERING) also sees partial dirs, so a compaction retry allocates a
-    fresh number instead of writing into the crash's leftovers
-    (round-9 review)."""
-    import re
-
-    pat = re.compile(_GEN_RE_TMPL.format(key=re.escape(key)))
-    out = []
-    for d in hadoop_fs.list_child_dirs(spark, state_dir):
-        m = pat.match(d)
-        if not m:
-            continue
-        if committed_only and not hadoop_fs.exists(
-            spark, _join(_join(state_dir, d), "_SUCCESS")
-        ):
-            continue
-        out.append(
-            (
-                int(m.group(1)),
-                int(m.group(2)) if m.group(2) else NEARDUP_STATE_BUCKETS,
-                d,
-            )
-        )
-    return sorted(out)
-
-
-def _state_layout(
-    spark: SparkSession, state_dir: str, key: str
-) -> tuple[str, int]:
-    """Current (physical directory, bucket count) for one state table: the
-    newest compaction generation if any, else the base ``{key}`` dir at
-    the default bucket count — so a fresh-session re-registration after a
-    compaction finds the compacted files (and their layout), not the
-    removed original path. Listing goes through the Hadoop FileSystem API
-    so the lookup works when the state dir is an object store."""
-    gens = _state_generations(spark, state_dir, key)
-    if gens:
-        _gen, n_buckets, dirname = gens[-1]
-        return _join(state_dir, dirname), n_buckets
-    # Generation dirs exist by NAME but none is committed: either every
-    # compaction crashed (the base dir below still holds the data) or the
-    # cluster disabled _SUCCESS markers
-    # (mapreduce.fileoutputcommitter.marksuccessfuljobs=false), in which
-    # case falling back to the base dir — which compaction DELETED —
-    # would silently re-create EMPTY state and forget the whole corpus.
-    # Fail loudly instead of admitting every future near-dup.
-    all_gens = _state_generations(spark, state_dir, key, committed_only=False)
-    base = _join(state_dir, key)
-    if all_gens and not hadoop_fs.has_parquet(spark, base):
-        raise RuntimeError(
-            f"near-dup state for {key!r} has generation dirs "
-            f"({[d for _g, _b, d in all_gens]}) but none carries a "
-            f"_SUCCESS marker and the base dir {base} holds no data. "
-            "If this cluster disables committer success markers "
-            "(mapreduce.fileoutputcommitter.marksuccessfuljobs=false), "
-            "re-enable them for the state dir or touch _SUCCESS in the "
-            "newest intact generation; refusing to silently register "
-            "empty state."
-        )
-    return base, NEARDUP_STATE_BUCKETS
-
-
 def drop_state(spark: SparkSession, state_dir: str) -> None:
-    """Drop the stream's catalog entries (the external files live under
-    ``state_dir`` and follow its lifecycle)."""
-    for name in _state_tables(state_dir).values():
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    sc.drop_state(spark, state_dir, STATE_SPECS)
 
 
-def _insert_dynamic(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str] | None = None,
-    n_buckets: int | None = None,
-) -> None:
-    """Dynamic-partition-overwrite insert: the batch's own ``batch_id``
-    partition is REPLACED, other partitions untouched — replays after a
-    crash between state commits and the checkpoint commit are idempotent.
-    The mode must be set on the session (the per-writer option is ignored
-    by insertInto); saved/restored around the write.
-
-    ``bucket_cols``/``n_buckets`` (round 12, guide §6): align write tasks
-    to the target table's bucket layout — the same pre-write repartition
-    `state_compaction.write_staged_bucketed` already does. Without it a
-    bucketed insertInto writes one file per (task, bucket) it holds: a
-    32-partition batch frame into a 4-bucket table landed up to 128 tiny
-    files per table per batch (commit/fsync-bound locally, a small-files
-    explosion for every later state read at scale). Repartitioned on the
-    bucket expression, tasks hold whole buckets and the append lands
-    ~n_buckets files. HashPartitioning is the same function bucketing
-    uses, so this can never change which bucket a row lands in."""
-    _insert_dynamic_many(
-        df.sparkSession, [(df, table, bucket_cols, n_buckets)]
-    )
-
-
-# Reentrant, thread-safe guard for the session-level dynamic-overwrite
-# toggle (round 12): once batch handlers overlap independent write jobs
-# from driver threads (guide §2.6), two naive save/set/restore blocks can
-# interleave so that the first exit restores "static" WHILE the second
-# thread's insertInto is still planning — silently turning its dynamic
-# per-partition overwrite into a table-truncating static one. Depth-count
-# per session: the first entrant saves+sets, only the last exit restores.
-_POM_KEY = "spark.sql.sources.partitionOverwriteMode"
-_POM_LOCK = threading.Lock()
-_POM_STATE: dict = {}  # JVM-session key -> [depth, saved_value]
-
-
-def _pom_session_key(spark: SparkSession):
-    """Identity of the UNDERLYING JVM session, not the Python wrapper
-    (round 13, ADVICE r12): the conf the guard toggles lives JVM-side, and
-    two wrapper objects over the same JVM session (a stored handle vs
-    ``getActiveSession`` / ``df.sparkSession``) must share one depth count
-    — keyed on ``id(wrapper)`` each thought it was the first entrant and
-    the earlier exit restored "static" under the later thread's insert."""
-    return spark._jsparkSession.hashCode()
-
-
-class _dynamic_overwrite_mode:
-    def __init__(self, spark: SparkSession) -> None:
-        self._spark = spark
-        self._key = _pom_session_key(spark)
-
-    def __enter__(self):
-        with _POM_LOCK:
-            st = _POM_STATE.get(self._key)
-            if st is None:
-                st = [0, self._spark.conf.get(_POM_KEY)]
-                _POM_STATE[self._key] = st
-                self._spark.conf.set(_POM_KEY, "dynamic")
-            st[0] += 1
-        return self
-
-    def __exit__(self, *exc):
-        with _POM_LOCK:
-            st = _POM_STATE[self._key]
-            st[0] -= 1
-            if st[0] == 0:
-                del _POM_STATE[self._key]
-                self._spark.conf.set(_POM_KEY, st[1])
-        return False
-
-
-def _insert_dynamic_many(
-    spark: SparkSession,
-    inserts: list[tuple[DataFrame, str, list[str] | None, int | None]],
-) -> None:
-    """Run several independent dynamic-overwrite inserts CONCURRENTLY from
-    a small driver thread pool (round 12, guide §2.6 "overlap independent
-    jobs"): the per-table state appends of one batch touch disjoint
-    tables, are each idempotent under replay, and their commit ORDER was
-    never load-bearing (the crash-window argument in the module docstring
-    holds for any partial subset) — so the later writes' tasks back-fill
-    executors idled by the earlier writes' commit latency. The session's
-    partitionOverwriteMode is toggled ONCE around the pool (per-write
-    toggling from concurrent threads would race on the shared session
-    conf); any write failure propagates before the caller can commit its
-    checkpoint, exactly as with sequential writes."""
-    prepped = []
-    for df, table, bucket_cols, n_buckets in inserts:
-        if bucket_cols:
-            df = df.repartition(
-                n_buckets or NEARDUP_STATE_BUCKETS, *bucket_cols
-            )
-        prepped.append((df, table))
-    with _dynamic_overwrite_mode(spark):
-        if len(prepped) == 1:
-            df, table = prepped[0]
-            df.write.insertInto(table, overwrite=True)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(prepped)) as pool:
-                futures = [
-                    pool.submit(df.write.insertInto, table, True)
-                    for df, table in prepped
-                ]
-                for f in futures:
-                    f.result()
-
-
-def _ids_under_cap(ids_df: DataFrame) -> list[int] | None:
-    """The access-path selector for `_partner_pruned`: ONE bounded driver
+def ids_under_cap(ids_df: DataFrame) -> list[int] | None:
+    """The access-path selector for `partner_pruned`: ONE bounded driver
     round-trip — take(cap+1) returns every id when there are ≤ cap of
     them (use them as the IN literal for bucket pruning) and cap+1 rows
     when there are more (return None → the bucketed LEFT-SEMI path,
@@ -417,7 +136,7 @@ def _ids_under_cap(ids_df: DataFrame) -> list[int] | None:
     return None
 
 
-def _partner_pruned(
+def partner_pruned(
     state_df: DataFrame,
     partner_ids: list[int] | None,
     cand_ids: DataFrame,
@@ -463,7 +182,6 @@ def process_neardup_batch(
         minhash_sig_aggs,
     )
 
-    tables = _state_tables(state_dir)
     spark = docs.sparkSession
     docs = docs.select("doc_id", "text")
     # Shingle/sign ONCE per arriving doc; each frame feeds two
@@ -481,8 +199,7 @@ def process_neardup_batch(
     bands_b = minhash_band_frame(sigs_b).transform(materialize)
     sizes_b = sigs_b.select("doc_id", "sz")
 
-    if not all(spark.catalog.tableExists(t) for t in tables.values()):
-        _create_state(spark, state_dir, tables)
+    tables = sc.create_state(spark, state_dir, STATE_SPECS, "near-dup stream")
     # Read STRICTLY PRE-BATCH state: on a replay, this batch's own rows
     # are already in their state partitions (the crash happened after the
     # state commits), and reading them back would emit self-pairs /
@@ -514,9 +231,9 @@ def process_neardup_batch(
     # duplicate state rows accumulate; raise instead. Same bucket-pruned
     # doc_id point-read path as verification — O(batch), not O(corpus).
     def _uniqueness_gate() -> None:
-        own_lit = _ids_under_cap(own_ids)
+        own_lit = ids_under_cap(own_ids)
         rearrived = (
-            _partner_pruned(
+            partner_pruned(
                 spark.table(tables["sizes"]).filter(pre), own_lit, own_ids
             )
             .select("doc_id")
@@ -592,14 +309,14 @@ def _neardup_candidates_and_outputs(
     # batch docs (within): fetch state rows by candidate ids only
     # (bucket-pruned point reads under the cap, doc_id-bucketed semi-join
     # above it — never a per-batch full postings scan) and union the
-    # batch's own in-memory frames. `_ids_under_cap` makes the path
+    # batch's own in-memory frames. `ids_under_cap` makes the path
     # choice in one bounded driver round-trip.
     cand_ids = (
         candidates.select(F.col("b_id").alias("doc_id"))
         .distinct()
         .transform(materialize)
     )
-    partner_ids = _ids_under_cap(cand_ids)
+    partner_ids = ids_under_cap(cand_ids)
     # join the uniqueness gate BEFORE any write starts: a rejected batch
     # must stay write-free (test_neardup_stream's rearrival contract)
     gate.result()
@@ -614,7 +331,7 @@ def _neardup_candidates_and_outputs(
     # caller's checkpoint commit.
     bid = F.lit(batch_id).cast("long")
     appends = pool.submit(
-        _insert_dynamic_many,
+        sc.insert_dynamic,
         spark,
         [
             (
@@ -622,20 +339,14 @@ def _neardup_candidates_and_outputs(
                     "doc_id", "band", "band_key", bid.alias("batch_id")
                 ),
                 tables["bands"],
-                _STATE_SPECS["bands"][1],
-                None,
             ),
             (
                 postings_b.select("doc_id", "h", bid.alias("batch_id")),
                 tables["postings"],
-                _STATE_SPECS["postings"][1],
-                None,
             ),
             (
                 sizes_b.select("doc_id", "sz", bid.alias("batch_id")),
                 tables["sizes"],
-                _STATE_SPECS["sizes"][1],
-                None,
             ),
         ],
     )
@@ -650,14 +361,14 @@ def _neardup_candidates_and_outputs(
     # regression) would race the append and hit FileNotFoundException or
     # torn data. Keep state reads going through spark.table(...)
     # .filter(pre); tests/test_neardup_stream.py pins the pruned shape.
-    postings_part = _partner_pruned(
+    postings_part = partner_pruned(
         _not_own(spark.table(tables["postings"]).filter(pre)).select(
             "doc_id", "h"
         ),
         partner_ids,
         cand_ids,
     ).unionByName(postings_b)
-    sizes_part = _partner_pruned(
+    sizes_part = partner_pruned(
         _not_own(spark.table(tables["sizes"]).filter(pre)).select(
             "doc_id", "sz"
         ),
@@ -756,86 +467,15 @@ def run_neardup_stream(
 def compact_neardup_state(
     spark: SparkSession, state_dir: str, n_buckets: int | None = None
 ) -> dict[str, int]:
-    """Offline state compaction (run with the stream stopped): per-batch
-    appends leave one file set per batch per table; fold every batch
-    partition EXCEPT the newest into a single ``batch_id = -1`` partition
-    with the same bucket layout (the newest stays un-folded so a
-    crash-window replay overwrites its own partition instead of
-    duplicating folded rows — see the fold comment below) — or, with
-    ``n_buckets``, RE-BUCKET while compacting: the
-    bucket count is fixed at table creation, so a corpus that outgrows
-    its provisioning (TUNING.md sizing rule: one bucket's bands ≈
-    128 MB–1 GB) migrates here, in the same write-new-then-swap pass it
-    already pays for compaction. The new count is encoded in the
-    generation dir name (``{key}_g{n}_b{m}``) so restarts re-register the
-    correct layout, and the band join's Exchange-free property and the
-    doc_id pruning path hold at the new width. Write-new-then-swap, fully
-    distributed: the compacted copy lands in a fresh generation directory
-    (one distributed write, no driver round-trip of state rows), the
-    catalog entry is re-pointed atomically-enough for an offline
-    maintenance job (a crash between the DROP and the RENAME leaves the
-    stream's name dangling; the next ``_create_state`` re-registration
-    finds the newest generation and repairs it — pinned by
-    tests/test_neardup_stream.py's crash-window test), and the old
-    generation's files are removed last. All file-level plumbing goes
-    through the Hadoop FileSystem API so compaction works when the state
-    dir is s3a://hdfs://, not driver-local disk (VERDICT r8 #1).
-    Returns {table: parquet files after compaction}."""
-    from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
-        fold_expr,
-        newest_batch_id,
-        write_staged_bucketed,
+    """Offline state compaction (stream stopped): fold every batch
+    partition except the newest into ``batch_id = -1`` per table — or,
+    with ``n_buckets``, RE-BUCKET in the same pass. The bucket count is
+    fixed at table creation, so a corpus that outgrows its provisioning
+    (TUNING.md sizing rule: one bucket's bands ≈ 128 MB–1 GB) migrates
+    here; the band join's Exchange-free property and the doc_id pruning
+    hold at the new width. Rows are relabeled, never collapsed. Lifecycle
+    and crash windows: `streaming/state_compaction`. Returns {table:
+    parquet files after compaction}."""
+    return sc.compact_bucketed_state(
+        spark, state_dir, STATE_SPECS, "near-dup stream", n_buckets=n_buckets
     )
-
-    tables = _state_tables(state_dir)
-    out: dict[str, int] = {}
-    # Fold selection via the shared state_compaction core (VERDICT r10
-    # task #6): the newest batch partition is NEVER folded into -1 — the
-    # crash-window argument lives in that module's docstring. Global max
-    # across the three tables so a crash between the three inserts keeps
-    # the partial batch's partition wherever it landed (round-9 review;
-    # the per-batch reader additionally excludes the arriving batch's doc
-    # ids by identity).
-    max_bid = newest_batch_id(spark, list(tables.values()))
-    for key, name in tables.items():
-        old_location = (
-            spark.sql(f"DESCRIBE TABLE EXTENDED {name}")
-            .filter(F.col("col_name") == "Location")
-            .collect()[0]["data_type"]
-        )
-        committed = _state_generations(spark, state_dir, key)
-        # numbering looks at ALL generation dirs (committed or not) so a
-        # retry after a mid-write crash allocates a FRESH number instead
-        # of CTAS-ing into the crash's non-empty leftovers
-        all_gens = _state_generations(
-            spark, state_dir, key, committed_only=False
-        )
-        gen = 1 + (all_gens[-1][0] if all_gens else 0)
-        # None → keep the current width (newest COMMITTED generation's,
-        # else the creation default); an explicit count re-buckets here
-        cur_buckets = committed[-1][1] if committed else NEARDUP_STATE_BUCKETS
-        nb = n_buckets if n_buckets is not None else cur_buckets
-        new_path = _join(state_dir, f"{key}_g{gen}_b{nb}")
-        cols = [c for c in spark.table(name).columns if c != "batch_id"]
-        staged = spark.table(name).select(
-            *cols, fold_expr(max_bid).alias("batch_id")
-        )
-        tmp_name = f"{name}_compact"
-        spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        # bucketing-disabled staged write (fragmentation rationale in
-        # state_compaction's docstring, point 2)
-        write_staged_bucketed(
-            staged, _STATE_SPECS[key][1], nb, tmp_name, new_path
-        )
-        # swap: the compacted table takes the stream's name; external-table
-        # drops leave files alone, so remove the old generation explicitly
-        spark.sql(f"DROP TABLE {name}")
-        spark.sql(f"ALTER TABLE {tmp_name} RENAME TO {name}")
-        try:
-            # best-effort: a leaked old generation costs storage, not
-            # correctness (every reader resolves the newest generation)
-            hadoop_fs.delete_recursive(spark, old_location)
-        except Exception:
-            pass
-        out[key] = hadoop_fs.count_parquet(spark, new_path)
-    return out

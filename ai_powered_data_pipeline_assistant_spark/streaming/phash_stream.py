@@ -27,7 +27,7 @@ tables (the neardup state discipline):
 - ``phashes (media_id, modality, b0..b3, batch_id)`` — the 4 band values
   per blob, bucketed + sorted on media_id: hamming verification fetches
   ONLY candidate partners' hashes via the doc_id-pruned point-read path
-  (`neardup._partner_pruned` — IN-literal bucket pruning under the cap,
+  (`neardup.partner_pruned` — IN-literal bucket pruning under the cap,
   bucketed LEFT-SEMI above it), never a full state scan per batch.
 
 Banding is pigeonhole-exact at the threshold (4 bands, hamming ≤ 3 —
@@ -56,9 +56,6 @@ the band buckets.
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -68,14 +65,14 @@ from ai_powered_data_pipeline_assistant_spark.operators.multimodal import (
     PHASH_HAMMING_T,
     phash_projection,
 )
+from ai_powered_data_pipeline_assistant_spark.streaming import (
+    state_compaction as sc,
+)
 from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
-    _ids_under_cap,
-    _insert_dynamic,
-    _insert_dynamic_many,
-    _partner_pruned,
+    ids_under_cap,
+    partner_pruned,
 )
 
-PHASH_STATE_BUCKETS = 4
 PAIRS_SCHEMA = "later_id long, earlier_id long, hamming long"
 DECISIONS_SCHEMA = (
     "media_id long, modality string, is_dup boolean, "
@@ -84,60 +81,26 @@ DECISIONS_SCHEMA = (
 
 _BAND_COLS = [f"b{k}" for k in range(PHASH_BANDS)]
 
-# (schema, bucket columns) per state table — the neardup _STATE_SPECS
-# pattern: bucket layout is the contract the band join and the hash
-# point reads depend on.
-_STATE_SPECS: dict[str, tuple[str, list[str]]] = {
+# (table-name prefix, data columns, bucket columns) per state table:
+# bucket layout is the contract the band join and the hash point reads
+# depend on (lifecycle: `streaming/state_compaction`).
+STATE_SPECS: sc.StateSpecs = {
     "pbands": (
-        "media_id long, modality string, band int, band_val long, "
-        "batch_id long",
+        "phash_bands",
+        "media_id long, modality string, band int, band_val long",
         ["band", "band_val"],
     ),
     "phashes": (
+        "phash_hashes",
         "media_id long, modality string, "
-        + ", ".join(f"{c} long" for c in _BAND_COLS)
-        + ", batch_id long",
+        + ", ".join(f"{c} long" for c in _BAND_COLS),
         ["media_id"],
     ),
 }
 
 
-def _state_tables(state_dir: str) -> dict[str, str]:
-    if ":" in state_dir.split("/", 1)[0]:
-        key = state_dir.rstrip("/")
-    else:
-        key = os.path.abspath(state_dir)
-    tag = hashlib.md5(key.encode()).hexdigest()[:12]
-    return {
-        "pbands": f"phash_bands_{tag}",
-        "phashes": f"phash_hashes_{tag}",
-    }
-
-
-def _table_path(state_dir: str, key: str) -> str:
-    return f"{state_dir.rstrip('/')}/{key}"
-
-
-def _create_state(
-    spark: SparkSession, state_dir: str, tables: dict[str, str]
-) -> None:
-    """Create the two state tables with their bucket layouts, or
-    re-register surviving files in a fresh session — the shared
-    `state_compaction.create_bucketed_state` lifecycle (remnant guard,
-    per-table idempotency)."""
-    from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
-        create_bucketed_state,
-    )
-
-    create_bucketed_state(
-        spark, state_dir, _STATE_SPECS, PHASH_STATE_BUCKETS, tables,
-        "phash stream",
-    )
-
-
 def drop_state(spark: SparkSession, state_dir: str) -> None:
-    for name in _state_tables(state_dir).values():
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    sc.drop_state(spark, state_dir, STATE_SPECS)
 
 
 def process_phash_batch(
@@ -179,9 +142,7 @@ def process_phash_batch(
     ids by identity, so re-evaluating it AFTER this batch's state writes
     still yields this batch's pairs."""
     spark = media.sparkSession
-    tables = _state_tables(state_dir)
-    if not all(spark.catalog.tableExists(t) for t in tables.values()):
-        _create_state(spark, state_dir, tables)
+    tables = sc.create_state(spark, state_dir, STATE_SPECS, "phash stream")
 
     # hash ONCE per arriving blob; the frame feeds bands, verify, and
     # both state appends. EAGER: the uniqueness gate (pool thread) and
@@ -228,9 +189,9 @@ def process_phash_batch(
                 f"{sorted(int(r['media_id']) for r in within_dups)}); each "
                 "blob must arrive exactly once (module docstring)"
             )
-        own_lit = _ids_under_cap(own_ids)
+        own_lit = ids_under_cap(own_ids)
         rearrived = (
-            _partner_pruned(
+            partner_pruned(
                 hashes_state.withColumnRenamed("media_id", "doc_id"),
                 own_lit,
                 own_ids.withColumnRenamed("media_id", "doc_id"),
@@ -326,7 +287,7 @@ def _phash_candidates_and_outputs(
         .distinct()
         .transform(materialize)
     )
-    partner_ids = _ids_under_cap(cand_ids)
+    partner_ids = ids_under_cap(cand_ids)
     # join the uniqueness gate BEFORE any write starts (write-free
     # rejection), then launch the state appends on the pool thread: they
     # consume only the already-materialized batch frames, are disjoint
@@ -336,7 +297,7 @@ def _phash_candidates_and_outputs(
     gate.result()
     bid = F.lit(batch_id).cast("long")
     appends = pool.submit(
-        _insert_dynamic_many,
+        sc.insert_dynamic,
         spark,
         [
             (
@@ -348,20 +309,16 @@ def _phash_candidates_and_outputs(
                     bid.alias("batch_id"),
                 ),
                 tables["pbands"],
-                _STATE_SPECS["pbands"][1],
-                PHASH_STATE_BUCKETS,
             ),
             (
                 hashed_b.select(
                     "media_id", "modality", *_BAND_COLS, bid.alias("batch_id")
                 ),
                 tables["phashes"],
-                _STATE_SPECS["phashes"][1],
-                PHASH_STATE_BUCKETS,
             ),
         ],
     )
-    partners = _partner_pruned(
+    partners = partner_pruned(
         _not_own(hashes_state)
         .withColumnRenamed("media_id", "doc_id")
         .select("doc_id", *_BAND_COLS),
@@ -468,19 +425,10 @@ def run_phash_stream(
 
 def compact_phash_state(spark: SparkSession, state_dir: str) -> dict[str, int]:
     """Offline state compaction (stream stopped): fold every batch
-    partition except the newest into ``batch_id = -1`` per table via the
-    shared `state_compaction.compact_bucketed_state` lifecycle (fold
-    selection + bucketing-disabled staged write + in-place dir swap;
-    `_create_state`'s remnant guard covers a crash between the renames).
-    Rows are relabeled, never collapsed — each blob's band/hash rows are
-    written exactly once, at its arrival batch. Returns {table: parquet
-    files after compaction}."""
-    from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
-        compact_bucketed_state,
-    )
-
-    tables = _state_tables(state_dir)
-    return compact_bucketed_state(
-        spark, state_dir, _STATE_SPECS, PHASH_STATE_BUCKETS, tables,
-        lambda: _create_state(spark, state_dir, tables),
+    partition except the newest into ``batch_id = -1`` per table on the
+    shared `state_compaction` lifecycle. Rows are relabeled, never
+    collapsed — each blob's band/hash rows are written exactly once, at
+    its arrival batch. Returns {table: parquet files after compaction}."""
+    return sc.compact_bucketed_state(
+        spark, state_dir, STATE_SPECS, "phash stream"
     )

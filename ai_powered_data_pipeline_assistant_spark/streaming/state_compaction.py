@@ -1,10 +1,43 @@
-"""Shared fold-all-but-newest compaction core for streaming state tables
-(VERDICT r10 task #6): the crash-window reasoning that was hand-rolled in
-the substring, near-dup, and cluster compactors, extracted to one tested
-place. The three modules keep their own SWAP mechanics (in-place dir swap
-with a width marker, generation dirs, roots+redirects two-table fold) —
-those encode table-specific invariants — but the two decisions every
-compactor must get right live here:
+"""The one lifecycle every stateful streaming gate's state tables share
+(near-dup, exact-substring, cluster, perceptual-hash, media). Each gate
+declares its tables as a spec dict — ``{key: (table-name prefix, data
+columns DDL, bucket columns)}`` — and keeps only its semantic fold hook;
+naming, creation, re-registration, appends, drop and compaction live
+here.
+
+**Layout.** One catalog table per key, named
+``{prefix}_{md5(state dir)[:12]}`` (`state_tables`), external at
+``{state_dir}/{key}``, PARTITIONED BY ``batch_id`` and bucketed + sorted
+on the spec's bucket columns. The location never changes: compaction
+swaps directories in place.
+
+**Bucket width.** Stored one way: an empty marker file
+``_SPARK_GRAFT_BUCKETS_{m}`` inside the table dir (parquet readers skip
+underscore files), written at creation and by every compaction into the
+staged copy, so the swap moves data and width together. Re-registration
+reads it (markerless dirs are at the creation default `STATE_BUCKETS`)
+— registering re-bucketed files under the wrong count would silently
+break the bucketed joins and the doc_id pruning. Appends read the width
+back from the table's catalog bucket spec, never from a constant.
+
+**Appends** (`insert_dynamic`). Every state table carries
+``partitionOverwriteMode=dynamic`` in its storage options (set at create
+and at re-register), so ``insertInto(overwrite=True)`` replaces exactly
+the batch's own ``batch_id`` partition whatever the session conf says:
+a batch replayed after a crash between its state commits and its
+checkpoint commit repairs its partitions in place, and concurrent appends
+from driver threads need no shared session toggle.
+
+**Create / re-register** (`create_state`). Idempotent per table: a
+session whose in-memory catalog lost the entry re-registers the surviving
+files; a crash between the per-table creations leaves a partial catalog
+the next call completes. It refuses to bootstrap EMPTY state while a
+crashed compaction left the only intact copy beside the live dir
+(`guard_swap_remnants`) — silently forgetting the corpus would re-admit
+every historical duplicate.
+
+**Compaction** (`compact_bucketed_state`, offline, stream stopped). Two
+decisions every compactor must get right:
 
 1. **Which partitions may be folded** (`newest_batch_id` + `fold_expr`):
    every batch partition EXCEPT the newest. The one batch that can
@@ -13,10 +46,10 @@ compactor must get right live here:
    dynamic-overwrites its OWN batch_id partition — if its rows had been
    folded into the ``batch_id = -1`` history partition, the re-insert
    would duplicate them there and poison every later batch's reads.
-   For MULTI-table state the newest id is the global max ACROSS the
-   tables: a crash between the per-table inserts of one batch leaves the
-   partial batch's partition present in some tables only, and each table
-   must keep that partition un-folded wherever it landed.
+   The newest id is the global max across the gate's tables (and any
+   extra batch-partitioned log, such as cluster's redirects): a crash
+   between the per-table writes of one batch leaves the partial batch
+   present in some tables only, and each must keep it un-folded.
 
 2. **How the compacted copy is written** (`write_staged_bucketed`): a
    bucketed CTAS with ``spark.sql.sources.bucketing.enabled`` OFF for the
@@ -24,16 +57,29 @@ compactor must get right live here:
    the optimizer would elide the pre-write repartition (the scan claims
    the right hash layout) yet execute one-partition-per-FILE, so the
    compacted table would keep one file per (batch, bucket) — exactly the
-   fragmentation being compacted. With bucketed reads off, the caller's
-   explicit repartition aligns tasks to buckets → one file each.
+   fragmentation being compacted. With bucketed reads off, the explicit
+   repartition aligns tasks to buckets → one file each.
 
-Crash-window tests for all three lifecycles live with their modules
-(tests/test_substring_stream.py, test_neardup_stream.py,
-test_cluster_stream.py); this module's contract is pinned wherever those
-run, since every compactor routes through it.
+The staged copy lands at ``{dir}_staged`` and `hadoop_fs.swap_dirs`
+moves it over the live dir. Crash windows: before the swap the live dir
+is intact (the next compaction clears the staged leftovers); between the
+two renames the live dir is empty and the guard refuses to bootstrap
+over the ``.old_`` aside. Legacy ``{key}_g{n}[_b{m}]`` generation dirs
+holding parquet count as remnants too, so state compacted by the old
+generation-dir layout fails loudly instead of bootstrapping empty.
+
+All file plumbing goes through the Hadoop FileSystem API, so the state
+dir may be an object store. The lifecycle is pinned for all five gates
+by tests/test_state_lifecycle.py.
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
+import re
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,39 +87,70 @@ from pyspark.sql import functions as F
 from ai_powered_data_pipeline_assistant_spark import hadoop_fs
 
 HISTORY_BATCH_ID = -1
+# Creation width of every state table. At 100 TB size buckets so one
+# bucket holds ≈ 128 MB–1 GB; a corpus that outgrows it re-buckets in a
+# compaction pass (TUNING.md "streaming near-dup state").
+STATE_BUCKETS = 4
+_WIDTH_MARKER = "_SPARK_GRAFT_BUCKETS_"
+
+# key -> (table-name prefix, data columns DDL without batch_id, bucket columns)
+StateSpecs = dict[str, tuple[str, str, list[str]]]
+
+
+def state_tables(state_dir: str, specs: StateSpecs) -> dict[str, str]:
+    """Catalog table names for one stream instance, keyed by the state
+    directory (unique per stream; stable across restarts). Scheme-qualified
+    dirs (s3a://…, file:/…) are already absolute and must NOT go through
+    os.path.abspath — it would prefix the CWD, so a stream restarted from
+    another working directory would orphan its state."""
+    if ":" in state_dir.split("/", 1)[0]:
+        key = state_dir.rstrip("/")
+    else:
+        key = os.path.abspath(state_dir)
+    tag = hashlib.md5(key.encode()).hexdigest()[:12]
+    return {k: f"{prefix}_{tag}" for k, (prefix, _c, _b) in specs.items()}
+
+
+def table_path(state_dir: str, key: str) -> str:
+    return f"{state_dir.rstrip('/')}/{key}"
+
+
+def state_copies(spark: SparkSession, state_dir: str, key: str) -> list[str]:
+    """Child dirs of ``state_dir`` holding parquet for table ``key``: the
+    live dir, compaction swap asides (``{key}.old_*``), the staged copy
+    (``{key}_staged``) and legacy generation dirs (``{key}_g{n}[_b{m}]``)."""
+    legacy = re.compile(rf"^{re.escape(key)}_g\d+(_b\d+)?$")
+    return [
+        d
+        for d in hadoop_fs.list_child_dirs(spark, state_dir)
+        if (
+            d in (key, f"{key}_staged")
+            or d.startswith(f"{key}.old_")
+            or legacy.match(d)
+        )
+        and hadoop_fs.has_parquet(spark, table_path(state_dir, d))
+    ]
 
 
 def guard_swap_remnants(
-    spark: SparkSession, state_dir: str, table_dirname: str, what: str
+    spark: SparkSession, state_dir: str, key: str, what: str
 ) -> bool:
-    """Swap-aside remnant guard for in-place-swap state lifecycles
-    (substring wins, cluster roots): when the live table dir is EMPTY but
-    a crashed compaction swap left an intact copy next to it
-    (``<dir>.old_<uuid>`` from `hadoop_fs.swap_dirs`, or the staged
-    ``<dir>_staged``), a fresh-session re-registration must REFUSE to
-    bootstrap empty state — silently forgetting the accumulated corpus
-    would re-admit every historical duplicate / relabel every component.
-    Remnants are ranked newest-first by file mtime (uuid aside names
-    carry no ordering; restoring a stale aside a failed best-effort
-    delete left behind would silently truncate the corpus). Returns
-    whether the live dir holds data (no-op True), so callers don't pay a
-    second object-store LIST for the same question."""
-    live = f"{state_dir.rstrip('/')}/{table_dirname}"
+    """Refuse to bootstrap empty state over a crashed compaction: when the
+    live dir is EMPTY but another copy of the table holds data
+    (`state_copies`), raise and name the copies newest-first by file mtime
+    (uuid aside names carry no ordering; restoring a stale aside a failed
+    best-effort delete left behind would silently truncate the corpus).
+    Returns whether the live dir holds data, so callers don't pay a second
+    object-store LIST for the same question."""
+    live = table_path(state_dir, key)
     if hadoop_fs.has_parquet(spark, live):
         return True
-    remnants = [
-        d
-        for d in hadoop_fs.list_child_dirs(spark, state_dir)
-        if (d.startswith(f"{table_dirname}.old_") or d == f"{table_dirname}_staged")
-        and hadoop_fs.has_parquet(spark, f"{state_dir.rstrip('/')}/{d}")
-    ]
+    remnants = [d for d in state_copies(spark, state_dir, key) if d != key]
     if not remnants:
         return False
     ranked = sorted(
         remnants,
-        key=lambda d: hadoop_fs.latest_mtime(
-            spark, f"{state_dir.rstrip('/')}/{d}"
-        ),
+        key=lambda d: hadoop_fs.latest_mtime(spark, table_path(state_dir, d)),
         reverse=True,
     )
     raise RuntimeError(
@@ -85,24 +162,105 @@ def guard_swap_remnants(
     )
 
 
-def newest_batch_id(spark: SparkSession, tables: list[str]) -> int | None:
-    """Global max ``batch_id`` across the state tables — the one batch a
-    replay may legally rewrite, which therefore must NEVER be folded into
-    the history partition (module docstring, point 1). ``None`` when every
-    table is empty (nothing to compact)."""
-    max_bid: int | None = None
-    for name in tables:
-        m = spark.table(name).agg(F.max("batch_id")).first()[0]
-        if m is not None and (max_bid is None or m > max_bid):
-            max_bid = int(m)
-    return max_bid
+def _stored_width(spark: SparkSession, path: str) -> int | None:
+    for name in hadoop_fs.list_child_files(spark, path):
+        if name.startswith(_WIDTH_MARKER):
+            return int(name[len(_WIDTH_MARKER):])
+    return None
+
+
+def _bucket_spec(spark: SparkSession, table: str) -> tuple[list[str], int]:
+    """(bucket columns, bucket count) from the table's catalog entry — a
+    metadata lookup, no Spark job and no file listing."""
+    state = spark._jsparkSession.sessionState()
+    meta = state.catalog().getTableMetadata(
+        state.sqlParser().parseTableIdentifier(table)
+    )
+    spec = meta.bucketSpec().get()
+    cols = spec.bucketColumnNames()
+    return [cols.apply(i) for i in range(cols.length())], int(spec.numBuckets())
+
+
+def create_state(
+    spark: SparkSession, state_dir: str, specs: StateSpecs, what: str
+) -> dict[str, str]:
+    """Create each missing state table — or re-register its surviving
+    files, at the width its marker records — with dynamic partition
+    overwrite in its storage options. Returns the table names."""
+    tables = state_tables(state_dir, specs)
+    for key, (_prefix, columns, bucket_cols) in specs.items():
+        name = tables[key]
+        if spark.catalog.tableExists(name):
+            continue
+        live_has_data = guard_swap_remnants(spark, state_dir, key, what)
+        path = table_path(state_dir, key)
+        width = _stored_width(spark, path)
+        if width is None:
+            width = STATE_BUCKETS
+            hadoop_fs.touch(spark, f"{path}/{_WIDTH_MARKER}{width}")
+        cols = ", ".join(bucket_cols)
+        spark.sql(
+            f"CREATE TABLE {name} ({columns}, batch_id long) USING PARQUET "
+            "OPTIONS ('partitionOverwriteMode' = 'dynamic') "
+            f"PARTITIONED BY (batch_id) CLUSTERED BY ({cols}) "
+            f"SORTED BY ({cols}) INTO {width} BUCKETS LOCATION '{path}'"
+        )
+        if live_has_data:
+            spark.sql(f"ALTER TABLE {name} RECOVER PARTITIONS")
+    return tables
+
+
+def drop_state(spark: SparkSession, state_dir: str, specs: StateSpecs) -> None:
+    """Drop the catalog entries (the external files live under
+    ``state_dir`` and follow its lifecycle)."""
+    for name in state_tables(state_dir, specs).values():
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def insert_dynamic(
+    spark: SparkSession, inserts: list[tuple[DataFrame, str]]
+) -> None:
+    """Append each frame (columns in the table's order; insertInto is
+    positional) as its batch's partition of the state table, replacing
+    that partition on replay. Write tasks are aligned to the table's
+    bucket layout — repartitioned on its bucket columns at its catalog
+    width, the function bucketing itself uses — so an append lands one
+    file per bucket instead of one per (task, bucket). Several inserts
+    run concurrently from a small driver pool: they touch disjoint
+    tables, each is idempotent under replay, and their commit order is
+    not load-bearing; a failure propagates before the caller can commit
+    its checkpoint."""
+    writes = []
+    for df, table in inserts:
+        cols, width = _bucket_spec(spark, table)
+        writes.append((df.repartition(width, *cols).write, table))
+    if len(writes) == 1:
+        writer, table = writes[0]
+        writer.insertInto(table, overwrite=True)
+        return
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futures = [pool.submit(w.insertInto, t, True) for w, t in writes]
+    for f in futures:
+        f.result()
+
+
+def newest_batch_id(frames: Iterable[DataFrame]) -> int | None:
+    """Global max ``batch_id`` across the frames, in one job — the one
+    batch a replay may legally rewrite, which must NEVER be folded into
+    the history partition (module docstring, point 1). ``None`` when all
+    are empty."""
+    frames = [f.select("batch_id") for f in frames]
+    union = frames[0]
+    for f in frames[1:]:
+        union = union.unionByName(f)
+    m = union.agg(F.max("batch_id")).first()[0]
+    return None if m is None else int(m)
 
 
 def fold_expr(max_bid: int | None) -> Column:
     """The fold column: a row keeps its batch_id iff it belongs to the
     newest (replayable) batch; every other partition folds into
-    ``HISTORY_BATCH_ID``. With ``max_bid=None`` (empty state) everything
-    folds — callers normally no-op before reaching that case."""
+    ``HISTORY_BATCH_ID``."""
     if max_bid is None:
         return F.lit(HISTORY_BATCH_ID).cast("long")
     return (
@@ -110,6 +268,11 @@ def fold_expr(max_bid: int | None) -> Column:
         .otherwise(F.lit(HISTORY_BATCH_ID))
         .cast("long")
     )
+
+
+def _relabel(df: DataFrame, max_bid: int) -> DataFrame:
+    cols = [c for c in df.columns if c != "batch_id"]
+    return df.select(*cols, fold_expr(max_bid).alias("batch_id"))
 
 
 def write_staged_bucketed(
@@ -122,8 +285,7 @@ def write_staged_bucketed(
     """Write ``df`` as a batch_id-partitioned bucketed table at ``path``
     with one file per (partition, bucket): explicit repartition to the
     bucket columns, bucketed reads disabled for the duration (module
-    docstring, point 2). The caller owns ``df``'s content (fold column
-    already applied) and the post-write swap."""
+    docstring, point 2)."""
     spark = df.sparkSession
     staged = df.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
     bkey = "spark.sql.sources.bucketing.enabled"
@@ -143,92 +305,44 @@ def write_staged_bucketed(
         spark.conf.set(bkey, prev)
 
 
-def create_bucketed_state(
-    spark: SparkSession,
-    state_dir: str,
-    specs: dict[str, tuple[str, list[str]]],
-    n_buckets: int,
-    tables: dict[str, str],
-    what: str,
-) -> None:
-    """Create a multi-table bucketed state (one ``batch_id``-partitioned
-    table per spec) or re-register surviving files in a fresh session —
-    the create/recover lifecycle the phash stream introduced and the
-    media pipeline reuses (round-12 review: one implementation, not one
-    copy per module). Refuses to bootstrap empty state over a crashed
-    in-place-swap's intact aside (`guard_swap_remnants`). Idempotent per
-    table: a crash between creations leaves a partial catalog the next
-    call completes. ``specs`` maps table key -> (schema containing a
-    trailing ``batch_id long``, bucket columns); table dirs live at
-    ``{state_dir}/{key}``."""
-    for key, (schema, bucket_cols) in specs.items():
-        if spark.catalog.tableExists(tables[key]):
-            continue
-        live_has_data = guard_swap_remnants(spark, state_dir, key, what)
-        path = f"{state_dir.rstrip('/')}/{key}"
-        if live_has_data:
-            cols = ", ".join(bucket_cols)
-            data_cols = ", ".join(
-                c.strip() for c in schema.split(",") if "batch_id" not in c
-            )
-            spark.sql(
-                f"CREATE TABLE {tables[key]} ({data_cols}, batch_id long) "
-                f"USING PARQUET PARTITIONED BY (batch_id) "
-                f"CLUSTERED BY ({cols}) SORTED BY ({cols}) "
-                f"INTO {n_buckets} BUCKETS "
-                f"LOCATION '{path}'"
-            )
-            spark.sql(f"ALTER TABLE {tables[key]} RECOVER PARTITIONS")
-        else:
-            (
-                spark.createDataFrame([], schema)
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .bucketBy(n_buckets, *bucket_cols)
-                .sortBy(*bucket_cols)
-                .option("path", path)
-                .format("parquet")
-                .saveAsTable(tables[key])
-            )
-
-
 def compact_bucketed_state(
     spark: SparkSession,
     state_dir: str,
-    specs: dict[str, tuple[str, list[str]]],
-    n_buckets: int,
-    tables: dict[str, str],
-    create_state,
+    specs: StateSpecs,
+    what: str,
+    n_buckets: int | None = None,
+    fold: Callable[[DataFrame, int], DataFrame] | None = None,
+    also_newest: Iterable[DataFrame] = (),
 ) -> dict[str, int]:
-    """Fold-all-but-newest + in-place swap for a `create_bucketed_state`
-    lifecycle (offline, stream stopped): per table, relabel every batch
-    partition except the global newest into ``batch_id = -1`` via ONE
-    staged bucketed write, swap the staged dir over the live one
-    (`hadoop_fs.swap_dirs`; `guard_swap_remnants` inside ``create_state``
-    covers a crash between the renames), and re-register. Rows are
-    relabeled, never collapsed. ``create_state`` is the caller's
-    zero-arg (re)registration hook, invoked before and after the swaps.
-    Returns {table key: parquet files after compaction}."""
-    create_state()
-    max_bid = newest_batch_id(spark, list(tables.values()))
+    """Fold-all-but-newest + in-place swap (module docstring). Per table:
+    ``fold(table_df, max_bid)`` (default: relabel every partition but the
+    newest to ``batch_id = -1``) is written as one staged bucketed copy at
+    ``n_buckets`` (default: the table's current width), with its width
+    marker, swapped over the live dir and re-registered. ``also_newest``
+    are further batch-partitioned frames whose newest batch must also stay
+    un-folded. Returns {table key: parquet files after compaction}."""
+    tables = create_state(spark, state_dir, specs, what)
+    max_bid = newest_batch_id(
+        [spark.table(t) for t in tables.values()] + list(also_newest)
+    )
     out: dict[str, int] = {}
     for key, name in tables.items():
-        live = f"{state_dir.rstrip('/')}/{key}"
+        live = table_path(state_dir, key)
         if max_bid is None:
             out[key] = hadoop_fs.count_parquet(spark, live)
             continue
+        bucket_cols, width = _bucket_spec(spark, name)
+        width = n_buckets or width
         staged = f"{live}_staged"
-        hadoop_fs.delete_recursive(spark, staged)
+        hadoop_fs.delete_recursive(spark, staged)  # leftovers of a dead run
         tmp_name = f"{name}_compact"
         spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        cols = [c for c in spark.table(name).columns if c != "batch_id"]
-        folded = spark.table(name).select(
-            *cols, fold_expr(max_bid).alias("batch_id")
-        )
-        write_staged_bucketed(folded, specs[key][1], n_buckets, tmp_name, staged)
+        folded = (fold or _relabel)(spark.table(name), max_bid)
+        write_staged_bucketed(folded, bucket_cols, width, tmp_name, staged)
+        hadoop_fs.touch(spark, f"{staged}/{_WIDTH_MARKER}{width}")
         spark.sql(f"DROP TABLE {tmp_name}")
         spark.sql(f"DROP TABLE {name}")
         hadoop_fs.swap_dirs(spark, live, staged)
         out[key] = hadoop_fs.count_parquet(spark, live)
-    create_state()
+    create_state(spark, state_dir, specs, what)
     return out

@@ -5,10 +5,10 @@ batch itself; repeated spans are accounted (and removable) per document,
 and the batch's new windows join the seen state.
 
 Extension lineage: batch twin `operators/substring.py` (Lee et al. 2022);
-the streaming state pattern is `streaming/neardup.py`'s (bucketed
-catalog-backed state, batch_id-partitioned dynamic-overwrite appends,
-Hadoop-FS re-registration in fresh sessions) specialized to ONE table —
-exact window membership needs no bands/postings/sizes split.
+the state is ONE table on the shared `streaming/state_compaction`
+lifecycle (bucketed catalog-backed state, batch_id-partitioned
+dynamic-overwrite appends, re-registration in fresh sessions) — exact
+window membership needs no bands/postings/sizes split.
 
 State: ``wins (h long, batch_id long)`` — one 60-bit content hash per
 DISTINCT window first seen in that batch, BUCKETED on ``h``. Per batch the
@@ -33,102 +33,20 @@ write repair both in place.
 
 from __future__ import annotations
 
-import hashlib
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ai_powered_data_pipeline_assistant_spark import hadoop_fs
 from ai_powered_data_pipeline_assistant_spark.execution import materialize
 from ai_powered_data_pipeline_assistant_spark.functions.hashing import md5_int
+from ai_powered_data_pipeline_assistant_spark.streaming import (
+    state_compaction as sc,
+)
 
-SUBSTR_STATE_BUCKETS = 4
-_WINS_SCHEMA = "h long, batch_id long"
-_BUCKETS_MARKER = "_SPARK_GRAFT_BUCKETS_"
-
-
-def _state_buckets(spark: SparkSession, state_dir: str) -> int:
-    """Effective bucket width of the wins table: parsed from the
-    name-encoded ``_SPARK_GRAFT_BUCKETS_{m}`` marker file inside the
-    table dir (written at create and at every compaction — underscore
-    prefix keeps parquet readers blind to it, and living INSIDE the dir
-    means the compaction swap moves data and width ATOMICALLY together,
-    the same correctness argument as the near-dup generation-dir names:
-    registering re-bucketed files under the wrong count would silently
-    break the bucket-pruned join). Falls back to the module constant for
-    pre-marker state dirs."""
-    for name in hadoop_fs.list_child_files(spark, _wins_path(state_dir)):
-        if name.startswith(_BUCKETS_MARKER):
-            return int(name[len(_BUCKETS_MARKER):])
-    return SUBSTR_STATE_BUCKETS
-
-
-def _state_table(state_dir: str) -> str:
-    """Catalog table name for one stream instance (stable across restarts
-    of the same stream; scheme-qualified dirs stay as-is — see
-    neardup._state_tables for the abspath rationale)."""
-    if ":" in state_dir.split("/", 1)[0]:
-        key = state_dir.rstrip("/")
-    else:
-        key = os.path.abspath(state_dir)
-    return f"substr_wins_{hashlib.md5(key.encode()).hexdigest()[:12]}"
-
-
-def _wins_path(state_dir: str) -> str:
-    return f"{state_dir.rstrip('/')}/wins"
-
-
-def _create_state(spark: SparkSession, state_dir: str, table: str) -> None:
-    """Create the wins table with its bucket layout — or re-register
-    surviving state files when the stream restarts in a fresh session
-    (the default catalog is in-memory; wiping survivors would silently
-    forget the whole seen-window corpus). Refuses to bootstrap EMPTY
-    state while remnants of a crashed compaction swap hold the only
-    intact copy — silently forgetting the corpus would re-admit every
-    historical duplicate (the near-dup module's markerless-generation
-    rule, applied to the swap-aside dirs)."""
-    if spark.catalog.tableExists(table):
-        return
-    from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
-        guard_swap_remnants,
-    )
-
-    live_has_data = guard_swap_remnants(
-        spark, state_dir, "wins", "substring stream"
-    )
-    path = _wins_path(state_dir)
-    if live_has_data:
-        # width from the marker INSIDE the dir, never the module constant:
-        # a re-bucketed compaction must re-register at its own width
-        spark.sql(
-            f"CREATE TABLE {table} (h long, batch_id long) "
-            f"USING PARQUET PARTITIONED BY (batch_id) "
-            f"CLUSTERED BY (h) SORTED BY (h) "
-            f"INTO {_state_buckets(spark, state_dir)} BUCKETS "
-            f"LOCATION '{path}'"
-        )
-        spark.sql(f"ALTER TABLE {table} RECOVER PARTITIONS")
-    else:
-        (
-            spark.createDataFrame([], _WINS_SCHEMA)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .bucketBy(SUBSTR_STATE_BUCKETS, "h")
-            .sortBy("h")
-            .option("path", path)
-            .format("parquet")
-            .saveAsTable(table)
-        )
-        hadoop_fs.touch(
-            spark, f"{path}/{_BUCKETS_MARKER}{SUBSTR_STATE_BUCKETS}"
-        )
+STATE_SPECS: sc.StateSpecs = {"wins": ("substr_wins", "h long", ["h"])}
 
 
 def drop_state(spark: SparkSession, state_dir: str) -> None:
-    """Drop the stream's catalog entry (external files live under
-    ``state_dir`` and follow its lifecycle)."""
-    spark.sql(f"DROP TABLE IF EXISTS {_state_table(state_dir)}")
+    sc.drop_state(spark, state_dir, STATE_SPECS)
 
 
 def process_substring_batch(
@@ -163,14 +81,10 @@ def process_substring_batch(
     from ai_powered_data_pipeline_assistant_spark.streaming.jobs import (
         idempotent_append,
     )
-    from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
-        _insert_dynamic,
-    )
 
     spark = docs.sparkSession
-    table = _state_table(state_dir)
-    if not spark.catalog.tableExists(table):
-        _create_state(spark, state_dir, table)
+    tables = sc.create_state(spark, state_dir, STATE_SPECS, "substring stream")
+    table = tables["wins"]
 
     sized = materialize(sized_docs(docs.select("doc_id", "text")))
     # Hash ONCE per occurrence; the window text never enters the shuffle
@@ -230,92 +144,48 @@ def process_substring_batch(
     # State append: the batch's NEW distinct windows (their first
     # occurrence's hash). Dynamic overwrite of the batch partition makes
     # replays self-repairing.
-    _insert_dynamic(
-        kept.select("h").distinct().select(
-            "h", F.lit(batch_id).cast("long").alias("batch_id")
-        ),
-        table,
-        bucket_cols=["h"],
-        n_buckets=SUBSTR_STATE_BUCKETS,
+    sc.insert_dynamic(
+        spark,
+        [
+            (
+                kept.select("h").distinct().select(
+                    "h", F.lit(batch_id).cast("long").alias("batch_id")
+                ),
+                table,
+            )
+        ],
     )
 
 
 def compact_substring_state(
     spark: SparkSession, state_dir: str, n_buckets: int | None = None
 ) -> int:
-    """Offline state compaction (run with the stream stopped): per-batch
-    appends leave one file set per batch; fold every batch partition
-    EXCEPT the newest into a single ``batch_id = -1`` partition with the
-    same bucket layout — or, with ``n_buckets``, RE-BUCKET to a new width
-    in the same pass (round 10, the near-dup compactor's re-bucketing
-    lever brought to this table: state grows one hash per distinct window
+    """Offline state compaction (stream stopped) on the shared
+    `streaming/state_compaction` lifecycle: fold every batch partition
+    EXCEPT the newest into ``batch_id = -1`` — or, with ``n_buckets``,
+    RE-BUCKET in the same pass (state grows one hash per distinct window
     forever, so the width that kept buckets at 128 MB–1 GB at bring-up is
-    eventually too coarse; the new width rides the name-encoded marker
-    file inside the staged dir, so the swap moves data and width
-    atomically and `_create_state` re-registers at the width the files
-    were actually written with). Fold selection and the bucketed staged
-    write go through the shared `streaming/state_compaction` core
-    (round 11, VERDICT r10 task #6) — its docstring carries the
-    crash-window argument for why the newest partition stays un-folded
-    (a replay must keep seeing its own rows excluded by the
-    strictly-pre-batch filter; folding them into -1 would make the
-    replayed batch treat its own windows as history and rewrite its
-    accounting with everything dropped — round-9 review). The compacted
-    copy is staged NEXT TO the live dir and swapped in with checked
-    renames (`hadoop_fs.swap_dirs` — rollback on a failed second rename),
-    then the catalog entry is dropped so the next batch's `_create_state`
-    re-registers the compacted files at the SAME path — no generation
-    naming needed because the table location never changes (a crash
-    between the two renames is caught by `_create_state`'s
-    remnant guard, which refuses to bootstrap empty state).
-    The per-h min-fold collapse is a no-op by construction (a window's
-    hash enters state in exactly one batch partition) but guards against
-    a replay interleaving bug ever landing duplicates — including
-    duplicates straddling the preserved newest partition, which it
-    assigns to the history side. Object-store-safe: staging
-    and swap go through the Hadoop FileSystem API. Returns the parquet
-    file count after compaction."""
-    from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
-        fold_expr,
-        newest_batch_id,
-        write_staged_bucketed,
-    )
+    eventually too coarse). The fold hook collapses to ONE row per ``h``,
+    assigned to the HISTORY side (min of the folded batch_id): a no-op by
+    construction (a window's hash enters state in exactly one batch
+    partition), but if a bad replay ever landed a hash in the newest
+    partition that history already owns, keeping it in -1 means a later
+    replay of the newest batch (which overwrites its own partition)
+    cannot erase the corpus's memory of that window; a plain distinct
+    over (h, folded id) would keep BOTH copies. Returns the parquet file
+    count after compaction."""
 
-    table = _state_table(state_dir)
-    _create_state(spark, state_dir, table)
-    live = _wins_path(state_dir)
-    staged = f"{live}_staged"
-    hadoop_fs.delete_recursive(spark, staged)  # leftovers of a dead run
-    tmp_name = f"{table}_compact"
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-    max_bid = newest_batch_id(spark, [table])
-    if max_bid is None:
-        return hadoop_fs.count_parquet(spark, live)  # empty state: no-op
-    # One row per h, duplicates collapsed to the HISTORY side (min of the
-    # folded batch_id): if a bad replay ever landed a hash in the newest
-    # partition that history already owns, assigning it to -1 keeps state
-    # consistent under a later replay of the newest batch (the replay
-    # overwrites its partition with its own kept set; the hash survives
-    # in -1). A plain distinct over (h, folded id) would keep BOTH copies.
-    width = n_buckets or _state_buckets(spark, state_dir)
-    compacted = (
-        spark.table(table)
-        .select("h", fold_expr(max_bid).alias("batch_id"))
-        .groupBy("h")
-        .agg(F.min("batch_id").alias("batch_id"))
-    )
-    write_staged_bucketed(compacted, ["h"], width, tmp_name, staged)
-    # width marker INSIDE the staged dir — the swap below carries data
-    # and width together
-    hadoop_fs.touch(spark, f"{staged}/{_BUCKETS_MARKER}{width}")
-    # drop BOTH catalog entries first (external drops leave files), then
-    # swap the directories; the next _create_state re-registers the
-    # compacted files at the unchanged live path
-    spark.sql(f"DROP TABLE {tmp_name}")
-    spark.sql(f"DROP TABLE {table}")
-    hadoop_fs.swap_dirs(spark, live, staged)
-    _create_state(spark, state_dir, table)
-    return hadoop_fs.count_parquet(spark, live)
+    def fold(wins: DataFrame, max_bid: int) -> DataFrame:
+        return (
+            wins.select("h", sc.fold_expr(max_bid).alias("batch_id"))
+            .groupBy("h")
+            .agg(F.min("batch_id").alias("batch_id"))
+        )
+
+    return sc.compact_bucketed_state(
+        spark, state_dir, STATE_SPECS, "substring stream",
+        n_buckets=n_buckets, fold=fold,
+    )["wins"]
 
 
 def run_substring_stream(

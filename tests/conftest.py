@@ -108,7 +108,6 @@ _SLOW_TIER = {
     "tests/test_crawl_drift.py::test_crawl_ingest_trips_drift_rule_and_rebuilds",
     "tests/test_oracle_parity.py::test_oracle_parity[crawl_pipeline_parity]",
     "tests/test_ivfpq.py::test_drift_audit_decision_and_retrain_improves_qerr",
-    "tests/test_media_pipeline.py::test_fresh_session_reregistration_and_remnant_guard",
     "tests/test_ivfpq.py::test_incremental_append_parity",
     "tests/test_ivfpq.py::test_delete_rewrites_only_affected_partitions",
     "tests/test_oracle_parity.py::test_no_oracle_queries_run[pq_encode]",

@@ -11,12 +11,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from ai_powered_data_pipeline_assistant_spark.streaming.cluster_stream import (
+    STATE_SPECS,
     _redirects_path,
-    _roots_table,
     drop_state,
     process_cluster_batch,
     resolved_roots,
 )
+from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
+    state_tables,
+)
+
+
+def _roots_table(state_dir):
+    return state_tables(state_dir, STATE_SPECS)["roots"]
 
 
 @pytest.fixture()
@@ -225,33 +232,5 @@ def test_compaction_crash_window_replay_converges(spark, state_dir):
         # absorbed rows present, fold runs again) is a no-op
         compact_cluster_state(spark, state_dir)
         assert _resolved(spark, state_dir) == assigned1
-    finally:
-        drop_state(spark, state_dir)
-
-
-def test_compaction_remnant_guard_refuses_empty_bootstrap(spark, state_dir):
-    """A crashed compaction swap (live roots dir gone, .old aside intact)
-    must make the next _create_state raise instead of silently
-    bootstrapping empty state."""
-    from ai_powered_data_pipeline_assistant_spark import hadoop_fs
-    from ai_powered_data_pipeline_assistant_spark.streaming.cluster_stream import (
-        _create_state,
-        _roots_path,
-        compact_cluster_state,
-    )
-
-    try:
-        process_cluster_batch(_pairs(spark, [(1, 2)]), 0, state_dir)
-        process_cluster_batch(_pairs(spark, [(2, 3)]), 1, state_dir)
-        compact_cluster_state(spark, state_dir)
-        live = _roots_path(state_dir)
-        aside = f"{live}.old_deadbeef"
-        assert hadoop_fs.rename(spark, live, aside)
-        spark.sql(f"DROP TABLE IF EXISTS {_roots_table(state_dir)}")
-        with pytest.raises(RuntimeError, match="refusing to silently"):
-            _create_state(spark, state_dir, _roots_table(state_dir))
-        # repair: move the aside back; state reads again
-        assert hadoop_fs.rename(spark, aside, live)
-        assert _resolved(spark, state_dir) == {1: 1, 2: 1, 3: 1}
     finally:
         drop_state(spark, state_dir)

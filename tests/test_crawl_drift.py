@@ -351,11 +351,12 @@ def test_compaction_cadence_inside_pipeline(spark, sf_dir):
     from ai_powered_data_pipeline_assistant_spark.operators.stream_parity import (
         _crawl_splits,
     )
+    from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
+        STATE_SPECS,
+    )
     from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
         HISTORY_BATCH_ID,
-    )
-    from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
-        _state_tables,
+        state_tables,
     )
 
     nb = 3
@@ -382,7 +383,7 @@ def test_compaction_cadence_inside_pipeline(spark, sf_dir):
             )
         assert outs["plain"] == outs["cadence"]
         # the cadence run genuinely folded: history partition present
-        tables = _state_tables(f"{tmp}/cadence/state")
+        tables = state_tables(f"{tmp}/cadence/state", STATE_SPECS)
         bids = {
             r.batch_id
             for r in spark.table(tables["bands"])

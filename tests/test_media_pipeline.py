@@ -22,7 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ai_powered_data_pipeline_assistant_spark.streaming.media_pipeline import (
-    _state_tables,
+    STATE_SPECS,
     drop_state,
     media_keep_best_state,
     process_media_batch,
@@ -30,6 +30,9 @@ from ai_powered_data_pipeline_assistant_spark.streaming.media_pipeline import (
 )
 from ai_powered_data_pipeline_assistant_spark.streaming.phash_stream import (
     DECISIONS_SCHEMA,
+)
+from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
+    state_tables,
 )
 
 CURATED = "media_id long, modality string, batch_id long"
@@ -137,7 +140,7 @@ def test_hot_blob_output_is_linear(spark, dirs):
         assert dropped.count() == n_arrivals - 3
         assert curated.count() == 3
         assert not os.path.isdir(f"{out}/pairs")
-        tables = _state_tables(state)
+        tables = state_tables(state, STATE_SPECS)
         # ONE content row for the hot blob: state is bounded by distinct
         # contents, not arrivals
         assert spark.table(tables["mdigest"]).count() == 3
@@ -313,67 +316,3 @@ def test_phash_decisions_match_pairs(spark, dirs):
             assert (got[m].best_hamming, got[m].best_partner) == (h, p)
     finally:
         ph_drop(spark, state)
-
-
-def test_fresh_session_reregistration_and_remnant_guard(spark, dirs):
-    """The shared `create_bucketed_state` lifecycle, exercised through
-    the media pipeline: after a catalog wipe (fresh session), surviving
-    state files re-register with identical content and the keep-best
-    view is unchanged; an interrupted in-place swap (empty live dir, an
-    intact ``.old_`` aside) is REFUSED instead of silently bootstrapping
-    empty state."""
-    from ai_powered_data_pipeline_assistant_spark.streaming.media_pipeline import (
-        _create_state,
-        compact_media_state,
-    )
-
-    state, out, tmp = dirs
-    batches = _scenario(spark)
-    try:
-        for b in range(3):
-            process_media_batch(batches[b], b, state, out)
-        compact_media_state(spark, state)
-        tables = _state_tables(state)
-        rows_before = {
-            k: sorted(map(tuple, spark.table(n).drop("batch_id").collect()))
-            for k, n in tables.items()
-        }
-        kb_before = sorted(
-            tuple(r) for r in media_keep_best_state(spark, state).collect()
-        )
-        # fresh session: catalog gone, files survive
-        for n in tables.values():
-            spark.sql(f"DROP TABLE {n}")
-        _create_state(spark, state, tables)
-        for k, n in tables.items():
-            assert (
-                sorted(map(tuple, spark.table(n).drop("batch_id").collect()))
-                == rows_before[k]
-            )
-        assert (
-            sorted(tuple(r) for r in media_keep_best_state(spark, state).collect())
-            == kb_before
-        )
-        # crashed-swap remnant: live mdigest dir emptied, intact aside
-        # left next to it -> re-registration must refuse
-        for n in tables.values():
-            spark.sql(f"DROP TABLE {n}")
-        os.rename(f"{state}/mdigest", f"{state}/mdigest.old_deadbeef")
-        os.makedirs(f"{state}/mdigest")
-        with pytest.raises(RuntimeError, match="refusing"):
-            _create_state(spark, state, tables)
-        # repair: move the aside back, re-registration succeeds
-        os.rmdir(f"{state}/mdigest")
-        os.rename(f"{state}/mdigest.old_deadbeef", f"{state}/mdigest")
-        _create_state(spark, state, tables)
-        assert (
-            sorted(
-                map(
-                    tuple,
-                    spark.table(tables["mdigest"]).drop("batch_id").collect(),
-                )
-            )
-            == rows_before["mdigest"]
-        )
-    finally:
-        drop_state(spark, state)

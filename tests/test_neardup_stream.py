@@ -20,6 +20,16 @@ from ai_powered_data_pipeline_assistant_spark.operators.stream_parity import (
     NEARDUP_STREAM_BATCHES,
     neardup_stream_parity,
 )
+from ai_powered_data_pipeline_assistant_spark.streaming import (
+    state_compaction as sc,
+)
+from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
+    STATE_SPECS,
+)
+
+
+def _tables(state_dir):
+    return sc.state_tables(state_dir, STATE_SPECS)
 
 
 def test_stream_matches_batch_and_is_nonvacuous(spark, sf_dir):
@@ -80,20 +90,14 @@ def _run_stream_once(spark, sf_dir, tmp):
 
 
 def test_state_layout_scale_properties(spark, sf_dir):
-    """One stream lifecycle, four scale pins:
+    """One stream lifecycle, three scale pins (replay and re-registration
+    of the state tables: tests/test_state_lifecycle.py):
     1. the band join against accumulated state runs with the Exchange on
        the BATCH side only — the bucketed state scan re-shuffles nothing;
-    2. a replayed state insert (crash between state commit and checkpoint
-       commit) overwrites its own batch partition — no duplicate rows;
-    3. a fresh session (catalog entry gone, files alive) re-registers the
-       state instead of wiping it;
-    4. compaction reduces the file count, preserves rows, and keeps the
+    2. the overlap-window state reads are catalog partition-pruned;
+    3. compaction reduces the file count, preserves rows, and keeps the
        Exchange-free join plan."""
     from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
-        NEARDUP_STATE_BUCKETS,
-        _create_state,
-        _insert_dynamic,
-        _state_tables,
         compact_neardup_state,
         drop_state,
     )
@@ -105,7 +109,7 @@ def test_state_layout_scale_properties(spark, sf_dir):
     try:
         _run_stream_once(spark, sf_dir, tmp)
         state_dir = f"{tmp}/state"
-        tables = _state_tables(state_dir)
+        tables = _tables(state_dir)
         bands_t = tables["bands"]
         n_bands = spark.table(bands_t).count()
         assert n_bands > 0
@@ -138,15 +142,9 @@ def test_state_layout_scale_properties(spark, sf_dir):
         assert plan.count("Exchange hashpartitioning") == 1, plan
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bcast)
 
-        # --- 2. replay idempotency ---
-        before = {k: spark.table(n).count() for k, n in tables.items()}
         last_batch = spark.table(bands_t).agg(F.max("batch_id")).collect()[0][0]
-        replay = spark.table(bands_t).filter(F.col("batch_id") == last_batch)
-        cols = [c for c in replay.columns if c != "batch_id"] + ["batch_id"]
-        _insert_dynamic(replay.select(*cols), bands_t)
-        assert spark.table(bands_t).count() == before["bands"]
 
-        # --- 2b. partition pruning of the overlap-window state reads
+        # --- 2. partition pruning of the overlap-window state reads
         # (ADVICE r12): while a replayed batch's append rewrites the
         # current batch_id partition on a pool thread, the main thread
         # reads state through `.filter(batch_id < current)`. That is safe
@@ -161,14 +159,7 @@ def test_state_layout_scale_properties(spark, sf_dir):
         pf = _re.search(r"PartitionFilters: \[([^\]]*)\]", scan_plan).group(1)
         assert "batch_id" in pf, scan_plan
 
-        # --- 3. fresh-session re-registration ---
-        for name in tables.values():
-            spark.sql(f"DROP TABLE {name}")
-        _create_state(spark, state_dir, tables)
-        assert spark.table(bands_t).count() == before["bands"]
-        assert spark.table(tables["postings"]).count() == before["postings"]
-
-        # --- 4. compaction ---
+        # --- 3. compaction ---
         rows_before = sorted(
             map(tuple, spark.table(bands_t).drop("batch_id").collect())
         )
@@ -181,7 +172,7 @@ def test_state_layout_scale_properties(spark, sf_dir):
         assert files_after < files_before
         # two partitions (-1 fold + the preserved newest batch), each
         # pre-shuffled to the bucket layout → ≤ 2×buckets per table
-        assert files_after_map["bands"] <= 2 * NEARDUP_STATE_BUCKETS
+        assert files_after_map["bands"] <= 2 * sc.STATE_BUCKETS
         rows_after = sorted(
             map(tuple, spark.table(bands_t).drop("batch_id").collect())
         )
@@ -205,102 +196,38 @@ def test_state_layout_scale_properties(spark, sf_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_state_lifecycle_on_scheme_qualified_paths(spark, sf_dir):
-    """Object-store readiness (VERDICT r8 #1): drive the full state
-    lifecycle — create, append, fresh-session re-registration, compaction,
-    post-compaction append — through a ``file:``-scheme state dir. Every
-    ``os.path``/``os.walk``/``shutil`` call sees NOTHING behind a scheme-
-    qualified path (``os.path.isdir("file:/tmp/x")`` is False), so this
-    passes only if the lifecycle plumbing goes through the Hadoop
-    FileSystem API — the same code path an s3a:// or hdfs:// state dir
-    takes on a cluster."""
-    from ai_powered_data_pipeline_assistant_spark.catalog import load_table
-    from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
-        _create_state,
-        _state_tables,
-        compact_neardup_state,
-        drop_state,
-        process_neardup_batch,
-    )
-
-    nb = 3
-    tmp = tempfile.mkdtemp(prefix="neardup_uri_")
-    state_dir = f"file:{tmp}/state"
-    pairs_dir = f"{tmp}/pairs"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .filter(F.col("doc_id") < 300)
-        )
-        for i in range(2):
-            process_neardup_batch(
-                docs.filter(F.col("doc_id") % nb == i), i, state_dir, pairs_dir
-            )
-        tables = _state_tables(state_dir)
-        before = {k: spark.table(n).count() for k, n in tables.items()}
-        assert before["bands"] > 0 and before["postings"] > 0
-
-        # fresh-session re-registration must FIND the scheme-qualified
-        # files (the pre-fix os.path.isdir check silently created empty
-        # tables here, wiping state)
-        for name in tables.values():
-            spark.sql(f"DROP TABLE {name}")
-        _create_state(spark, state_dir, tables)
-        assert {k: spark.table(n).count() for k, n in tables.items()} == before
-
-        # compaction: generation listing, old-gen delete, and the file
-        # count all go through Hadoop FS against the file: URI
-        rows_before = sorted(
-            map(tuple, spark.table(tables["bands"]).drop("batch_id").collect())
-        )
-        files_map = compact_neardup_state(spark, state_dir)
-        assert all(n > 0 for n in files_map.values())
-        rows_after = sorted(
-            map(tuple, spark.table(tables["bands"]).drop("batch_id").collect())
-        )
-        assert rows_after == rows_before
-        # the old generation was actually deleted through the URI
-        assert not os.path.isdir(f"{tmp}/state/bands")
-
-        # the stream keeps running against the compacted generation
-        process_neardup_batch(
-            docs.filter(F.col("doc_id") % nb == 2), 2, state_dir, pairs_dir
-        )
-        assert spark.table(tables["bands"]).count() > before["bands"]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        drop_state(spark, state_dir)
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def test_compaction_rebuckets_state(spark, sf_dir):
     """Bucket-count migration: the count is fixed at table creation, so a
     corpus that outgrows its provisioning re-buckets in the compaction
-    pass. Pins: rows preserved; the new width is encoded in the
-    generation dir and a fresh-session re-registration picks it up (the
-    catalog claiming the WRONG count would silently mis-prune the
-    bucketed join); appends and the Exchange-free band join keep working
-    at the new width; a later compaction WITHOUT n_buckets inherits it."""
+    pass. Pins: rows preserved; a fresh-session re-registration picks up
+    the new width (the catalog claiming the WRONG count would silently
+    mis-prune the bucketed join); the next batch's appends are aligned to
+    the new width — one file per bucket, not one per (task, bucket); the
+    Exchange-free band join holds at the new width; a later compaction
+    WITHOUT n_buckets inherits it. 6 does not divide by the creation
+    width, so an append repartitioned at the creation width would land
+    up to 4 × 6 files per table."""
     from ai_powered_data_pipeline_assistant_spark.catalog import load_table
     from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
-        _create_state,
-        _state_layout,
-        _state_tables,
         compact_neardup_state,
         drop_state,
         process_neardup_batch,
     )
 
     nb = 3
-    new_width = 8
+    new_width = 6
     tmp = tempfile.mkdtemp(prefix="neardup_rebucket_")
     state_dir = f"{tmp}/state"
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     prev_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
+
+    def width(table):
+        desc = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+        return int(
+            next(r["data_type"] for r in desc if r["col_name"] == "Num Buckets")
+        )
+
     try:
         docs = (
             load_table(spark, sf_dir, "documents")
@@ -312,7 +239,7 @@ def test_compaction_rebuckets_state(spark, sf_dir):
                 docs.filter(F.col("doc_id") % nb == i), i, state_dir,
                 f"{tmp}/pairs",
             )
-        tables = _state_tables(state_dir)
+        tables = _tables(state_dir)
         bands_t = tables["bands"]
         rows_before = sorted(
             map(tuple, spark.table(bands_t).drop("batch_id").collect())
@@ -321,32 +248,35 @@ def test_compaction_rebuckets_state(spark, sf_dir):
         files_map = compact_neardup_state(spark, state_dir, n_buckets=new_width)
         # -1 fold + the preserved newest batch partition → ≤ 2×width
         assert 1 <= files_map["bands"] <= 2 * new_width
-        rows_after = sorted(
-            map(tuple, spark.table(bands_t).drop("batch_id").collect())
-        )
-        assert rows_after == rows_before
-
-        # fresh-session re-registration resolves the re-bucketed layout
-        for name in tables.values():
-            spark.sql(f"DROP TABLE {name}")
-        _create_state(spark, state_dir, tables)
-        path, n_buckets = _state_layout(spark, state_dir, "bands")
-        assert n_buckets == new_width and path.endswith(f"_b{new_width}")
-        desc = spark.sql(f"DESCRIBE TABLE EXTENDED {bands_t}").collect()
-        n_desc = next(
-            r["data_type"] for r in desc if r["col_name"] == "Num Buckets"
-        )
-        assert int(n_desc) == new_width
         assert (
             sorted(map(tuple, spark.table(bands_t).drop("batch_id").collect()))
             == rows_before
         )
 
-        # the stream keeps appending, and the band join is still
-        # Exchange-free on the (re-bucketed) state side
+        # fresh-session re-registration resolves the re-bucketed layout
+        drop_state(spark, state_dir)
         process_neardup_batch(
             docs.filter(F.col("doc_id") % nb == 2), 2, state_dir, f"{tmp}/pairs"
         )
+        assert all(width(t) == new_width for t in tables.values())
+        assert (
+            sorted(
+                map(
+                    tuple,
+                    spark.table(bands_t)
+                    .filter(F.col("batch_id") < 2)
+                    .drop("batch_id")
+                    .collect(),
+                )
+            )
+            == rows_before
+        )
+        for key in tables:
+            part = f"{state_dir}/{key}/batch_id=2"
+            n_files = sum(f.endswith(".parquet") for f in os.listdir(part))
+            assert 1 <= n_files <= new_width, (key, n_files)
+
+        # the band join is still Exchange-free on the re-bucketed state
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         probe_rows = [
             (r["doc_id"], r["band"], r["band_key"])
@@ -368,101 +298,12 @@ def test_compaction_rebuckets_state(spark, sf_dir):
         # a later compaction without n_buckets INHERITS the new width
         files_map2 = compact_neardup_state(spark, state_dir)
         assert 1 <= files_map2["bands"] <= 2 * new_width
-        path2, width2 = _state_layout(spark, state_dir, "bands")
-        assert width2 == new_width and path2.endswith(f"_b{new_width}")
+        assert width(bands_t) == new_width
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bcast)
         drop_state(spark, state_dir)
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_compaction_crash_window_repairs_on_next_batch(spark, sf_dir):
-    """VERDICT r8 task #4: kill compaction between ``DROP TABLE`` and
-    ``RENAME`` (the two-statement swap window). The stream's table name is
-    left dangling; the next micro-batch's ``_create_state`` must
-    re-register the NEWEST generation (the compacted copy was fully
-    written before the swap began) and the stream must keep catching
-    near-dups of pre-crash documents."""
-    from ai_powered_data_pipeline_assistant_spark.catalog import load_table
-    from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
-        _state_tables,
-        compact_neardup_state,
-        drop_state,
-        process_neardup_batch,
-    )
-
-    nb = 3
-    tmp = tempfile.mkdtemp(prefix="neardup_crash_")
-    state_dir = f"{tmp}/state"
-    pairs_dir = f"{tmp}/pairs"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    real_sql = spark.sql
-    try:
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .filter(F.col("doc_id") < 300)
-        )
-        for i in range(2):
-            process_neardup_batch(
-                docs.filter(F.col("doc_id") % nb == i), i, state_dir, pairs_dir
-            )
-        tables = _state_tables(state_dir)
-        bands_rows = sorted(
-            map(tuple, spark.table(tables["bands"]).drop("batch_id").collect())
-        )
-
-        def boom(q, *a, **k):
-            if "RENAME TO" in q:
-                raise RuntimeError("injected crash between DROP and RENAME")
-            return real_sql(q, *a, **k)
-
-        spark.sql = boom
-        try:
-            import pytest
-
-            with pytest.raises(RuntimeError, match="injected crash"):
-                compact_neardup_state(spark, state_dir)
-        finally:
-            del spark.sql  # restore the class method
-        # the window: bands' name is gone from the catalog, its compacted
-        # generation is fully on disk, the tmp table dangles
-        assert not spark.catalog.tableExists(tables["bands"])
-
-        # repair: the next batch re-registers the newest generation and a
-        # near-copy of a PRE-CRASH doc is still caught
-        seed = docs.filter(F.col("doc_id") % nb == 0).limit(1).collect()[0]
-        copy_id = 1_000_002  # % 3 == 0-free: just a fresh id in batch 2
-        batch2 = docs.filter(F.col("doc_id") % nb == 2).unionByName(
-            spark.createDataFrame([(copy_id, seed["text"])], "doc_id long, text string")
-        )
-        process_neardup_batch(batch2, 2, state_dir, pairs_dir)
-        assert spark.catalog.tableExists(tables["bands"])
-        # state rows survived the crash (batch 2's own rows are extra)
-        after = sorted(
-            map(
-                tuple,
-                spark.table(tables["bands"])
-                .filter(F.col("batch_id") < 2)
-                .drop("batch_id")
-                .collect(),
-            )
-        )
-        assert after == bands_rows
-        pairs = spark.read.parquet(pairs_dir)
-        hit = pairs.filter(
-            (F.col("later_id") == copy_id)
-            & (F.col("earlier_id") == seed["doc_id"])
-        ).count()
-        assert hit == 1
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        drop_state(spark, state_dir)
-        spark.sql(f"DROP TABLE IF EXISTS {_state_tables(state_dir)['bands']}_compact")
-        shutil.rmtree(tmp, ignore_errors=True)
-
 
 def test_overcap_partner_fetch_uses_bucketed_semi_join(spark, sf_dir, monkeypatch):
     """VERDICT r8 task #5: above NEARDUP_ISIN_CAP the partner fetch must
@@ -473,8 +314,7 @@ def test_overcap_partner_fetch_uses_bucketed_semi_join(spark, sf_dir, monkeypatc
     from ai_powered_data_pipeline_assistant_spark.catalog import load_table
     from ai_powered_data_pipeline_assistant_spark.streaming import neardup
     from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
-        _partner_pruned,
-        _state_tables,
+        partner_pruned,
         drop_state,
         process_neardup_batch,
     )
@@ -516,12 +356,12 @@ def test_overcap_partner_fetch_uses_bucketed_semi_join(spark, sf_dir, monkeypatc
         # state table: semi join, state side scanned in its bucket layout
         # (Bucketed: true), the only Exchange is the id frame's
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        tables = _state_tables(f"{tmp_b}/state")
+        tables = _tables(f"{tmp_b}/state")
         state_df = spark.table(tables["postings"]).select("doc_id", "h")
         cand_ids = (
             spark.table(tables["postings"]).select("doc_id").distinct().limit(20)
         )
-        pruned = _partner_pruned(state_df, None, cand_ids)
+        pruned = partner_pruned(state_df, None, cand_ids)
         plan = pruned._jdf.queryExecution().executedPlan().toString()
         assert "LeftSemi" in plan, plan
         assert "Bucketed: true" in plan, plan
@@ -543,7 +383,6 @@ def test_batch_replay_reproduces_identical_pairs_and_state(spark, sf_dir):
     partition; the strictly-pre-batch state filter pins that closed."""
     from ai_powered_data_pipeline_assistant_spark.catalog import load_table
     from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
-        _state_tables,
         drop_state,
         process_neardup_batch,
     )
@@ -556,7 +395,7 @@ def test_batch_replay_reproduces_identical_pairs_and_state(spark, sf_dir):
         _run_stream_once(spark, sf_dir, tmp)
         pairs_dir = f"{tmp}/pairs"
         state_dir = f"{tmp}/state"
-        tables = _state_tables(state_dir)
+        tables = _tables(state_dir)
         pairs_before = sorted(
             map(tuple, spark.read.parquet(pairs_dir).collect())
         )
@@ -591,7 +430,6 @@ def test_replay_after_compaction_in_crash_window(spark, sf_dir):
     batch_id provenance (round-9 review)."""
     from ai_powered_data_pipeline_assistant_spark.catalog import load_table
     from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
-        _state_tables,
         compact_neardup_state,
         drop_state,
         process_neardup_batch,
@@ -605,7 +443,7 @@ def test_replay_after_compaction_in_crash_window(spark, sf_dir):
         _run_stream_once(spark, sf_dir, tmp)
         pairs_dir = f"{tmp}/pairs"
         state_dir = f"{tmp}/state"
-        tables = _state_tables(state_dir)
+        tables = _tables(state_dir)
         pairs_before = sorted(
             map(tuple, spark.read.parquet(pairs_dir).collect())
         )
@@ -651,7 +489,6 @@ def test_rearrived_doc_id_fails_loudly_but_replay_passes(spark, sf_dir):
 
     from ai_powered_data_pipeline_assistant_spark.catalog import load_table
     from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
-        _state_tables,
         drop_state,
         process_neardup_batch,
     )
@@ -669,7 +506,7 @@ def test_rearrived_doc_id_fails_loudly_but_replay_passes(spark, sf_dir):
         )
         b0 = docs.filter(F.col("doc_id") % 2 == 0)
         process_neardup_batch(b0, 0, state_dir, pairs_dir)
-        tables = _state_tables(state_dir)
+        tables = _tables(state_dir)
         state_before = {k: spark.table(n).count() for k, n in tables.items()}
 
         # replay of batch 0 (same batch_id): legal, state unchanged

@@ -1,9 +1,8 @@
 """Streaming perceptual gate (streaming/phash_stream.py) ≡ batch banded
 pHash. The parity operator is oracle-checked (test_oracle_parity); this
 pins the streaming machinery: non-vacuous cross-batch AND within-batch
-pairs, replay idempotency, re-arrival enforcement, compaction row
-preservation + post-compaction ingest, and fresh-session
-re-registration."""
+pairs, replay idempotency, re-arrival enforcement, and compaction row
+preservation + post-compaction ingest."""
 
 from __future__ import annotations
 
@@ -17,11 +16,13 @@ from ai_powered_data_pipeline_assistant_spark.operators.multimodal import (
     media_table,
 )
 from ai_powered_data_pipeline_assistant_spark.streaming.phash_stream import (
-    _create_state,
-    _state_tables,
+    STATE_SPECS,
     compact_phash_state,
     drop_state,
     process_phash_batch,
+)
+from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
+    state_tables,
 )
 
 
@@ -79,7 +80,7 @@ def test_replay_and_rearrival(spark, sf_dir, dirs):
     try:
         process_phash_batch(b0, 0, state, pairs_dir)
         process_phash_batch(b1, 1, state, pairs_dir)
-        tables = _state_tables(state)
+        tables = state_tables(state, STATE_SPECS)
         snap = lambda: {  # noqa: E731
             k: sorted(map(tuple, spark.table(n).collect()))
             for k, n in tables.items()
@@ -115,8 +116,8 @@ def test_replay_and_rearrival(spark, sf_dir, dirs):
 
 def test_compaction_preserves_state_and_stream_continues(spark, sf_dir, dirs):
     """Compaction folds all but the newest batch partition, preserves
-    every row, survives a fresh-session re-registration, and later
-    batches ingest against the compacted layout."""
+    every row, and later batches ingest against the compacted layout
+    (re-registration: tests/test_state_lifecycle.py)."""
     state, pairs_dir = dirs
     media = _media(spark, sf_dir)
     nb = 4
@@ -125,7 +126,7 @@ def test_compaction_preserves_state_and_stream_continues(spark, sf_dir, dirs):
             process_phash_batch(
                 media.filter(F.col("media_id") % nb == i), i, state, pairs_dir
             )
-        tables = _state_tables(state)
+        tables = state_tables(state, STATE_SPECS)
         rows_before = {
             k: sorted(
                 map(tuple, spark.table(n).drop("batch_id").collect())
@@ -143,15 +144,6 @@ def test_compaction_preserves_state_and_stream_continues(spark, sf_dir, dirs):
                 for r in spark.table(n).select("batch_id").distinct().collect()
             }
             assert bids == {-1, 1}, (k, bids)  # history + newest
-
-        # fresh session: drop catalog entries, re-register from files
-        for n in tables.values():
-            spark.sql(f"DROP TABLE {n}")
-        _create_state(spark, state, tables)
-        for k, n in tables.items():
-            assert sorted(
-                map(tuple, spark.table(n).drop("batch_id").collect())
-            ) == rows_before[k]
 
         process_phash_batch(
             media.filter(F.col("media_id") % nb == 2), 2, state, pairs_dir

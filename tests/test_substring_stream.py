@@ -9,12 +9,19 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from ai_powered_data_pipeline_assistant_spark.streaming import (
+    state_compaction as sc,
+)
 from ai_powered_data_pipeline_assistant_spark.streaming.substring_stream import (
-    _state_table,
+    STATE_SPECS,
     compact_substring_state,
     drop_state,
     process_substring_batch,
 )
+
+
+def _state_table(state_dir):
+    return sc.state_tables(state_dir, STATE_SPECS)["wins"]
 
 
 @pytest.fixture()
@@ -197,41 +204,6 @@ def test_replay_after_compaction_in_crash_window(spark, tmpdirs):
         drop_state(spark, state_dir)
 
 
-def test_crash_between_swap_renames_refuses_empty_bootstrap(spark, tmpdirs):
-    """A kill between swap_dirs' two renames leaves no live wins dir but
-    an intact aside copy; the next batch must REFUSE to bootstrap empty
-    state (which would silently forget the seen-window corpus) and name
-    the surviving copy."""
-    import pytest as _pytest
-
-    from ai_powered_data_pipeline_assistant_spark import hadoop_fs
-
-    state_dir, out_dir, _ = tmpdirs
-    try:
-        process_substring_batch(
-            _mkdocs(spark, [(0, _TEXT_A)]), 0, state_dir, out_dir
-        )
-        live = f"{state_dir}/wins"
-        aside = f"{state_dir}/wins.old_deadbeef"
-        assert hadoop_fs.rename(spark, live, aside)  # the crash point
-        drop_state(spark, state_dir)  # restart: fresh catalog
-        with _pytest.raises(RuntimeError, match="crashed compaction"):
-            process_substring_batch(
-                _mkdocs(spark, [(1, _TEXT_A)]), 1, state_dir, out_dir
-            )
-        # operator repair: move the intact copy back → stream resumes
-        assert hadoop_fs.rename(spark, aside, live)
-        process_substring_batch(
-            _mkdocs(spark, [(1, _TEXT_A)]), 1, state_dir, out_dir
-        )
-        acct = {
-            r["doc_id"]: r for r in spark.read.parquet(out_dir).collect()
-        }
-        assert acct[1]["tokens_removed"] == 10  # corpus remembered
-    finally:
-        drop_state(spark, state_dir)
-
-
 def test_state_side_reads_exchange_free(spark, tmpdirs):
     """The module's scale claim, plan-asserted (the near-dup module's
     Exchange-free pin, applied to the wins table): joining a probe frame
@@ -344,14 +316,14 @@ def test_compaction_rebuckets_state_to_new_width(spark, tmpdirs):
     picks the new width up from the marker (not the module constant),
     and post-re-bucket batches still gate the full pre-compaction
     corpus."""
-    from ai_powered_data_pipeline_assistant_spark.streaming.substring_stream import (
-        SUBSTR_STATE_BUCKETS,
-        _state_buckets,
-    )
-
     state_dir, out_dir, _ = tmpdirs
     table = _state_table(state_dir)
-    new_width = SUBSTR_STATE_BUCKETS * 2
+    new_width = sc.STATE_BUCKETS * 2
+
+    def width():
+        ddl = spark.sql(f"SHOW CREATE TABLE {table}").first()[0]
+        return int(ddl.split(" BUCKETS")[0].rsplit("INTO ", 1)[1])
+
     try:
         process_substring_batch(
             _mkdocs(spark, [(0, _TEXT_A)]), 0, state_dir, out_dir
@@ -362,16 +334,15 @@ def test_compaction_rebuckets_state_to_new_width(spark, tmpdirs):
         before = sorted(
             r["h"] for r in spark.table(table).select("h").collect()
         )
-        assert _state_buckets(spark, state_dir) == SUBSTR_STATE_BUCKETS
+        assert width() == sc.STATE_BUCKETS
         compact_substring_state(spark, state_dir, n_buckets=new_width)
-        assert _state_buckets(spark, state_dir) == new_width
+        assert width() == new_width
         # fresh session: drop the catalog entry, force re-registration
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         process_substring_batch(
             _mkdocs(spark, [(2, _TEXT_A)]), 2, state_dir, out_dir
         )
-        ddl = spark.sql(f"SHOW CREATE TABLE {table}").first()[0]
-        assert f"INTO {new_width} BUCKETS" in ddl, ddl
+        assert width() == new_width
         acct = {
             r["doc_id"]: r for r in spark.read.parquet(out_dir).collect()
         }
