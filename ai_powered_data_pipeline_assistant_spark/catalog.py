@@ -8,6 +8,8 @@ real cluster these would be partitioned Delta/Iceberg tables.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
@@ -51,12 +53,25 @@ _SCHEMA_CACHE: dict = {}
 
 
 def _parquet_mtime(path: str) -> float:
-    import os
-
     try:
         return os.path.getmtime(path)
     except OSError:
         return -1.0
+
+
+def _local_bytes(path: str) -> int:
+    """On-disk size of a local parquet dataset: the file's size, or the
+    summed size of the data files under a directory dataset (a directory's
+    own size is its inode's, ~4 KiB, which would cap the width at 1).
+    Raises OSError for a path with no local size."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    return sum(
+        os.path.getsize(os.path.join(root, name))
+        for root, _dirs, names in os.walk(path)
+        for name in names
+        if not name.startswith((".", "_"))
+    )
 
 
 def load_table(
@@ -123,9 +138,7 @@ def load_table(
         # and the whole branch is a no-op.
         target = spark.sparkContext.defaultParallelism
         try:
-            import os
-
-            nbytes = os.path.getsize(path)
+            nbytes = _local_bytes(path)
             per_part = (
                 min_shard_bytes
                 if min_shard_bytes is not None

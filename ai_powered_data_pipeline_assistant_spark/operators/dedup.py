@@ -27,6 +27,8 @@ rounded at 6 decimals) so results are bit-identical across engines.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -61,7 +63,7 @@ MAX_SHINGLE_DF = 1000
 
 
 # ---------------------------------------------------------------- helpers
-def _shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Distinct (doc, shingle-hash) postings.
 
     The k-word shingle is hashed to its 60-bit md5-prefix int BEFORE the
@@ -271,7 +273,7 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via shingle postings self-join."""
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    return _pair_jaccard(_shingles(docs), JACCARD_THRESHOLD, pin=pin)
+    return _pair_jaccard(shingles(docs), JACCARD_THRESHOLD, pin=pin)
 
 
 CONTAINMENT_THRESHOLD = 0.6
@@ -290,7 +292,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str,
     derived from that single row) — no extra join work over plain Jaccard.
     """
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    postings = _shingles(docs)
+    postings = shingles(docs)
     df_w = F.count("*").over(Window.partitionBy("h"))
     postings = (
         postings.withColumn("_df", df_w)
@@ -363,7 +365,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     would cost 16 hashes per row (no CSE across aggregate expressions).
     """
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    postings = _shingles(docs)
+    postings = shingles(docs)
     h = F.col("h") % HASH_MOD
     aggs = [
         F.min((F.lit(PERM_A[j]) * h + F.lit(PERM_B[j])) % HASH_MOD).alias(f"m{j}")
@@ -396,22 +398,36 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs_for(docs)
 
 
-def minhash_sig_aggs() -> list:
+# The MinHash permutation aggregates and the LSH band explode depend only
+# on the constants above, yet building their Columns costs ~1.3k JVM round
+# trips — paid by every streaming batch when rebuilt per call. They are
+# built once per SparkContext: cached on its applicationId, so a restarted
+# session never receives Columns bound to a dead one.
+def _app_id() -> str:
+    from pyspark import SparkContext
+
+    return SparkContext._active_spark_context.applicationId
+
+
+@functools.lru_cache(maxsize=1)
+def _sig_aggs(_app: str) -> tuple[Column, ...]:
+    h = F.col("h") % HASH_MOD
+    return tuple(
+        F.min((F.lit(PERM_A[j]) * h + F.lit(PERM_B[j])) % HASH_MOD).alias(f"m{j}")
+        for j in range(N_PERMS)
+    ) + (F.count("*").alias("sz"),)
+
+
+def minhash_sig_aggs() -> tuple[Column, ...]:
     """The signature aggregation block (16 permutation minima + distinct-
     shingle count) — shared by the batch operators and the incremental
     streaming state builder (streaming/neardup.py) so signature math can
     never drift between them."""
-    h = F.col("h") % HASH_MOD
-    return [
-        F.min((F.lit(PERM_A[j]) * h + F.lit(PERM_B[j])) % HASH_MOD).alias(f"m{j}")
-        for j in range(N_PERMS)
-    ] + [F.count("*").alias("sz")]
+    return _sig_aggs(_app_id())
 
 
-def minhash_band_frame(sigs: DataFrame) -> DataFrame:
-    """(doc_id, band, band_key) from a signature frame — one explode, the
-    LSH blocking key both the batch self-join and the streaming
-    state-vs-batch join use."""
+@functools.lru_cache(maxsize=1)
+def _band_columns(_app: str) -> tuple[Column, tuple[Column, ...]]:
     band_structs = [
         F.struct(
             F.lit(band).alias("band"),
@@ -425,11 +441,18 @@ def minhash_band_frame(sigs: DataFrame) -> DataFrame:
         )
         for band in range(N_BANDS)
     ]
-    return sigs.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bk")
-    ).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
+    return F.explode(F.array(*band_structs)).alias("bk"), (
+        F.col("bk.band").alias("band"),
+        F.col("bk.band_key").alias("band_key"),
     )
+
+
+def minhash_band_frame(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band, band_key) from a signature frame — one explode, the
+    LSH blocking key both the batch self-join and the streaming
+    state-vs-batch join use."""
+    bk, fields = _band_columns(_app_id())
+    return sigs.select("doc_id", bk).select("doc_id", *fields)
 
 
 def minhash_verified_pairs(
@@ -491,7 +514,7 @@ def minhash_lsh_pairs_for(
     instead (same signatures, same band join, different pairing rule)."""
     if pair_cond is None:
         pair_cond = lambda a, b: a < b  # noqa: E731
-    postings = _shingles(docs).transform(materialize)
+    postings = shingles(docs).transform(materialize)
     sigs = postings.groupBy("doc_id").agg(*minhash_sig_aggs()).transform(materialize)
     bands = minhash_band_frame(sigs)
     a = bands.select(F.col("doc_id").alias("a_id"), "band", "band_key")
@@ -538,7 +561,7 @@ def dedup_method_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _simhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    # Dedupe IN-ROW (array_distinct) before exploding — the `_shingles`
+    # Dedupe IN-ROW (array_distinct) before exploding — the `shingles`
     # discipline (round 12): doc_id is unique per input row, so
     # (doc_id, tok) is globally distinct by construction and the old
     # explode→distinct() exchange over the whole token stream disappears;
@@ -661,7 +684,7 @@ def decontaminate(spark: SparkSession, sf_dir: str,
     boilerplate shingle shared with an eval doc can't multiply the output.
     """
     docs = load_table(spark, sf_dir, "documents")
-    posts = _shingles(docs).transform(materialize)
+    posts = shingles(docs).transform(materialize)
     eval_p = posts.filter((F.col("doc_id") % eval_mod) == 0).select(
         F.col("doc_id").alias("eval_doc_id"), "h"
     )
@@ -1056,7 +1079,7 @@ def doc_duplication_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     complementing `span_dedup` (which removes) and the pair generators
     (which enumerate): this scores every doc in one pass, no pair blow-up.
 
-    Scale (100 TB): reuses the map-only `_shingles` postings build; the
+    Scale (100 TB): reuses the map-only `shingles` postings build; the
     shingle document-frequency is one map-side-combined groupBy on the
     8-byte hash; the flag join is hash-equi on the same key so it rides the
     df shuffle's partitioning. Work is linear in corpus shingles — the
@@ -1064,7 +1087,7 @@ def doc_duplication_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings self-join the pair ops need.
     """
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    postings = _shingles(docs).transform(materialize)
+    postings = shingles(docs).transform(materialize)
     dfreq = postings.groupBy("h").agg(F.count("*").alias("df"))
     out = (
         postings.join(dfreq, "h")

@@ -53,6 +53,7 @@ grids) — and the retrieval claim by `ivfpq_recall_audit`'s literal bounds.
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -60,13 +61,17 @@ from pyspark.sql.functions import broadcast
 
 from ai_powered_data_pipeline_assistant_spark.catalog import load_table
 from ai_powered_data_pipeline_assistant_spark.execution import materialize
+from ai_powered_data_pipeline_assistant_spark.functions.vector_math import (
+    cosine_similarity,
+)
 from ai_powered_data_pipeline_assistant_spark.operators.pq import (
     PQ_ITERS,
     PQ_K,
     PQ_M,
     PQ_SUBDIM,
-    _assign_codes,
+    PQEncoder,
     _train_pq,
+    assign_codes,
 )
 from ai_powered_data_pipeline_assistant_spark.operators.vector import (
     _per_query_topk,
@@ -93,24 +98,39 @@ IVFPQ_RECALL_FLOOR = 0.15
 IVFPQ_RERANK_FLOOR = 0.25
 
 
-def _residual_frame(
-    emb: DataFrame, centroids: DataFrame
-) -> DataFrame:
-    """Assign each vector to its nearest coarse list and attach the
-    residual x − c(x): one broadcast-join scan, no shuffle of vectors."""
-    assigned = assign_lists(
-        emb.select("vec_id", "embedding"), "embedding", centroids, "list_id", 1
-    )
-    return assigned.join(broadcast(centroids), "list_id").select(
-        "vec_id",
-        "list_id",
-        F.col("embedding").alias("raw"),
-        F.zip_with(
+class ResidualRouter:
+    """Route each vector to its nearest coarse list and attach the
+    residual x − c(x): one broadcast-join scan, no shuffle of vectors.
+    The routing cosine and the residual Columns are built once, at
+    construction, and reused by every frame routed through this router
+    (the IVF-PQ index keeps one with its cached sidecars)."""
+
+    def __init__(self, centroids: DataFrame):
+        self.centroids = centroids
+        self.sim = cosine_similarity(F.col("embedding"), F.col("centroid"))
+        self.residual = F.zip_with(
             F.col("embedding"),
             F.col("centroid"),
             lambda x, y: x.cast("double") - y.cast("double"),
-        ).alias("embedding"),
-    )
+        ).alias("embedding")
+
+    def __call__(self, emb: DataFrame) -> DataFrame:
+        assigned = assign_lists(
+            emb.select("vec_id", "embedding"), "embedding", self.centroids,
+            "list_id", 1, sim=self.sim,
+        )
+        return assigned.join(broadcast(self.centroids), "list_id").select(
+            "vec_id",
+            "list_id",
+            F.col("embedding").alias("raw"),
+            self.residual,
+        )
+
+
+def residual_frame(emb: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Residuals of ``emb`` against ``centroids`` through a freshly built
+    `ResidualRouter` (one-shot callers: training, reference encodes)."""
+    return ResidualRouter(centroids)(emb)
 
 
 def _build_index(
@@ -137,12 +157,12 @@ def _build_index(
         int(r["list_id"]): [float(v) for v in r["centroid"]]
         for r in centroids.collect()
     }
-    resid = _residual_frame(emb, centroids).transform(materialize)
+    resid = residual_frame(emb, centroids).transform(materialize)
     pq_cents = _train_pq(
         resid, m_count, subdim, k_codes, iters, init_offset=n_lists,
         train_sample=train_sample,
     )
-    coded = _assign_codes(resid, pq_cents, subdim)
+    coded = assign_codes(resid, pq_cents, subdim)
     codes = coded.select(
         "vec_id", "list_id", "raw", *[F.col(f"_c{m}") for m in range(m_count)]
     ).transform(materialize)
@@ -371,16 +391,24 @@ def _exact_global_topk(
     return out
 
 
-_ARTIFACT_CACHE: dict[tuple, tuple] = {}
+class IvfpqArtifacts(NamedTuple):
+    """A persisted index's broadcast-sized sidecars plus its encoder."""
+
+    centroids: DataFrame  # coarse routing frame (list_id, centroid)
+    cent_map: dict[int, list[float]]  # its driver-side map
+    pq_cents: list[list[list[float]]]  # residual codebooks [m][code]
+    route: ResidualRouter  # list routing + residual, against `centroids`
+    encode: PQEncoder  # residual → codes, against `pq_cents`
+
+
+_ARTIFACT_CACHE: dict[tuple, IvfpqArtifacts] = {}
 # FIFO cap: the maintenance audits churn one-shot mkdtemp layouts whose
 # keys never recur, so same-path eviction alone cannot bound the cache; a
 # deployment serves a handful of long-lived indexes, far under this.
 _ARTIFACT_CACHE_MAX = 8
 
 
-def _read_ivfpq_artifacts(
-    spark: SparkSession, layout: str
-) -> tuple[DataFrame, dict[int, list[float]], list[list[list[float]]]]:
+def read_ivfpq_artifacts(spark: SparkSession, layout: str) -> IvfpqArtifacts:
     """Load the broadcast-sized index sidecars from a persisted IVF-PQ
     layout (sources/layout.write_ivfpq_layout): the coarse routing frame,
     its driver map, and the residual PQ codebooks. Parquet stores doubles
@@ -388,21 +416,30 @@ def _read_ivfpq_artifacts(
     which is what lets the incremental-maintenance parity compare an
     appended index against a one-pass re-encode exactly.
 
+    The entry also holds the index's ENCODER: a `ResidualRouter` over the
+    coarse frame and a `PQEncoder` over the codebooks, i.e. the routing
+    cosine, residual, per-subspace distance-array and argmin Columns. They
+    depend only on the sidecars, so every append against the layout
+    reuses the same Column objects instead of rebuilding the codebook
+    literal (~6k JVM round trips) per batch; the codes are the ones a
+    fresh `assign_codes(residual_frame(...))` computes, because the
+    expressions are the same.
+
     Process-cached per (session, layout path, sidecar mtimes): the
     sidecars are write-once index headers (n_lists + M·K rows) that every
     query batch needs — a deployment loads them once per session, like
     FAISS reading an index header, not twice per query. A rebuilt layout
-    (new sidecar mtime) invalidates the entry; the applicationId in the
-    key keeps a restarted session from being handed frames bound to a
-    dead session; same-path eviction keeps one entry per layout path and
-    a FIFO cap bounds the churned one-shot audit layouts (ADVICE r8 +
-    round-9 review). Sidecar stamps are the max FILE mtime under each
-    sidecar dir via the Hadoop FileSystem API — an os.stat stamp reads -1
-    forever on s3a://hdfs:// paths, and a DIRECTORY FileStatus mtime is
-    synthetic 0 on S3A — either would freeze the cache across
-    `rebuild_ivfpq_layout` swaps and serve stale centroids/codebooks
-    against retrained codes. Cheap: the sidecars hold a handful of files
-    (n_lists rows + M·K rows)."""
+    (new sidecar mtime) invalidates the entry, encoder included; the
+    applicationId in the key keeps a restarted session from being handed
+    frames or Columns bound to a dead session; same-path eviction keeps
+    one entry per layout path and a FIFO cap bounds the churned one-shot
+    audit layouts. Sidecar stamps are the
+    max FILE mtime under each sidecar dir via the Hadoop FileSystem API —
+    an os.stat stamp reads -1 forever on s3a://hdfs:// paths, and a
+    DIRECTORY FileStatus mtime is synthetic 0 on S3A — either would
+    freeze the cache across `rebuild_ivfpq_layout` swaps and serve stale
+    centroids/codebooks against retrained codes. Cheap: the sidecars hold
+    a handful of files (n_lists rows + M·K rows)."""
     from ai_powered_data_pipeline_assistant_spark import hadoop_fs
 
     key = (
@@ -429,7 +466,10 @@ def _read_ivfpq_artifacts(
     ]
     for r in spark.read.parquet(f"{layout}/codebooks").collect():
         pq_cents[int(r["m"])][int(r["code"])] = [float(v) for v in r["centroid"]]
-    out = (centroids, cent_map, pq_cents)
+    out = IvfpqArtifacts(
+        centroids, cent_map, pq_cents,
+        ResidualRouter(centroids), PQEncoder(pq_cents, PQ_SUBDIM),
+    )
     _ARTIFACT_CACHE[key] = out
     return out
 
@@ -457,7 +497,7 @@ def ann_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     layout = ensure_ivfpq_layout(spark, sf_dir)
-    centroids, cent_map, pq_cents = _read_ivfpq_artifacts(spark, layout)
+    centroids, cent_map, pq_cents, _, _ = read_ivfpq_artifacts(spark, layout)
     queries = _query_vectors(spark, sf_dir, IVFPQ_N_QUERIES)
     lut_df, probe_pairs = _route_and_luts(
         spark, queries, centroids, cent_map, pq_cents,
@@ -640,9 +680,9 @@ def ivfpq_incremental_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             set(before.get(lid, [])) < set(after.get(lid, []))
             for lid in routed
         )
-        centroids, cent_map, pq_cents = _read_ivfpq_artifacts(spark, tmp)
-        ref = _assign_codes(
-            _residual_frame(emb, centroids), pq_cents, PQ_SUBDIM
+        centroids, cent_map, pq_cents, _, _ = read_ivfpq_artifacts(spark, tmp)
+        ref = assign_codes(
+            residual_frame(emb, centroids), pq_cents, PQ_SUBDIM
         ).select("vec_id", "list_id", *[F.col(f"_c{m}") for m in range(PQ_M)])
         ref = materialize(ref)
         inc = _read_codes(spark, codes_dir)

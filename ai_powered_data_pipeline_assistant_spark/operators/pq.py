@@ -79,48 +79,69 @@ def _sq_dist(sub_col, centroid: list[float]):
     )
 
 
-def _assign_codes(
+class PQEncoder:
+    """Code assignment against ONE fixed codebook: a two-step projection
+    adding, per subspace m, the argmin code ``_c{m}`` and its squared
+    distance ``_d{m}``. The per-subspace distance vector is ONE
+    higher-order ``transform`` over the centroid matrix literal
+    (array<array<double>>), then argmin = array_position of array_min —
+    first-match on equal values, so ties break to the lowest code,
+    matching the golden replica. Compared to materializing PQ_M·PQ_K
+    distance columns + when-chains this keeps the Catalyst plan tiny (the
+    naive form spent ~25 s per training run in analysis/codegen alone).
+
+    The Columns are built once, at construction: the codebook literal is
+    M·K·subdim doubles, and building it through ``F.lit`` costs one JVM
+    round trip per element (~6k per encode). A Column holds no data, so
+    one encoder applies to any number of frames carrying ``embedding`` —
+    the IVF-PQ index keeps its encoder with its cached sidecars
+    (`operators.ivfpq.read_ivfpq_artifacts`), while the Lloyd loop builds
+    a fresh one per iteration because its codebook changes every round."""
+
+    def __init__(self, cents: list[list[list[float]]], subdim: int):
+        m_count = len(cents)
+
+        def darr(m: int):
+            # NB: binding m via a lambda default would add a second
+            # parameter, which PySpark reads as the (element, index)
+            # lambda form.
+            sub = _sub(F.col("embedding"), m, subdim)
+            return F.transform(
+                F.lit(cents[m]),
+                lambda c: F.aggregate(
+                    F.zip_with(
+                        sub,
+                        c,
+                        lambda x, y: (x.cast("double") - y)
+                        * (x.cast("double") - y),
+                    ),
+                    F.lit(0.0),
+                    lambda acc, v: acc + v,
+                ),
+            )
+
+        self.darrs = [darr(m).alias(f"_darr{m}") for m in range(m_count)]
+        self.picks = []
+        for m in range(m_count):
+            best = F.array_min(F.col(f"_darr{m}"))
+            self.picks.append(
+                (F.array_position(F.col(f"_darr{m}"), best) - 1)
+                .cast("int")
+                .alias(f"_c{m}")
+            )
+            self.picks.append(best.alias(f"_d{m}"))
+
+    def __call__(self, emb: DataFrame) -> DataFrame:
+        staged = emb.select("*", *self.darrs)
+        return staged.select(*emb.columns, *self.picks)
+
+
+def assign_codes(
     emb: DataFrame, cents: list[list[list[float]]], subdim: int
 ) -> DataFrame:
-    """One two-step projection adding, per subspace m, the argmin code
-    ``_c{m}`` and its squared distance ``_d{m}``. The per-subspace distance
-    vector is ONE higher-order ``transform`` over the centroid matrix
-    literal (array<array<double>>), then argmin = array_position of
-    array_min — first-match on equal values, so ties break to the lowest
-    code, matching the golden replica. Compared to materializing PQ_M·PQ_K
-    distance columns + when-chains this keeps the Catalyst plan tiny (the
-    naive form spent ~25 s per training run in analysis/codegen alone)."""
-    m_count = len(cents)
-
-    def darr(m: int):
-        # NB: binding m via a lambda default would add a second parameter,
-        # which PySpark reads as the (element, index) lambda form.
-        sub = _sub(F.col("embedding"), m, subdim)
-        return F.transform(
-            F.lit(cents[m]),
-            lambda c: F.aggregate(
-                F.zip_with(
-                    sub,
-                    c,
-                    lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-
-    darrs = [darr(m).alias(f"_darr{m}") for m in range(m_count)]
-    staged = emb.select("*", *darrs)
-    picks = []
-    for m in range(m_count):
-        best = F.array_min(F.col(f"_darr{m}"))
-        picks.append(
-            (F.array_position(F.col(f"_darr{m}"), best) - 1)
-            .cast("int")
-            .alias(f"_c{m}")
-        )
-        picks.append(best.alias(f"_d{m}"))
-    return staged.select(*emb.columns, *picks)
+    """Encode ``emb`` against ``cents`` with a freshly built `PQEncoder`
+    (one-shot callers: training iterations, reference encodes)."""
+    return PQEncoder(cents, subdim)(emb)
 
 
 PQ_TRAIN_SAMPLE_MOD = 1_000_000  # hash-sample granularity (ppm)
@@ -185,7 +206,7 @@ def _train_pq(
             F.pmod(F.xxhash64(F.col("vec_id")), F.lit(PQ_TRAIN_SAMPLE_MOD)) < cut
         ).transform(materialize)
     for _ in range(iters):
-        assigned = _assign_codes(train_emb, cents, subdim)
+        assigned = assign_codes(train_emb, cents, subdim)
         stacked = assigned.select(
             F.explode(
                 F.array(
@@ -224,7 +245,7 @@ def _encoded(spark: SparkSession, sf_dir: str, train_sample: float | None = None
     cents = _train_pq(
         emb, PQ_M, PQ_SUBDIM, PQ_K, PQ_ITERS, train_sample=train_sample
     )
-    assigned = _assign_codes(emb, cents, PQ_SUBDIM)
+    assigned = assign_codes(emb, cents, PQ_SUBDIM)
     packed = assigned.select(
         "vec_id",
         "embedding",
@@ -409,7 +430,7 @@ def pq_probe_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pq_probe_rows(), "vec_id long, embedding array<double>"
     ).repartition(3)
     cents = _train_pq(emb, PQ_PROBE_M, PQ_PROBE_SUBDIM, PQ_PROBE_K, PQ_PROBE_ITERS)
-    assigned = _assign_codes(emb, cents, PQ_PROBE_SUBDIM)
+    assigned = assign_codes(emb, cents, PQ_PROBE_SUBDIM)
     stats = (
         assigned.select(
             F.explode(

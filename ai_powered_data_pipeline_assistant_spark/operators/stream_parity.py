@@ -1854,8 +1854,8 @@ def ann_ingest_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         IVFPQ_N_QUERIES,
         IVFPQ_RERANK,
         IVFPQ_TOPK,
-        _read_ivfpq_artifacts,
-        _residual_frame,
+        read_ivfpq_artifacts,
+        residual_frame,
         _route_and_luts,
         _score_and_rerank,
     )
@@ -1863,7 +1863,7 @@ def ann_ingest_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         PQ_K,
         PQ_M,
         PQ_SUBDIM,
-        _assign_codes,
+        assign_codes,
     )
     from ai_powered_data_pipeline_assistant_spark.operators.vector import (
         _query_vectors,
@@ -1920,10 +1920,10 @@ def ann_ingest_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 *[F.col(f"_c{m}") for m in range(PQ_M)],
             )
 
-        centroids, cent_map, pq_cents = _read_ivfpq_artifacts(spark, layout)
+        centroids, cent_map, pq_cents, _, _ = read_ivfpq_artifacts(spark, layout)
         ref = materialize_barrier(
-            _assign_codes(
-                _residual_frame(emb, centroids), pq_cents, PQ_SUBDIM
+            assign_codes(
+                residual_frame(emb, centroids), pq_cents, PQ_SUBDIM
             ).select(
                 "vec_id", "list_id", *[F.col(f"_c{m}") for m in range(PQ_M)]
             )
@@ -2017,13 +2017,13 @@ def crawl_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_lsh_pairs_for,
     )
     from ai_powered_data_pipeline_assistant_spark.operators.ivfpq import (
-        _read_ivfpq_artifacts,
-        _residual_frame,
+        read_ivfpq_artifacts,
+        residual_frame,
     )
     from ai_powered_data_pipeline_assistant_spark.operators.pq import (
         PQ_M,
         PQ_SUBDIM,
-        _assign_codes,
+        assign_codes,
     )
     from ai_powered_data_pipeline_assistant_spark.sources.layout import (
         write_ivfpq_layout_for,
@@ -2090,15 +2090,15 @@ def crawl_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_stream = got_curated.count()
         n_batch = want_curated.count()
 
-        centroids, _cm, pq_cents = _read_ivfpq_artifacts(spark, layout)
+        centroids, _cm, pq_cents, _, _ = read_ivfpq_artifacts(spark, layout)
         kept_vecs = base.unionByName(
             arrivals.join(want_curated, "doc_id").select(
                 F.col("doc_id").alias("vec_id"), "embedding"
             )
         )
         ref = materialize_barrier(
-            _assign_codes(
-                _residual_frame(kept_vecs, centroids), pq_cents, PQ_SUBDIM
+            assign_codes(
+                residual_frame(kept_vecs, centroids), pq_cents, PQ_SUBDIM
             ).select(
                 "vec_id", "list_id", *[F.col(f"_c{m}") for m in range(PQ_M)]
             )

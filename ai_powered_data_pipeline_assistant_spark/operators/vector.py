@@ -20,7 +20,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
@@ -145,15 +145,19 @@ def ivf_centroids(emb: DataFrame, n_lists: int) -> DataFrame:
 
 
 def assign_lists(
-    df: DataFrame, vec_col: str, centroids: DataFrame, out_col: str, keep: int
+    df: DataFrame, vec_col: str, centroids: DataFrame, out_col: str, keep: int,
+    sim: Column | None = None,
 ) -> DataFrame:
     """Nearest-``keep`` centroid assignment: one broadcast join + window
     argmax over the fixed-point similarity (deterministic tie-break on
-    list_id) — a single scan of ``df``, no shuffle of the vectors."""
+    list_id) — a single scan of ``df``, no shuffle of the vectors.
+    ``sim`` is that similarity Column, prebuilt by callers that route
+    many frames (`ivfpq.ResidualRouter`); it must equal
+    ``cosine_similarity(F.col(vec_col), F.col("centroid"))``."""
+    if sim is None:
+        sim = cosine_similarity(F.col(vec_col), F.col("centroid"))
     scored = df.join(broadcast(centroids)).select(
-        *df.columns,
-        "list_id",
-        cosine_similarity(F.col(vec_col), F.col("centroid")).alias("c_sim"),
+        *df.columns, "list_id", sim.alias("c_sim")
     )
     w = Window.partitionBy(*df.columns[:1]).orderBy(F.desc("c_sim"), "list_id")
     return (

@@ -250,24 +250,16 @@ def append_ivfpq_layout(
     `ensure_ivfpq_layout` path."""
     import os
 
+    from pyspark.sql import Observation
+
     from ai_powered_data_pipeline_assistant_spark.operators.ivfpq import (
-        _read_ivfpq_artifacts,
-        _residual_frame,
+        read_ivfpq_artifacts,
     )
-    from ai_powered_data_pipeline_assistant_spark.operators.pq import (
-        PQ_M,
-        PQ_SUBDIM,
-        _assign_codes,
-    )
+    from ai_powered_data_pipeline_assistant_spark.operators.pq import PQ_M
 
-    from ai_powered_data_pipeline_assistant_spark.execution import materialize
-
-    centroids, _cent_map, pq_cents = _read_ivfpq_artifacts(spark, layout_path)
-    # materialized: feeds both the codes write and the routed-lists collect
-    resid = materialize(
-        _residual_frame(new_emb.select("vec_id", "embedding"), centroids)
-    )
-    coded = _assign_codes(resid, pq_cents, PQ_SUBDIM)
+    art = read_ivfpq_artifacts(spark, layout_path)
+    # the index's cached encoder: the same Columns every append reuses
+    coded = art.encode(art.route(new_emb.select("vec_id", "embedding")))
     new_codes = coded.select(
         "vec_id", "list_id", *[F.col(f"_c{m}") for m in range(PQ_M)]
     )
@@ -278,7 +270,14 @@ def append_ivfpq_layout(
     # files per append, which every later pruned query re-lists. Keyed
     # rebalance groups each list's rows into whole output partitions at
     # AQE's advisory size, so an append lands ~one file per routed list.
-    new_codes = new_codes.hint("rebalance", "list_id")
+    # The routed list ids ride along on the write itself: one observed
+    # aggregate instead of a second job over the encoded batch. Observed
+    # ABOVE the rebalance — below it, an empty batch's map stage is
+    # replaced by an empty relation and its metrics are never reported.
+    routed = Observation()
+    new_codes = new_codes.hint("rebalance", "list_id").observe(
+        routed, F.collect_set("list_id").alias("lists")
+    )
     if batch_id is None:
         new_codes.write.mode("append").partitionBy("list_id").parquet(codes_path)
     else:
@@ -289,10 +288,7 @@ def append_ivfpq_layout(
             .partitionBy("list_id", "batch_id")
             .parquet(codes_path)
         )
-    return sorted(
-        int(r["list_id"])
-        for r in resid.select("list_id").distinct().collect()
-    )
+    return sorted(int(lid) for lid in routed.get["lists"])
 
 
 def compact_ivfpq_layout(spark: SparkSession, layout_path: str) -> int:

@@ -23,9 +23,9 @@ from ai_powered_data_pipeline_assistant_spark.operators.ivfpq import (
     PQ_SUBDIM,
     PQ_K,
     _read_codes,
-    _read_ivfpq_artifacts,
     _route_and_luts,
     _score_and_rerank,
+    read_ivfpq_artifacts,
 )
 from ai_powered_data_pipeline_assistant_spark.sources.layout import (
     ivfpq_drift_decision,
@@ -157,7 +157,7 @@ def test_crawl_ingest_trips_drift_rule_and_rebuilds(spark, sf_dir):
         # recall-green on the rebuilt artifacts: corpus vectors as queries
         # re-rank to themselves (exact_d = 0 at rank 1; a duplicate copy
         # tying at distance 0 is an equally-correct hit)
-        centroids, cent_map, pq_cents = _read_ivfpq_artifacts(spark, layout)
+        centroids, cent_map, pq_cents, _, _ = read_ivfpq_artifacts(spark, layout)
         queries = spark.createDataFrame(
             [
                 (int(r["vec_id"]), [float(v) for v in r["embedding"]])

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from ai_powered_data_pipeline_assistant_spark.operators.dedup import (
     SHINGLE_K,
-    _shingles,
+    shingles,
 )
 
 
@@ -22,20 +22,20 @@ def test_short_docs_yield_no_shingles(spark):
         ],
         ["doc_id", "text"],
     )
-    got = {r["doc_id"]: 1 for r in _shingles(df).select("doc_id").distinct().collect()}
+    got = {r["doc_id"]: 1 for r in shingles(df).select("doc_id").distinct().collect()}
     assert set(got) == {5, 6}
 
 
 def test_multispace_tokenization(spark):
     # \s+ split: runs of whitespace separate tokens without empty strings.
     df = spark.createDataFrame([(1, "a  b\tc")], ["doc_id", "text"])
-    rows = _shingles(df).collect()
+    rows = shingles(df).collect()
     assert len(rows) == 1  # exactly one k=3 shingle: "a b c"
 
 
 def test_shingle_count_per_doc(spark):
     df = spark.createDataFrame([(1, "w1 w2 w3 w4 w5")], ["doc_id", "text"])
-    assert _shingles(df).count() == 5 - SHINGLE_K + 1
+    assert shingles(df).count() == 5 - SHINGLE_K + 1
 
 
 def test_fingerprints_short_docs(spark, tmp_path):

@@ -15,6 +15,7 @@ from ai_powered_data_pipeline_assistant_spark.operators.ivfpq import (
     IVFPQ_PROBE_QUERIES,
     IVFPQ_PROBE_TOPK,
     IVFPQ_TOPK,
+    PQ_M,
     _ivfpq_probe_golden,
     _ivfpq_probe_rows,
     ann_ivfpq_topk,
@@ -322,10 +323,10 @@ def test_drift_audit_decision_and_retrain_improves_qerr(spark, sf_dir):
         PQ_K,
         PQ_M,
         PQ_SUBDIM,
-        _assign_codes,
         _build_index,
-        _residual_frame,
+        assign_codes,
         ivfpq_drift_audit,
+        residual_frame,
     )
     from pyspark.sql import functions as F2
 
@@ -376,8 +377,8 @@ def test_drift_audit_decision_and_retrain_improves_qerr(spark, sf_dir):
         return total / n
 
     # stale: the drifted corpus encoded against BASE-trained artifacts
-    stale_codes = _assign_codes(
-        _residual_frame(post, centroids_b), pq_b, PQ_SUBDIM
+    stale_codes = assign_codes(
+        residual_frame(post, centroids_b), pq_b, PQ_SUBDIM
     )
     # fresh: full retrain on the drifted corpus (same deterministic init —
     # the first-k vectors are unchanged, so the comparison isolates the
@@ -409,7 +410,7 @@ def test_drift_rebuild_resets_baseline_and_matches_fresh_build(spark, sf_dir):
         IVFPQ_DRIFT_ID_OFFSET,
         PQ_M,
         _read_codes,
-        _read_ivfpq_artifacts,
+        read_ivfpq_artifacts,
     )
     from ai_powered_data_pipeline_assistant_spark.sources.layout import (
         append_ivfpq_layout,
@@ -471,7 +472,7 @@ def test_drift_rebuild_resets_baseline_and_matches_fresh_build(spark, sf_dir):
 
         # artifacts re-read from the swapped path (cache invalidated by
         # the new sidecar mtimes)
-        _centroids, cent_map, _pq = _read_ivfpq_artifacts(spark, live)
+        cent_map = read_ivfpq_artifacts(spark, live).cent_map
         assert len(cent_map) > 0
         new_sizes = {
             int(r["list_id"]): int(r["n"])
@@ -503,4 +504,134 @@ def test_drift_rebuild_resets_baseline_and_matches_fresh_build(spark, sf_dir):
         ), "post-rebuild stats must not trip the rule vs the NEW baseline"
     finally:
         members.unpersist()
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _batched_layout(spark, emb, tmp):
+    from ai_powered_data_pipeline_assistant_spark.sources.layout import (
+        write_ivfpq_layout_for,
+    )
+
+    layout = f"{tmp}/index"
+    write_ivfpq_layout_for(spark, emb, layout, batched=True)
+    return layout
+
+
+def _batch_codes(spark, layout, batch_id):
+    return sorted(
+        map(
+            tuple,
+            spark.read.parquet(f"{layout}/codes")
+            .filter(F.col("batch_id") == batch_id)
+            .select("vec_id", "list_id", *[f"_c{m}" for m in range(PQ_M)])
+            .collect(),
+        )
+    )
+
+
+def test_encoder_cache_reuse_and_rebuild(spark, sf_dir, monkeypatch):
+    """The index encoder lives in the artifact cache entry: training
+    leaves no entry behind, two appends against one layout reuse the same
+    Column objects, and after `rebuild_ivfpq_layout` an append encodes
+    against the NEW codebooks — its codes equal a fresh, uncached encode
+    (and differ from what the stale encoder would have written)."""
+    import shutil
+    import tempfile
+
+    from ai_powered_data_pipeline_assistant_spark.catalog import load_table
+    from ai_powered_data_pipeline_assistant_spark.operators import ivfpq
+    from ai_powered_data_pipeline_assistant_spark.operators.ivfpq import (
+        PQ_SUBDIM,
+        assign_codes,
+        read_ivfpq_artifacts,
+        residual_frame,
+    )
+    from ai_powered_data_pipeline_assistant_spark.sources.layout import (
+        append_ivfpq_layout,
+        rebuild_ivfpq_layout,
+    )
+
+    monkeypatch.setattr(ivfpq, "_ARTIFACT_CACHE", {})
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    tmp = tempfile.mkdtemp(prefix="ivfpq_encoder_cache_")
+    try:
+        layout = _batched_layout(spark, emb.filter(F.col("vec_id") % 4 != 0), tmp)
+        assert ivfpq._ARTIFACT_CACHE == {}, "training cached an entry"
+        arrivals = [emb.filter(F.col("vec_id") % 12 == r) for r in (0, 4, 8)]
+
+        append_ivfpq_layout(spark, layout, arrivals[0], batch_id=0)
+        first = read_ivfpq_artifacts(spark, layout)
+        append_ivfpq_layout(spark, layout, arrivals[1], batch_id=1)
+        second = read_ivfpq_artifacts(spark, layout)
+        assert len(ivfpq._ARTIFACT_CACHE) == 1
+        assert second.encode is first.encode and second.route is first.route
+        assert second.encode.darrs[0] is first.encode.darrs[0]
+        assert second.route.sim is first.route.sim
+
+        # retrain on a corpus with different leading vectors, so both the
+        # coarse centroids and the codebooks change
+        rebuild_ivfpq_layout(
+            spark, layout, emb.filter(F.col("vec_id") % 4 != 1), batched=True
+        )
+        append_ivfpq_layout(spark, layout, arrivals[2], batch_id=2)
+        fresh = read_ivfpq_artifacts(spark, layout)
+        assert fresh.encode is not first.encode
+        assert len(ivfpq._ARTIFACT_CACHE) == 1
+
+        def reference(centroids, pq_cents):
+            return sorted(
+                map(
+                    tuple,
+                    assign_codes(
+                        residual_frame(arrivals[2], centroids), pq_cents, PQ_SUBDIM
+                    )
+                    .select("vec_id", "list_id", *[f"_c{m}" for m in range(PQ_M)])
+                    .collect(),
+                )
+            )
+
+        got = _batch_codes(spark, layout, 2)
+        assert got == reference(fresh.centroids, fresh.pq_cents)
+        # the rebuild deleted the old sidecar files; rebuild the stale
+        # routing frame from the old entry's driver-side map
+        stale_centroids = spark.createDataFrame(
+            sorted(first.cent_map.items()), "list_id long, centroid array<double>"
+        )
+        assert got != reference(stale_centroids, first.pq_cents)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_append_returns_routed_lists_of_its_partition(spark, sf_dir):
+    """`append_ivfpq_layout` reads its routed list ids off the codes write
+    (an observed collect_set): exactly the distinct list_ids of the batch
+    partition it wrote, and [] for an empty (all-duplicate) batch, which
+    writes no partition at all."""
+    import shutil
+    import tempfile
+
+    from ai_powered_data_pipeline_assistant_spark.catalog import load_table
+    from ai_powered_data_pipeline_assistant_spark.sources.layout import (
+        append_ivfpq_layout,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    tmp = tempfile.mkdtemp(prefix="ivfpq_routed_")
+    try:
+        layout = _batched_layout(spark, emb.filter(F.col("vec_id") % 4 != 0), tmp)
+        routed = append_ivfpq_layout(
+            spark, layout, emb.filter(F.col("vec_id") % 4 == 0), batch_id=0
+        )
+        written = sorted({lid for _v, lid, *_c in _batch_codes(spark, layout, 0)})
+        assert routed == written and len(written) > 1
+        # statically empty, and empty only at run time (the crawl
+        # pipeline's all-duplicate batch is a checkpointed empty frame)
+        empties = [
+            emb.limit(0),
+            emb.filter(F.col("vec_id") < 0).localCheckpoint(eager=True),
+        ]
+        for batch_id, empty in enumerate(empties, start=1):
+            assert append_ivfpq_layout(spark, layout, empty, batch_id=batch_id) == []
+            assert _batch_codes(spark, layout, batch_id) == []
+    finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -374,6 +374,57 @@ def test_overcap_partner_fetch_uses_bucketed_semi_join(spark, sf_dir, monkeypatc
         shutil.rmtree(tmp_b, ignore_errors=True)
 
 
+def test_undercap_partner_fetch_is_pushed_in_with_bucket_pruning(spark, sf_dir):
+    """Under the cap the partner fetch is one parsed ``doc_id IN (...)``
+    expression, not a per-id ``isin``; it must still plan as a pushed In
+    on doc_id that prunes buckets of the doc_id-bucketed state, and return
+    the rows ``isin`` returns (an empty list returns none)."""
+    import re
+
+    from ai_powered_data_pipeline_assistant_spark.catalog import load_table
+    from ai_powered_data_pipeline_assistant_spark.streaming.neardup import (
+        drop_state,
+        partner_pruned,
+        process_neardup_batch,
+    )
+
+    tmp = tempfile.mkdtemp(prefix="neardup_undercap_")
+    state_dir = f"{tmp}/state"
+    try:
+        docs = (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "text")
+            .filter(F.col("doc_id") < 60)
+        )
+        process_neardup_batch(docs, 0, state_dir)
+        state_df = spark.table(_tables(state_dir)["postings"]).select(
+            "doc_id", "h"
+        )
+        ids = [int(r["doc_id"]) for r in state_df.select("doc_id").distinct()
+               .orderBy("doc_id").limit(2).collect()]
+        assert len(ids) == 2
+        pruned = partner_pruned(state_df, ids, None)
+        # a bare filter needs no bucketed scan, so the planner would drop
+        # it and with it the SelectedBucketsCount line; keep it on to
+        # read the bucket set the In predicate prunes to
+        spark.conf.set(
+            "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
+        )
+        plan = pruned._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"PushedFilters: \[[^\]]*In\(doc_id", plan), plan
+        sel = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
+        assert sel and int(sel[1]) < int(sel[2]), plan
+        want = state_df.filter(F.col("doc_id").isin(ids))
+        assert sorted(map(tuple, pruned.collect())) == sorted(
+            map(tuple, want.collect())
+        )
+        assert partner_pruned(state_df, [], None).count() == 0
+    finally:
+        spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
+        drop_state(spark, state_dir)
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_batch_replay_reproduces_identical_pairs_and_state(spark, sf_dir):
     """The crash window, executed: after the stream completes (state
     already contains every batch), re-processing the LAST batch — exactly
