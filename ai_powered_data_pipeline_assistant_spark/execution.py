@@ -94,25 +94,44 @@ def run_concurrently(*thunks):
     pool (guide §2.6 "overlap independent jobs"): Spark happily schedules
     several jobs at once inside one application, and FIFO scheduling
     back-fills executors idled by an earlier job's straggler tail or
-    commit latency with the later jobs' tasks. Callers must only pass
-    thunks whose jobs are mutually independent (disjoint outputs,
-    order-free semantics — the per-batch state appends and read-only
-    summary counts qualify; anything whose commit ORDER is load-bearing
-    does not). Returns results in thunk order. The first failure
-    propagates to the caller, but only after every thunk has run to
-    completion (pool shutdown waits), so no write job is abandoned
-    mid-flight with its committer state ambiguous. When several thunks
-    fail, the lowest-index exception propagates and the others are
-    recorded on it as ``__notes__`` (visible in the traceback), not
-    silently dropped."""
+    commit latency with the later jobs' tasks. This is the package's ONE
+    way to overlap Spark jobs. Callers must only pass thunks whose jobs
+    are mutually independent (disjoint outputs, order-free semantics —
+    the per-batch state appends and read-only summary counts qualify;
+    anything whose commit ORDER is load-bearing does not).
+
+    Every thunk runs under the caller's Spark local properties — job
+    group, job description, SQL execution id — and session tags, copied
+    when the call is made (``pyspark.inheritable_thread_target``). So a
+    streaming query's ``cancelJobGroup(runId)`` on stop reaches the
+    overlapped jobs too, and ``statusTracker().getJobIdsForGroup`` sees
+    every job a caller's group fired, through nested calls as well.
+    Each call owns a FRESH pool whose threads exit with it: a reused
+    pool thread would keep the last thunk's properties and leak its
+    group into whatever plain work it ran next.
+
+    Returns results in thunk order. The first failure propagates to the
+    caller, but only after every thunk has run to completion (pool
+    shutdown waits), so no write job is abandoned mid-flight with its
+    committer state ambiguous. When several thunks fail, the
+    lowest-index exception propagates and the others are recorded on it
+    as ``__notes__`` (visible in the traceback), not silently dropped."""
     if not thunks:
         return []
     if len(thunks) == 1:
         return [thunks[0]()]
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    # a nested call runs on a pool thread, which has no active session
+    spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
+    # one wrap per thunk: each gets its own copy of the properties, so
+    # one thunk's SQL execution id never lands on a sibling's jobs
+    targets = [inheritable_thread_target(spark)(t) for t in thunks]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(t) for t in targets]
     errs = [(i, f.exception()) for i, f in enumerate(futures) if f.exception()]
     if errs:
         first_i, first_e = errs[0]

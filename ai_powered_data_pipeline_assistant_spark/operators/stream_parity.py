@@ -36,6 +36,7 @@ import shutil
 import tempfile
 import time
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +46,24 @@ from ai_powered_data_pipeline_assistant_spark.execution import (
     materialize,
     materialize_barrier,
 )
+
+
+@contextmanager
+def _audit_shuffle_partitions(spark: SparkSession):
+    """Run the block at 4 shuffle partitions, restoring the previous value
+    on exit: each stateful batch opens one state-store instance per
+    shuffle partition, and the audit inputs are small, so 4 keeps every
+    audit seconds-fast (a streaming query bakes the count into its own
+    checkpoint only). The conf is SESSION-GLOBAL, so it races whatever
+    else runs on the session at the same time: never enter this scope
+    from inside an `execution.run_concurrently` thunk, where it would
+    change, and then restore under, the sibling thunks' jobs."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _run_to_memory(
@@ -73,39 +92,34 @@ def _run_to_memory(
     n_input = spark.read.parquet(src).count()
     stream = spark.readStream.schema(fixture.schema).parquet(src)
     out = build(stream)
-    # one state-store instance per shuffle partition per batch: keep the
-    # audit seconds-fast (partition count is baked into this query's own
-    # checkpoint only)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            out.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if poll_stateful:
-            deadline = time.monotonic() + 120
-            while time.monotonic() < deadline:
-                done = (
-                    not q.status["isDataAvailable"]
-                    and not q.status["isTriggerActive"]
-                    and sum(p["numInputRows"] for p in q.recentProgress)
-                    >= n_input
-                )
-                if done:
-                    break
-                time.sleep(0.5)
-            q.stop()
-            q.awaitTermination(30)
-        else:
-            q.awaitTermination(180)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(tmp, ignore_errors=True)
+    with _audit_shuffle_partitions(spark):
+        try:
+            q = (
+                out.writeStream.outputMode(output_mode)
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", f"{tmp}/ckpt")
+                .trigger(availableNow=True)
+                .start()
+            )
+            if poll_stateful:
+                deadline = time.monotonic() + 120
+                while time.monotonic() < deadline:
+                    done = (
+                        not q.status["isDataAvailable"]
+                        and not q.status["isTriggerActive"]
+                        and sum(p["numInputRows"] for p in q.recentProgress)
+                        >= n_input
+                    )
+                    if done:
+                        break
+                    time.sleep(0.5)
+                q.stop()
+                q.awaitTermination(30)
+            else:
+                q.awaitTermination(180)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -423,61 +437,61 @@ def neardup_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     run_id = uuid.uuid4().hex[:12]
     tmp = tempfile.mkdtemp(prefix=f"neardup_stream_{run_id}_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        src = f"{tmp}/src"
-        os.makedirs(src)
-        # one FILE per arrival batch, mtimes strictly increasing so the
-        # file source replays them in batch-index order
-        for i in range(nb):
-            part_dir = f"{tmp}/part{i}"
-            docs.filter(F.col("doc_id") % nb == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(part_dir)
-            part = next(
-                f for f in os.listdir(part_dir) if f.endswith(".parquet")
+    with _audit_shuffle_partitions(spark):
+        try:
+            src = f"{tmp}/src"
+            os.makedirs(src)
+            # one FILE per arrival batch, mtimes strictly increasing so the
+            # file source replays them in batch-index order
+            for i in range(nb):
+                part_dir = f"{tmp}/part{i}"
+                docs.filter(F.col("doc_id") % nb == i).coalesce(1).write.mode(
+                    "overwrite"
+                ).parquet(part_dir)
+                part = next(
+                    f for f in os.listdir(part_dir) if f.endswith(".parquet")
+                )
+                dst = f"{src}/batch{i:03d}.parquet"
+                shutil.copyfile(f"{part_dir}/{part}", dst)
+                os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
+            stream = (
+                spark.readStream.schema(docs.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
             )
-            dst = f"{src}/batch{i:03d}.parquet"
-            shutil.copyfile(f"{part_dir}/{part}", dst)
-            os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = run_neardup_stream(stream, f"{tmp}/state", f"{tmp}/pairs", f"{tmp}/ckpt")
-        if not q.awaitTermination(300):
-            # a partial pairs table would read as a semantic mismatch;
-            # fail loudly instead (and stop before the dirs are removed)
-            q.stop()
-            q.awaitTermination(30)
-            raise TimeoutError(
-                "neardup stream did not finish within 300 s — parity "
-                "cannot be assessed on a partial pairs table"
+            q = run_neardup_stream(
+                stream, f"{tmp}/state", f"{tmp}/pairs", f"{tmp}/ckpt"
             )
-        # pairs land batch_id-partitioned (the exactly-once writer);
-        # project the semantic columns
-        got = spark.read.parquet(f"{tmp}/pairs").select(
-            "later_id", "earlier_id", "jaccard"
-        )
-        want = minhash_lsh_pairs_for(
-            docs,
-            pair_cond=lambda a, b: ((a % nb) > (b % nb))
-            | (((a % nb) == (b % nb)) & (a > b)),
-        ).select(
-            F.col("a_id").alias("later_id"),
-            F.col("b_id").alias("earlier_id"),
-            "jaccard",
-        ).transform(materialize_barrier)
-        n_stream = got.count()
-        n_batch = want.count()
-        missing = want.exceptAll(got).count()
-        extra = got.exceptAll(want).count()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        drop_state(spark, f"{tmp}/state")
-        shutil.rmtree(tmp, ignore_errors=True)
+            if not q.awaitTermination(300):
+                # a partial pairs table would read as a semantic mismatch;
+                # fail loudly instead (and stop before the dirs are removed)
+                q.stop()
+                q.awaitTermination(30)
+                raise TimeoutError(
+                    "neardup stream did not finish within 300 s — parity "
+                    "cannot be assessed on a partial pairs table"
+                )
+            # pairs land batch_id-partitioned (the exactly-once writer);
+            # project the semantic columns
+            got = spark.read.parquet(f"{tmp}/pairs").select(
+                "later_id", "earlier_id", "jaccard"
+            )
+            want = minhash_lsh_pairs_for(
+                docs,
+                pair_cond=lambda a, b: ((a % nb) > (b % nb))
+                | (((a % nb) == (b % nb)) & (a > b)),
+            ).select(
+                F.col("a_id").alias("later_id"),
+                F.col("b_id").alias("earlier_id"),
+                "jaccard",
+            ).transform(materialize_barrier)
+            n_stream = got.count()
+            n_batch = want.count()
+            missing = want.exceptAll(got).count()
+            extra = got.exceptAll(want).count()
+        finally:
+            drop_state(spark, f"{tmp}/state")
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.range(1).select(
         F.lit(n_stream).cast("long").alias("n_pairs_stream"),
         F.lit(n_batch).cast("long").alias("n_pairs_batch"),
@@ -538,98 +552,96 @@ def substring_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     run_id = uuid.uuid4().hex[:12]
     tmp = tempfile.mkdtemp(prefix=f"substr_stream_{run_id}_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        src = f"{tmp}/src"
-        os.makedirs(src)
-        for i in range(nb):
-            part_dir = f"{tmp}/part{i}"
-            docs.filter(F.col("doc_id") % nb == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(part_dir)
-            part = next(
-                f for f in os.listdir(part_dir) if f.endswith(".parquet")
+    with _audit_shuffle_partitions(spark):
+        try:
+            src = f"{tmp}/src"
+            os.makedirs(src)
+            for i in range(nb):
+                part_dir = f"{tmp}/part{i}"
+                docs.filter(F.col("doc_id") % nb == i).coalesce(1).write.mode(
+                    "overwrite"
+                ).parquet(part_dir)
+                part = next(
+                    f for f in os.listdir(part_dir) if f.endswith(".parquet")
+                )
+                dst = f"{src}/batch{i:03d}.parquet"
+                shutil.copyfile(f"{part_dir}/{part}", dst)
+                os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
+            stream = (
+                spark.readStream.schema(docs.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
             )
-            dst = f"{src}/batch{i:03d}.parquet"
-            shutil.copyfile(f"{part_dir}/{part}", dst)
-            os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = run_substring_stream(
-            stream, f"{tmp}/state", f"{tmp}/acct", f"{tmp}/ckpt",
-            text_out_dir=f"{tmp}/text",
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            q.awaitTermination(30)
-            raise TimeoutError(
-                "substring stream did not finish within 300 s — parity "
-                "cannot be assessed on a partial accounting table"
+            q = run_substring_stream(
+                stream, f"{tmp}/state", f"{tmp}/acct", f"{tmp}/ckpt",
+                text_out_dir=f"{tmp}/text",
             )
-        got = spark.read.parquet(f"{tmp}/acct").select(
-            "doc_id",
-            "n_tokens",
-            "n_dup_spans",
-            "dup_windows",
-            "tokens_removed",
-            "tokens_kept",
-        )
-        sized = sized_docs(docs)
-        # explicitly TEXT-keyed batch twin (the engine default is the
-        # 128-bit hash): this parity's job includes surfacing any hash
-        # collision as a mismatch, so the reference side must carry the
-        # exact text semantics the oracle recomputes
-        dropped_arrival = dropped_intervals_for(
-            sized, batch_expr=lambda d: d % nb, hash_keyed=False
-        ).transform(materialize_barrier)
-        want = accounting_for(sized, dropped_arrival).transform(
-            materialize_barrier
-        )
-        n_stream = got.count()
-        n_batch = want.count()
-        missing = want.exceptAll(got).count()
-        extra = got.exceptAll(want).count()
-        # rewrite leg (round 10): the per-batch TEXT output accumulated by
-        # the stream must equal the batch rewrite under the arrival order
-        text_cols = ["doc_id", "tokens_kept", "kept_text"]
-        got_text = spark.read.parquet(f"{tmp}/text").select(*text_cols)
-        # barriered like `want` above: rewrite_for's left-join + lambda +
-        # concat plan feeds two exceptAll directions — the barrier both
-        # avoids recomputing the whole pipeline per direction and
-        # sidesteps the Catalyst project-collapse class documented at the
-        # accounting leg (round-10 review)
-        want_text = materialize_barrier(
-            rewrite_for(sized, dropped_arrival).select(*text_cols)
-        )
-        rw_mismatch = (
-            got_text.exceptAll(want_text).count()
-            + want_text.exceptAll(got_text).count()
-        )
-        fp_row = got_text.select(
-            "tokens_kept", kept_fingerprint_col().alias("fh")
-        ).agg(
-            F.sum("tokens_kept").cast("long").alias("tk"),
-            F.expr("bit_xor(fh)").cast("long").alias("fp"),
-        ).first()
-        tokens_kept_total = int(fp_row["tk"] or 0)
-        corpus_fp = int(fp_row["fp"] or 0)
-        # sums are NULL on an empty accounting table (empty corpus /
-        # zero-row batches) — coalesce so the parity row reports zeros
-        # instead of raising TypeError (ADVICE r9)
-        dropped_total = got.agg(
-            F.sum("dup_windows").cast("long")
-        ).first()[0] or 0
-        removed_total = got.agg(
-            F.sum("tokens_removed").cast("long")
-        ).first()[0] or 0
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        drop_state(spark, f"{tmp}/state")
-        shutil.rmtree(tmp, ignore_errors=True)
+            if not q.awaitTermination(300):
+                q.stop()
+                q.awaitTermination(30)
+                raise TimeoutError(
+                    "substring stream did not finish within 300 s — parity "
+                    "cannot be assessed on a partial accounting table"
+                )
+            got = spark.read.parquet(f"{tmp}/acct").select(
+                "doc_id",
+                "n_tokens",
+                "n_dup_spans",
+                "dup_windows",
+                "tokens_removed",
+                "tokens_kept",
+            )
+            sized = sized_docs(docs)
+            # explicitly TEXT-keyed batch twin (the engine default is the
+            # 128-bit hash): this parity's job includes surfacing any hash
+            # collision as a mismatch, so the reference side must carry the
+            # exact text semantics the oracle recomputes
+            dropped_arrival = dropped_intervals_for(
+                sized, batch_expr=lambda d: d % nb, hash_keyed=False
+            ).transform(materialize_barrier)
+            want = accounting_for(sized, dropped_arrival).transform(
+                materialize_barrier
+            )
+            n_stream = got.count()
+            n_batch = want.count()
+            missing = want.exceptAll(got).count()
+            extra = got.exceptAll(want).count()
+            # rewrite leg (round 10): the per-batch TEXT output accumulated by
+            # the stream must equal the batch rewrite under the arrival order
+            text_cols = ["doc_id", "tokens_kept", "kept_text"]
+            got_text = spark.read.parquet(f"{tmp}/text").select(*text_cols)
+            # barriered like `want` above: rewrite_for's left-join + lambda +
+            # concat plan feeds two exceptAll directions — the barrier both
+            # avoids recomputing the whole pipeline per direction and
+            # sidesteps the Catalyst project-collapse class documented at the
+            # accounting leg (round-10 review)
+            want_text = materialize_barrier(
+                rewrite_for(sized, dropped_arrival).select(*text_cols)
+            )
+            rw_mismatch = (
+                got_text.exceptAll(want_text).count()
+                + want_text.exceptAll(got_text).count()
+            )
+            fp_row = got_text.select(
+                "tokens_kept", kept_fingerprint_col().alias("fh")
+            ).agg(
+                F.sum("tokens_kept").cast("long").alias("tk"),
+                F.expr("bit_xor(fh)").cast("long").alias("fp"),
+            ).first()
+            tokens_kept_total = int(fp_row["tk"] or 0)
+            corpus_fp = int(fp_row["fp"] or 0)
+            # sums are NULL on an empty accounting table (empty corpus /
+            # zero-row batches) — coalesce so the parity row reports zeros
+            # instead of raising TypeError (ADVICE r9)
+            dropped_total = got.agg(
+                F.sum("dup_windows").cast("long")
+            ).first()[0] or 0
+            removed_total = got.agg(
+                F.sum("tokens_removed").cast("long")
+            ).first()[0] or 0
+        finally:
+            drop_state(spark, f"{tmp}/state")
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.range(1).select(
         F.lit(n_stream).cast("long").alias("n_docs_stream"),
         F.lit(n_batch).cast("long").alias("n_docs_batch"),
@@ -685,46 +697,44 @@ def neardup_cluster_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     run_id = uuid.uuid4().hex[:12]
     tmp = tempfile.mkdtemp(prefix=f"cc_stream_{run_id}_")
     state = f"{tmp}/state"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        pairs = materialize_barrier(
-            minhash_lsh_pairs_for(docs).select("a_id", "b_id")
-        )
-        bidx = lambda c: c % nb  # noqa: E731
-        arrival = F.greatest(bidx(F.col("a_id")), bidx(F.col("b_id")))
-        for i in range(nb):
-            process_cluster_batch(
-                pairs.filter(arrival == i), i, state
+    with _audit_shuffle_partitions(spark):
+        try:
+            pairs = materialize_barrier(
+                minhash_lsh_pairs_for(docs).select("a_id", "b_id")
             )
-        got = resolved_roots(spark, state).select(
-            "doc_id", "cluster_id"
-        ).transform(materialize_barrier)
-        want = materialize_barrier(
-            connected_components(pairs).select(
-                F.col("node").alias("doc_id"),
-                F.col("label").alias("cluster_id"),
+            bidx = lambda c: c % nb  # noqa: E731
+            arrival = F.greatest(bidx(F.col("a_id")), bidx(F.col("b_id")))
+            for i in range(nb):
+                process_cluster_batch(
+                    pairs.filter(arrival == i), i, state
+                )
+            got = resolved_roots(spark, state).select(
+                "doc_id", "cluster_id"
+            ).transform(materialize_barrier)
+            want = materialize_barrier(
+                connected_components(pairs).select(
+                    F.col("node").alias("doc_id"),
+                    F.col("label").alias("cluster_id"),
+                )
             )
-        )
-        mismatches = (
-            got.exceptAll(want).count() + want.exceptAll(got).count()
-        )
-        n_docs = got.count()
-        agg = got.agg(
-            F.countDistinct("cluster_id").cast("long").alias("nc"),
-            F.sum("cluster_id").cast("long").alias("ck"),
-        ).first()
-        largest = (
-            got.groupBy("cluster_id")
-            .count()
-            .agg(F.max("count").cast("long"))
-            .first()[0]
-            or 0
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        drop_state(spark, state)
-        shutil.rmtree(tmp, ignore_errors=True)
+            mismatches = (
+                got.exceptAll(want).count() + want.exceptAll(got).count()
+            )
+            n_docs = got.count()
+            agg = got.agg(
+                F.countDistinct("cluster_id").cast("long").alias("nc"),
+                F.sum("cluster_id").cast("long").alias("ck"),
+            ).first()
+            largest = (
+                got.groupBy("cluster_id")
+                .count()
+                .agg(F.max("count").cast("long"))
+                .first()[0]
+                or 0
+            )
+        finally:
+            drop_state(spark, state)
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.range(1).select(
         F.lit(n_docs).cast("long").alias("n_docs_clustered"),
         F.lit(int(agg["nc"] or 0)).cast("long").alias("n_clusters"),
@@ -781,58 +791,56 @@ def media_phash_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="phash_stream_")
     state = f"{tmp}/state"
     pairs_dir = f"{tmp}/pairs"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        for i in range(nb):
-            process_phash_batch(
-                media.filter(F.col("media_id") % nb == i), i, state, pairs_dir
+    with _audit_shuffle_partitions(spark):
+        try:
+            for i in range(nb):
+                process_phash_batch(
+                    media.filter(F.col("media_id") % nb == i), i, state, pairs_dir
+                )
+                if i == 1:
+                    compact_phash_state(spark, state)
+            # explicit schema: a zero-pair corpus leaves only _SUCCESS markers
+            # in the batch partitions, and schema inference would crash where
+            # the oracle correctly reports n_pairs = 0 (round-11 review)
+            got = materialize_barrier(
+                spark.read.schema(f"{PAIRS_SCHEMA}, batch_id long")
+                .parquet(pairs_dir)
+                .select("later_id", "earlier_id", "hamming")
             )
-            if i == 1:
-                compact_phash_state(spark, state)
-        # explicit schema: a zero-pair corpus leaves only _SUCCESS markers
-        # in the batch partitions, and schema inference would crash where
-        # the oracle correctly reports n_pairs = 0 (round-11 review)
-        got = materialize_barrier(
-            spark.read.schema(f"{PAIRS_SCHEMA}, batch_id long")
-            .parquet(pairs_dir)
-            .select("later_id", "earlier_id", "hamming")
-        )
-        batch_pairs = _phash_pairs(phash_projection(media).transform(materialize))
-        ba = F.col("a_id") % nb
-        bb = F.col("b_id") % nb
-        # arrival orientation: later = the endpoint whose batch is later;
-        # same batch → the greater id (a_id < b_id in the batch frame)
-        want = materialize_barrier(
-            batch_pairs.select(
-                F.when(ba > bb, F.col("a_id"))
-                .otherwise(F.col("b_id"))
-                .alias("later_id"),
-                F.when(ba > bb, F.col("b_id"))
-                .otherwise(F.col("a_id"))
-                .alias("earlier_id"),
-                "hamming",
+            batch_pairs = _phash_pairs(phash_projection(media).transform(materialize))
+            ba = F.col("a_id") % nb
+            bb = F.col("b_id") % nb
+            # arrival orientation: later = the endpoint whose batch is later;
+            # same batch → the greater id (a_id < b_id in the batch frame)
+            want = materialize_barrier(
+                batch_pairs.select(
+                    F.when(ba > bb, F.col("a_id"))
+                    .otherwise(F.col("b_id"))
+                    .alias("later_id"),
+                    F.when(ba > bb, F.col("b_id"))
+                    .otherwise(F.col("a_id"))
+                    .alias("earlier_id"),
+                    "hamming",
+                )
             )
-        )
-        mismatches = (
-            got.exceptAll(want).count() + want.exceptAll(got).count()
-        )
-        agg = got.agg(
-            F.count("*").cast("long").alias("np"),
-            F.sum("hamming").cast("long").alias("hs"),
-            F.sum(
-                F.when(
-                    F.col("later_id") % nb != F.col("earlier_id") % nb, 1
-                ).otherwise(0)
+            mismatches = (
+                got.exceptAll(want).count() + want.exceptAll(got).count()
             )
-            .cast("long")
-            .alias("ncross"),
-        ).first()
-        n_blobs = media.count()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        drop_state(spark, state)
-        shutil.rmtree(tmp, ignore_errors=True)
+            agg = got.agg(
+                F.count("*").cast("long").alias("np"),
+                F.sum("hamming").cast("long").alias("hs"),
+                F.sum(
+                    F.when(
+                        F.col("later_id") % nb != F.col("earlier_id") % nb, 1
+                    ).otherwise(0)
+                )
+                .cast("long")
+                .alias("ncross"),
+            ).first()
+            n_blobs = media.count()
+        finally:
+            drop_state(spark, state)
+            shutil.rmtree(tmp, ignore_errors=True)
     n_pairs = int(agg["np"] or 0)
     n_cross = int(agg["ncross"] or 0)
     return spark.range(1).select(
@@ -929,29 +937,27 @@ def phash_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = media_table(spark, sf_dir).select("media_id", "modality", "payload")
     tmp = tempfile.mkdtemp(prefix="phash_report_")
     state = f"{tmp}/state"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        for i in range(nb):
-            process_phash_batch(
-                media.filter(F.col("media_id") % nb == i),
-                i,
-                state,
-                f"{tmp}/pairs",
-            )
-        tables = sc.state_tables(state, STATE_SPECS)
-        pre = {k: spark.table(n).count() for k, n in tables.items()}
-        pre_files = {
-            k: hadoop_fs.count_parquet(spark, sc.table_path(state, k))
-            for k in tables
-        }
-        post_files = compact_phash_state(spark, state)
-        post = {k: spark.table(n).count() for k, n in tables.items()}
-        n_blobs = media.count()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        drop_state(spark, state)
-        shutil.rmtree(tmp, ignore_errors=True)
+    with _audit_shuffle_partitions(spark):
+        try:
+            for i in range(nb):
+                process_phash_batch(
+                    media.filter(F.col("media_id") % nb == i),
+                    i,
+                    state,
+                    f"{tmp}/pairs",
+                )
+            tables = sc.state_tables(state, STATE_SPECS)
+            pre = {k: spark.table(n).count() for k, n in tables.items()}
+            pre_files = {
+                k: hadoop_fs.count_parquet(spark, sc.table_path(state, k))
+                for k in tables
+            }
+            post_files = compact_phash_state(spark, state)
+            post = {k: spark.table(n).count() for k, n in tables.items()}
+            n_blobs = media.count()
+        finally:
+            drop_state(spark, state)
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.range(1).select(
         F.lit(n_blobs).cast("long").alias("n_blobs"),
         F.lit(nb).cast("int").alias("n_batches"),
@@ -1022,58 +1028,56 @@ def media_cluster_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     nb = MEDIA_CLUSTER_BATCHES
     tmp = tempfile.mkdtemp(prefix="media_cc_stream_")
     state = f"{tmp}/state"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        media = media_table(spark, sf_dir)
-        pairs = materialize_barrier(
-            _phash_pairs(_phash_frame(media)).select("a_id", "b_id")
-        )
-        arrival = F.greatest(F.col("a_id") % nb, F.col("b_id") % nb)
-        for i in range(nb):
-            process_cluster_batch(pairs.filter(arrival == i), i, state)
-            if i == 1:
-                compact_cluster_state(spark, state)
-        sized = media.select(
-            F.col("media_id").alias("doc_id"),
-            "modality",
-            F.octet_length("payload").cast("long").alias("bytes"),
-        )
-        fam = resolved_roots(spark, state).join(sized, "doc_id")
-        got = materialize_barrier(
-            fam.groupBy("cluster_id")
-            .agg(
-                F.count("*").cast("long").alias("family_size"),
-                F.max(
-                    F.struct(F.col("bytes"), (-F.col("doc_id")).alias("ni"))
-                ).alias("_s"),
-                F.min("modality").alias("modality"),
+    with _audit_shuffle_partitions(spark):
+        try:
+            media = media_table(spark, sf_dir)
+            pairs = materialize_barrier(
+                _phash_pairs(_phash_frame(media)).select("a_id", "b_id")
             )
-            .select(
-                F.col("cluster_id").alias("family_id"),
+            arrival = F.greatest(F.col("a_id") % nb, F.col("b_id") % nb)
+            for i in range(nb):
+                process_cluster_batch(pairs.filter(arrival == i), i, state)
+                if i == 1:
+                    compact_cluster_state(spark, state)
+            sized = media.select(
+                F.col("media_id").alias("doc_id"),
                 "modality",
-                "family_size",
-                (-F.col("_s.ni")).cast("long").alias("keeper_id"),
-                F.col("_s.bytes").cast("long").alias("keeper_bytes"),
+                F.octet_length("payload").cast("long").alias("bytes"),
             )
-        )
-        want = materialize_barrier(
-            media_phash_keep_best(spark, sf_dir).select(
-                "family_id", "modality", "family_size",
-                "keeper_id", "keeper_bytes",
+            fam = resolved_roots(spark, state).join(sized, "doc_id")
+            got = materialize_barrier(
+                fam.groupBy("cluster_id")
+                .agg(
+                    F.count("*").cast("long").alias("family_size"),
+                    F.max(
+                        F.struct(F.col("bytes"), (-F.col("doc_id")).alias("ni"))
+                    ).alias("_s"),
+                    F.min("modality").alias("modality"),
+                )
+                .select(
+                    F.col("cluster_id").alias("family_id"),
+                    "modality",
+                    "family_size",
+                    (-F.col("_s.ni")).cast("long").alias("keeper_id"),
+                    F.col("_s.bytes").cast("long").alias("keeper_bytes"),
+                )
             )
-        )
-        mismatches = got.exceptAll(want).count() + want.exceptAll(got).count()
-        agg = got.agg(
-            F.count("*").cast("long").alias("nf"),
-            F.max("family_size").cast("long").alias("lf"),
-            F.sum("keeper_id").cast("long").alias("kc"),
-            F.sum("keeper_bytes").cast("long").alias("kb"),
-        ).first()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        drop_state(spark, state)
-        shutil.rmtree(tmp, ignore_errors=True)
+            want = materialize_barrier(
+                media_phash_keep_best(spark, sf_dir).select(
+                    "family_id", "modality", "family_size",
+                    "keeper_id", "keeper_bytes",
+                )
+            )
+            mismatches = got.exceptAll(want).count() + want.exceptAll(got).count()
+            agg = got.agg(
+                F.count("*").cast("long").alias("nf"),
+                F.max("family_size").cast("long").alias("lf"),
+                F.sum("keeper_id").cast("long").alias("kc"),
+                F.sum("keeper_bytes").cast("long").alias("kb"),
+            ).first()
+        finally:
+            drop_state(spark, state)
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.range(1).select(
         F.lit(int(agg["nf"] or 0)).cast("long").alias("n_families"),
         F.lit(int(agg["lf"] or 0)).cast("long").alias("largest_family"),
@@ -1204,107 +1208,105 @@ def media_crawl_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     nb = MEDIA_CRAWL_BATCHES
     tmp = tempfile.mkdtemp(prefix="media_crawl_")
     state, out = f"{tmp}/state", f"{tmp}/out"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        media = media_table(spark, sf_dir).select(
-            "media_id", "modality", "payload"
-        )
-        for i in range(nb):
-            process_media_batch(
-                media.filter(F.col("media_id") % nb == i), i, state, out,
-                compact_every=2,
+    with _audit_shuffle_partitions(spark):
+        try:
+            media = media_table(spark, sf_dir).select(
+                "media_id", "modality", "payload"
             )
-        got_curated = materialize_barrier(
-            spark.read.schema("media_id long, modality string, batch_id long")
-            .parquet(f"{out}/curated")
-            .select("media_id", "modality")
-        )
-        got_fams = materialize_barrier(
-            media_keep_best_state(spark, state).select(
-                "family_id", "modality", "family_size",
-                "keeper_id", "keeper_bytes",
+            for i in range(nb):
+                process_media_batch(
+                    media.filter(F.col("media_id") % nb == i), i, state, out,
+                    compact_every=2,
+                )
+            got_curated = materialize_barrier(
+                spark.read.schema("media_id long, modality string, batch_id long")
+                .parquet(f"{out}/curated")
+                .select("media_id", "modality")
             )
-        )
-        # batch arrival-rule recompute (Spark side of the pin)
-        sized = media.select(
-            "media_id",
-            "modality",
-            F.sha2("payload", 256).alias("d"),
-            F.octet_length("payload").cast("long").alias("bytes"),
-            (F.col("media_id") % nb).alias("b"),
-        )
-        keeper_ids = (
-            sized.groupBy("modality", "d")
-            .agg(F.min(F.struct("b", "media_id")).alias("s"))
-            .select(F.col("s.media_id").alias("media_id"))
-        )
-        keepers = media.join(F.broadcast(keeper_ids), "media_id", "left_semi")
-        khash = materialize(phash_projection(keepers))
-        kpairs = materialize(_phash_pairs(khash))
-        later_ids = kpairs.select(
-            F.when(
-                F.col("a_id") % nb > F.col("b_id") % nb, F.col("a_id")
+            got_fams = materialize_barrier(
+                media_keep_best_state(spark, state).select(
+                    "family_id", "modality", "family_size",
+                    "keeper_id", "keeper_bytes",
+                )
             )
-            .otherwise(F.col("b_id"))
-            .alias("media_id")
-        ).distinct()
-        want_curated = materialize_barrier(
-            keepers.select("media_id", "modality").join(
-                later_ids, "media_id", "left_anti"
+            # batch arrival-rule recompute (Spark side of the pin)
+            sized = media.select(
+                "media_id",
+                "modality",
+                F.sha2("payload", 256).alias("d"),
+                F.octet_length("payload").cast("long").alias("bytes"),
+                (F.col("media_id") % nb).alias("b"),
             )
-        )
-        comp = connected_components(kpairs.select("a_id", "b_id")).select(
-            F.col("node").alias("media_id"), F.col("label").alias("family_id")
-        )
-        want_fams = materialize_barrier(
-            comp.join(sized.select("media_id", "modality", "bytes"), "media_id")
-            .groupBy("family_id")
-            .agg(
-                F.count("*").cast("long").alias("family_size"),
-                F.max(
-                    F.struct(F.col("bytes"), (-F.col("media_id")).alias("ni"))
-                ).alias("_s"),
-                F.min("modality").alias("modality"),
+            keeper_ids = (
+                sized.groupBy("modality", "d")
+                .agg(F.min(F.struct("b", "media_id")).alias("s"))
+                .select(F.col("s.media_id").alias("media_id"))
             )
-            .select(
-                "family_id", "modality", "family_size",
-                (-F.col("_s.ni")).cast("long").alias("keeper_id"),
-                F.col("_s.bytes").cast("long").alias("keeper_bytes"),
+            keepers = media.join(F.broadcast(keeper_ids), "media_id", "left_semi")
+            khash = materialize(phash_projection(keepers))
+            kpairs = materialize(_phash_pairs(khash))
+            later_ids = kpairs.select(
+                F.when(
+                    F.col("a_id") % nb > F.col("b_id") % nb, F.col("a_id")
+                )
+                .otherwise(F.col("b_id"))
+                .alias("media_id")
+            ).distinct()
+            want_curated = materialize_barrier(
+                keepers.select("media_id", "modality").join(
+                    later_ids, "media_id", "left_anti"
+                )
             )
-        )
-        mismatches = (
-            got_curated.exceptAll(want_curated).count()
-            + want_curated.exceptAll(got_curated).count()
-            + got_fams.exceptAll(want_fams).count()
-            + want_fams.exceptAll(got_fams).count()
-        )
-        n_arrivals = media.count()
-        n_exact_dropped = (
-            spark.read.schema(
-                "media_id long, modality string, keeper_id long, batch_id long"
+            comp = connected_components(kpairs.select("a_id", "b_id")).select(
+                F.col("node").alias("media_id"), F.col("label").alias("family_id")
             )
-            .parquet(f"{out}/exact_dropped")
-            .count()
-        )
-        n_perc_dropped = (
-            spark.read.schema(f"{DECISIONS_SCHEMA}, batch_id long")
-            .parquet(f"{out}/decisions")
-            .filter("is_dup")
-            .count()
-        )
-        cagg = got_curated.agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("media_id").cast("long").alias("ck"),
-        ).first()
-        fagg = got_fams.agg(
-            F.count("*").cast("long").alias("nf"),
-            F.sum("keeper_id").cast("long").alias("kc"),
-        ).first()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        drop_state(spark, state)
-        shutil.rmtree(tmp, ignore_errors=True)
+            want_fams = materialize_barrier(
+                comp.join(sized.select("media_id", "modality", "bytes"), "media_id")
+                .groupBy("family_id")
+                .agg(
+                    F.count("*").cast("long").alias("family_size"),
+                    F.max(
+                        F.struct(F.col("bytes"), (-F.col("media_id")).alias("ni"))
+                    ).alias("_s"),
+                    F.min("modality").alias("modality"),
+                )
+                .select(
+                    "family_id", "modality", "family_size",
+                    (-F.col("_s.ni")).cast("long").alias("keeper_id"),
+                    F.col("_s.bytes").cast("long").alias("keeper_bytes"),
+                )
+            )
+            mismatches = (
+                got_curated.exceptAll(want_curated).count()
+                + want_curated.exceptAll(got_curated).count()
+                + got_fams.exceptAll(want_fams).count()
+                + want_fams.exceptAll(got_fams).count()
+            )
+            n_arrivals = media.count()
+            n_exact_dropped = (
+                spark.read.schema(
+                    "media_id long, modality string, keeper_id long, batch_id long"
+                )
+                .parquet(f"{out}/exact_dropped")
+                .count()
+            )
+            n_perc_dropped = (
+                spark.read.schema(f"{DECISIONS_SCHEMA}, batch_id long")
+                .parquet(f"{out}/decisions")
+                .filter("is_dup")
+                .count()
+            )
+            cagg = got_curated.agg(
+                F.count("*").cast("long").alias("n"),
+                F.sum("media_id").cast("long").alias("ck"),
+            ).first()
+            fagg = got_fams.agg(
+                F.count("*").cast("long").alias("nf"),
+                F.sum("keeper_id").cast("long").alias("kc"),
+            ).first()
+        finally:
+            drop_state(spark, state)
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.range(1).select(
         F.lit(n_arrivals).cast("long").alias("n_arrivals"),
         F.lit(nb).cast("int").alias("n_batches"),
@@ -1392,41 +1394,39 @@ def media_pipeline_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     nb = MEDIA_CRAWL_BATCHES
     tmp = tempfile.mkdtemp(prefix="media_report_")
     state, out = f"{tmp}/state", f"{tmp}/out"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        media = media_table(spark, sf_dir).select(
-            "media_id", "modality", "payload"
-        )
-        for i in range(nb):
-            process_media_batch(
-                media.filter(F.col("media_id") % nb == i), i, state, out,
-                compact_every=2,
+    with _audit_shuffle_partitions(spark):
+        try:
+            media = media_table(spark, sf_dir).select(
+                "media_id", "modality", "payload"
             )
-        tables = sc.state_tables(state, media_pipeline.STATE_SPECS)
-        tables.update(
-            sc.state_tables(f"{state}/phash", phash_stream.STATE_SPECS)
-        )
-        pre = {k: spark.table(n).count() for k, n in tables.items()}
-        compact_media_state(spark, state)
-        post = {k: spark.table(n).count() for k, n in tables.items()}
-        n_curated = (
-            spark.read.schema("media_id long, modality string, batch_id long")
-            .parquet(f"{out}/curated")
-            .count()
-        )
-        n_exact_dropped = (
-            spark.read.schema(
-                "media_id long, modality string, keeper_id long, batch_id long"
+            for i in range(nb):
+                process_media_batch(
+                    media.filter(F.col("media_id") % nb == i), i, state, out,
+                    compact_every=2,
+                )
+            tables = sc.state_tables(state, media_pipeline.STATE_SPECS)
+            tables.update(
+                sc.state_tables(f"{state}/phash", phash_stream.STATE_SPECS)
             )
-            .parquet(f"{out}/exact_dropped")
-            .count()
-        )
-        n_arrivals = media.count()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        drop_state(spark, state)
-        shutil.rmtree(tmp, ignore_errors=True)
+            pre = {k: spark.table(n).count() for k, n in tables.items()}
+            compact_media_state(spark, state)
+            post = {k: spark.table(n).count() for k, n in tables.items()}
+            n_curated = (
+                spark.read.schema("media_id long, modality string, batch_id long")
+                .parquet(f"{out}/curated")
+                .count()
+            )
+            n_exact_dropped = (
+                spark.read.schema(
+                    "media_id long, modality string, keeper_id long, batch_id long"
+                )
+                .parquet(f"{out}/exact_dropped")
+                .count()
+            )
+            n_arrivals = media.count()
+        finally:
+            drop_state(spark, state)
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.range(1).select(
         F.lit(n_arrivals).cast("long").alias("n_arrivals"),
         F.lit(nb).cast("int").alias("n_batches"),
@@ -1509,48 +1509,46 @@ def cluster_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tmp = tempfile.mkdtemp(prefix="cc_report_")
     state = f"{tmp}/state"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        pairs = materialize_barrier(
-            minhash_lsh_pairs_for(docs).select("a_id", "b_id")
-        )
-        bidx = lambda c: c % nb  # noqa: E731
-        arrival = F.greatest(bidx(F.col("a_id")), bidx(F.col("b_id")))
-        for i in range(nb):
-            process_cluster_batch(pairs.filter(arrival == i), i, state)
-        # EAGER barrier: the compaction below swap-DELETES the roots files
-        # this plan reads; a lazy checkpoint would re-read them post-swap
-        before = materialize(
-            resolved_roots(spark, state).select("doc_id", "cluster_id"),
-            eager=True,
-            require_barrier=True,
-        )
-        red_before = read_redirects(spark, state).count()
-        stats = compact_cluster_state(spark, state)
-        after = materialize_barrier(
-            resolved_roots(spark, state).select("doc_id", "cluster_id")
-        )
-        preserved = (
-            before.exceptAll(after).count() + after.exceptAll(before).count()
-        ) == 0
-        roots_rows = spark.table(state_tables(state, STATE_SPECS)["roots"]).count()
-        agg = after.agg(
-            F.count("*").cast("long").alias("nd"),
-            F.countDistinct("cluster_id").cast("long").alias("nc"),
-            F.sum("cluster_id").cast("long").alias("ck"),
-        ).first()
-        largest = (
-            after.groupBy("cluster_id")
-            .count()
-            .agg(F.max("count").cast("long"))
-            .first()[0]
-            or 0
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        drop_state(spark, state)
-        shutil.rmtree(tmp, ignore_errors=True)
+    with _audit_shuffle_partitions(spark):
+        try:
+            pairs = materialize_barrier(
+                minhash_lsh_pairs_for(docs).select("a_id", "b_id")
+            )
+            bidx = lambda c: c % nb  # noqa: E731
+            arrival = F.greatest(bidx(F.col("a_id")), bidx(F.col("b_id")))
+            for i in range(nb):
+                process_cluster_batch(pairs.filter(arrival == i), i, state)
+            # EAGER barrier: the compaction below swap-DELETES the roots files
+            # this plan reads; a lazy checkpoint would re-read them post-swap
+            before = materialize(
+                resolved_roots(spark, state).select("doc_id", "cluster_id"),
+                eager=True,
+                require_barrier=True,
+            )
+            red_before = read_redirects(spark, state).count()
+            stats = compact_cluster_state(spark, state)
+            after = materialize_barrier(
+                resolved_roots(spark, state).select("doc_id", "cluster_id")
+            )
+            preserved = (
+                before.exceptAll(after).count() + after.exceptAll(before).count()
+            ) == 0
+            roots_rows = spark.table(state_tables(state, STATE_SPECS)["roots"]).count()
+            agg = after.agg(
+                F.count("*").cast("long").alias("nd"),
+                F.countDistinct("cluster_id").cast("long").alias("nc"),
+                F.sum("cluster_id").cast("long").alias("ck"),
+            ).first()
+            largest = (
+                after.groupBy("cluster_id")
+                .count()
+                .agg(F.max("count").cast("long"))
+                .first()[0]
+                or 0
+            )
+        finally:
+            drop_state(spark, state)
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.range(1).select(
         F.lit(int(agg["nd"] or 0)).cast("long").alias("n_docs_clustered"),
         F.lit(int(agg["nc"] or 0)).cast("long").alias("n_clusters"),
@@ -1700,28 +1698,26 @@ def substring_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tmp = tempfile.mkdtemp(prefix="substr_report_")
     state_dir = f"{tmp}/state"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        for i in range(nb):
-            process_substring_batch(
-                docs.filter(F.col("doc_id") % nb == i),
-                i,
-                state_dir,
-                f"{tmp}/acct",
+    with _audit_shuffle_partitions(spark):
+        try:
+            for i in range(nb):
+                process_substring_batch(
+                    docs.filter(F.col("doc_id") % nb == i),
+                    i,
+                    state_dir,
+                    f"{tmp}/acct",
+                )
+            table = sc.state_tables(state_dir, STATE_SPECS)["wins"]
+            pre_rows = spark.table(table).count()
+            pre_files = hadoop_fs.count_parquet(
+                spark, sc.table_path(state_dir, "wins")
             )
-        table = sc.state_tables(state_dir, STATE_SPECS)["wins"]
-        pre_rows = spark.table(table).count()
-        pre_files = hadoop_fs.count_parquet(
-            spark, sc.table_path(state_dir, "wins")
-        )
-        post_files = compact_substring_state(spark, state_dir)
-        post_rows = spark.table(table).count()
-        n_docs = docs.count()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        drop_state(spark, state_dir)
-        shutil.rmtree(tmp, ignore_errors=True)
+            post_files = compact_substring_state(spark, state_dir)
+            post_rows = spark.table(table).count()
+            n_docs = docs.count()
+        finally:
+            drop_state(spark, state_dir)
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         [
             (
@@ -2039,85 +2035,83 @@ def crawl_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrivals, base = _crawl_splits(spark, sf_dir)
     run_id = uuid.uuid4().hex[:12]
     tmp = tempfile.mkdtemp(prefix=f"crawl_{run_id}_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        layout = f"{tmp}/index"
-        write_ivfpq_layout_for(spark, base, layout, batched=True)
-        src = f"{tmp}/src"
-        os.makedirs(src)
-        bidx = (F.col("doc_id") / 4).cast("long") % nb
-        for i in range(nb):
-            part_dir = f"{tmp}/part{i}"
-            arrivals.filter(bidx == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(part_dir)
-            part = next(
-                f for f in os.listdir(part_dir) if f.endswith(".parquet")
+    with _audit_shuffle_partitions(spark):
+        try:
+            layout = f"{tmp}/index"
+            write_ivfpq_layout_for(spark, base, layout, batched=True)
+            src = f"{tmp}/src"
+            os.makedirs(src)
+            bidx = (F.col("doc_id") / 4).cast("long") % nb
+            for i in range(nb):
+                part_dir = f"{tmp}/part{i}"
+                arrivals.filter(bidx == i).coalesce(1).write.mode(
+                    "overwrite"
+                ).parquet(part_dir)
+                part = next(
+                    f for f in os.listdir(part_dir) if f.endswith(".parquet")
+                )
+                dst = f"{src}/batch{i:03d}.parquet"
+                shutil.copyfile(f"{part_dir}/{part}", dst)
+                os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
+            stream = (
+                spark.readStream.schema(arrivals.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
             )
-            dst = f"{src}/batch{i:03d}.parquet"
-            shutil.copyfile(f"{part_dir}/{part}", dst)
-            os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(arrivals.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = run_crawl_pipeline(
-            stream, f"{tmp}/state", layout, f"{tmp}/out", f"{tmp}/ckpt"
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            q.awaitTermination(30)
-            raise TimeoutError("crawl pipeline did not finish within 300 s")
+            q = run_crawl_pipeline(
+                stream, f"{tmp}/state", layout, f"{tmp}/out", f"{tmp}/ckpt"
+            )
+            if not q.awaitTermination(300):
+                q.stop()
+                q.awaitTermination(30)
+                raise TimeoutError("crawl pipeline did not finish within 300 s")
 
-        got_curated = spark.read.parquet(f"{tmp}/out/curated").select("doc_id")
-        # batch rule: keep arrivals that are not the LATER side of any
-        # verified pair under the arrival order (cross-batch, then doc_id)
-        a_b = lambda c: (c / 4).cast("long") % nb  # noqa: E731
-        later = minhash_lsh_pairs_for(
-            arrivals.select("doc_id", "text"),
-            pair_cond=lambda a, b: (a_b(a) > a_b(b))
-            | ((a_b(a) == a_b(b)) & (a > b)),
-        ).select(F.col("a_id").alias("doc_id")).distinct()
-        want_curated = materialize_barrier(
-            arrivals.select("doc_id").join(later, "doc_id", "left_anti")
-        )
-        cur_mm = (
-            got_curated.exceptAll(want_curated).count()
-            + want_curated.exceptAll(got_curated).count()
-        )
-        n_stream = got_curated.count()
-        n_batch = want_curated.count()
+            got_curated = spark.read.parquet(f"{tmp}/out/curated").select("doc_id")
+            # batch rule: keep arrivals that are not the LATER side of any
+            # verified pair under the arrival order (cross-batch, then doc_id)
+            a_b = lambda c: (c / 4).cast("long") % nb  # noqa: E731
+            later = minhash_lsh_pairs_for(
+                arrivals.select("doc_id", "text"),
+                pair_cond=lambda a, b: (a_b(a) > a_b(b))
+                | ((a_b(a) == a_b(b)) & (a > b)),
+            ).select(F.col("a_id").alias("doc_id")).distinct()
+            want_curated = materialize_barrier(
+                arrivals.select("doc_id").join(later, "doc_id", "left_anti")
+            )
+            cur_mm = (
+                got_curated.exceptAll(want_curated).count()
+                + want_curated.exceptAll(got_curated).count()
+            )
+            n_stream = got_curated.count()
+            n_batch = want_curated.count()
 
-        centroids, _cm, pq_cents, _, _ = read_ivfpq_artifacts(spark, layout)
-        kept_vecs = base.unionByName(
-            arrivals.join(want_curated, "doc_id").select(
-                F.col("doc_id").alias("vec_id"), "embedding"
+            centroids, _cm, pq_cents, _, _ = read_ivfpq_artifacts(spark, layout)
+            kept_vecs = base.unionByName(
+                arrivals.join(want_curated, "doc_id").select(
+                    F.col("doc_id").alias("vec_id"), "embedding"
+                )
             )
-        )
-        ref = materialize_barrier(
-            assign_codes(
-                residual_frame(kept_vecs, centroids), pq_cents, PQ_SUBDIM
-            ).select(
-                "vec_id", "list_id", *[F.col(f"_c{m}") for m in range(PQ_M)]
+            ref = materialize_barrier(
+                assign_codes(
+                    residual_frame(kept_vecs, centroids), pq_cents, PQ_SUBDIM
+                ).select(
+                    "vec_id", "list_id", *[F.col(f"_c{m}") for m in range(PQ_M)]
+                )
             )
-        )
-        streamed = materialize_barrier(
-            spark.read.parquet(f"{layout}/codes").select(
-                "vec_id",
-                F.col("list_id").cast("long").alias("list_id"),
-                *[F.col(f"_c{m}") for m in range(PQ_M)],
+            streamed = materialize_barrier(
+                spark.read.parquet(f"{layout}/codes").select(
+                    "vec_id",
+                    F.col("list_id").cast("long").alias("list_id"),
+                    *[F.col(f"_c{m}") for m in range(PQ_M)],
+                )
             )
-        )
-        idx_mm = (
-            streamed.exceptAll(ref).count() + ref.exceptAll(streamed).count()
-        )
-        n_arrivals = arrivals.count()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        drop_state(spark, f"{tmp}/state")
-        shutil.rmtree(tmp, ignore_errors=True)
+            idx_mm = (
+                streamed.exceptAll(ref).count() + ref.exceptAll(streamed).count()
+            )
+            n_arrivals = arrivals.count()
+        finally:
+            drop_state(spark, f"{tmp}/state")
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         [
             (
@@ -2280,28 +2274,26 @@ def neardup_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tmp = tempfile.mkdtemp(prefix="neardup_report_")
     state_dir = f"{tmp}/state"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        for i in range(nb):
-            process_neardup_batch(
-                docs.filter(F.col("doc_id") % nb == i),
-                i,
-                state_dir,
-                f"{tmp}/pairs",
-            )
-        tables = sc.state_tables(state_dir, STATE_SPECS)
-        pre = {k: spark.table(n).count() for k, n in tables.items()}
-        compact_neardup_state(spark, state_dir)
-        post = {k: spark.table(n).count() for k, n in tables.items()}
-        # copies of the bands table holding data after compaction (the
-        # live dir plus any swap asides) — exactly one
-        generations = len(sc.state_copies(spark, state_dir, "bands"))
-        n_docs = docs.count()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        drop_state(spark, state_dir)
-        shutil.rmtree(tmp, ignore_errors=True)
+    with _audit_shuffle_partitions(spark):
+        try:
+            for i in range(nb):
+                process_neardup_batch(
+                    docs.filter(F.col("doc_id") % nb == i),
+                    i,
+                    state_dir,
+                    f"{tmp}/pairs",
+                )
+            tables = sc.state_tables(state_dir, STATE_SPECS)
+            pre = {k: spark.table(n).count() for k, n in tables.items()}
+            compact_neardup_state(spark, state_dir)
+            post = {k: spark.table(n).count() for k, n in tables.items()}
+            # copies of the bands table holding data after compaction (the
+            # live dir plus any swap asides) — exactly one
+            generations = len(sc.state_copies(spark, state_dir, "bands"))
+            n_docs = docs.count()
+        finally:
+            drop_state(spark, state_dir)
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         [
             (
@@ -2405,26 +2397,24 @@ def trigger_cadence_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     run_id = uuid.uuid4().hex[:12]
     tmp = tempfile.mkdtemp(prefix=f"cadence_{run_id}_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        src = f"{tmp}/src"
-        fixture.coalesce(1).write.mode("overwrite").parquet(src)
+    with _audit_shuffle_partitions(spark):
+        try:
+            src = f"{tmp}/src"
+            fixture.coalesce(1).write.mode("overwrite").parquet(src)
 
-        def fire():
-            stream = spark.readStream.schema(fixture.schema).parquet(src)
-            return run_job_stream(stream, kb, f"{tmp}/out", f"{tmp}/ckpt")
+            def fire():
+                stream = spark.readStream.schema(fixture.schema).parquet(src)
+                return run_job_stream(stream, kb, f"{tmp}/out", f"{tmp}/ckpt")
 
-        q1 = fire()
-        q1.awaitTermination(180)
-        n_run1 = spark.read.parquet(f"{tmp}/out").count()
-        q2 = fire()
-        q2.awaitTermination(180)
-        rows_in_run2 = sum(p["numInputRows"] for p in q2.recentProgress)
-        n_run2 = spark.read.parquet(f"{tmp}/out").count()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(tmp, ignore_errors=True)
+            q1 = fire()
+            q1.awaitTermination(180)
+            n_run1 = spark.read.parquet(f"{tmp}/out").count()
+            q2 = fire()
+            q2.awaitTermination(180)
+            rows_in_run2 = sum(p["numInputRows"] for p in q2.recentProgress)
+            n_run2 = spark.read.parquet(f"{tmp}/out").count()
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
     return spark.range(1).select(
         F.lit(n_run1).cast("long").alias("n_output_run1"),
         F.lit(rows_in_run2).cast("long").alias("n_input_run2"),

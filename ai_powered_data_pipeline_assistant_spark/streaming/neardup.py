@@ -85,7 +85,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ai_powered_data_pipeline_assistant_spark.execution import materialize
+from ai_powered_data_pipeline_assistant_spark.execution import (
+    materialize,
+    run_concurrently,
+)
 from ai_powered_data_pipeline_assistant_spark.streaming import (
     state_compaction as sc,
 )
@@ -189,9 +192,14 @@ def process_neardup_batch(
     the verified-pairs frame (lazy; stable to re-evaluate post-write —
     reads are strictly pre-batch + identity-excluded)."""
     from ai_powered_data_pipeline_assistant_spark.operators.dedup import (
+        JACCARD_THRESHOLD,
         minhash_band_frame,
         minhash_sig_aggs,
+        minhash_verified_pairs,
         shingles,
+    )
+    from ai_powered_data_pipeline_assistant_spark.streaming.jobs import (
+        idempotent_append,
     )
 
     spark = docs.sparkSession
@@ -199,11 +207,11 @@ def process_neardup_batch(
     # Shingle/sign ONCE per arriving doc; each frame feeds two
     # consumers (candidate join/verify + state append). sigs_b (and with
     # it postings_b) is materialized EAGERLY: the uniqueness gate below
-    # runs on a pool thread concurrently with the main thread's candidate
-    # build, and both consume these frames — racing two jobs into the
-    # same lazy localCheckpoint makes the loser's tasks sit in block-lock
-    # waits (measured: zero-CPU 1.5 s/task stalls); one eager pass up
-    # front gives every overlapped consumer cached blocks instead.
+    # runs concurrently with the candidate build, and both consume these
+    # frames — racing two jobs into the same lazy localCheckpoint makes
+    # the loser's tasks sit in block-lock waits (measured: zero-CPU 1.5
+    # s/task stalls); one eager pass up front gives every overlapped
+    # consumer cached blocks instead.
     postings_b = shingles(docs).transform(materialize)
     sigs_b = materialize(
         postings_b.groupBy("doc_id").agg(*minhash_sig_aggs()), eager=True
@@ -261,187 +269,165 @@ def process_neardup_batch(
                 "or state must be deduped before ingest (module docstring)"
             )
 
-    # Overlap (round 12, guide §2.6): the gate's two bounded driver
-    # round-trips run on a pool thread while the main thread builds and
-    # materializes the candidate frames — both sides only READ. The gate
-    # is JOINED before any output or state write starts, so a rejected
-    # batch is still write-free (pinned by test_neardup_stream's
-    # rearrival test), and the state appends then run on the pool thread
-    # while the main thread executes the verify + gate-output writes.
-    from concurrent.futures import ThreadPoolExecutor
+    def _candidates() -> tuple[DataFrame, DataFrame, list[int] | None]:
+        bands_s = _not_own(spark.table(tables["bands"]).filter(pre))
 
-    pool = ThreadPoolExecutor(max_workers=2)
-    try:
-        gate = pool.submit(_uniqueness_gate)
-        out = _neardup_candidates_and_outputs(
-            spark, docs, batch_id, tables, pre, _not_own,
-            postings_b, sigs_b, bands_b, sizes_b,
-            pairs_dir, decisions_dir, gate, pool,
+        a = bands_b.select(F.col("doc_id").alias("a_id"), "band", "band_key")
+        # Cross-batch candidates: batch bands vs accumulated state bands.
+        # Only the batch side shuffles into the state's bucket layout; the
+        # state scan itself is Exchange-free (plan-asserted).
+        b_state = bands_s.select(
+            F.col("doc_id").alias("b_id"), "band", "band_key"
         )
-    finally:
-        pool.shutdown(wait=True)
-    return out
+        cross = a.join(b_state, ["band", "band_key"]).select("a_id", "b_id")
+        # Within-batch candidates: the batch's own bands self-joined —
+        # batch-sized, so two near-dups arriving TOGETHER are still caught.
+        b_self = bands_b.select(
+            F.col("doc_id").alias("b_id"), "band", "band_key"
+        )
+        within = (
+            a.join(b_self, ["band", "band_key"])
+            .filter(F.col("a_id") > F.col("b_id"))
+            .select("a_id", "b_id")
+        )
+        candidates = (
+            cross.unionByName(within).distinct().transform(materialize)
+        )
 
+        # Verification partners (the b side) can be state docs (cross) or
+        # batch docs (within): fetch state rows by candidate ids only
+        # (bucket-pruned point reads under the cap, doc_id-bucketed
+        # semi-join above it — never a per-batch full postings scan) and
+        # union the batch's own in-memory frames. `ids_under_cap` makes
+        # the path choice in one bounded driver round-trip.
+        cand_ids = (
+            candidates.select(F.col("b_id").alias("doc_id"))
+            .distinct()
+            .transform(materialize)
+        )
+        return candidates, cand_ids, ids_under_cap(cand_ids)
 
-def _neardup_candidates_and_outputs(
-    spark, docs, batch_id, tables, pre, _not_own,
-    postings_b, sigs_b, bands_b, sizes_b,
-    pairs_dir, decisions_dir, gate, pool,
-):
-    """Candidate join + verify + gate outputs + state appends for one
-    batch (the tail of `process_neardup_batch`, factored so the overlap
-    pool wraps it; see that function for semantics)."""
-    from ai_powered_data_pipeline_assistant_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
-        minhash_verified_pairs,
+    # Overlap (round 12, guide §2.6), two phases. Phase 1: the gate's two
+    # bounded driver round-trips run beside the candidate build — both
+    # sides only READ. The phase joins the gate before any output or
+    # state write starts, so a rejected batch is still write-free (pinned
+    # by test_neardup_stream's rearrival test).
+    _, (candidates, cand_ids, partner_ids) = run_concurrently(
+        _uniqueness_gate, _candidates
     )
-    from ai_powered_data_pipeline_assistant_spark.streaming.jobs import (
-        idempotent_append,
-    )
 
-    bands_s = _not_own(spark.table(tables["bands"]).filter(pre))
-
-    a = bands_b.select(F.col("doc_id").alias("a_id"), "band", "band_key")
-    # Cross-batch candidates: batch bands vs accumulated state bands.
-    # Only the batch side shuffles into the state's bucket layout; the
-    # state scan itself is Exchange-free (plan-asserted).
-    b_state = bands_s.select(F.col("doc_id").alias("b_id"), "band", "band_key")
-    cross = a.join(b_state, ["band", "band_key"]).select("a_id", "b_id")
-    # Within-batch candidates: the batch's own bands self-joined —
-    # batch-sized, so two near-dups arriving TOGETHER are still caught.
-    b_self = bands_b.select(F.col("doc_id").alias("b_id"), "band", "band_key")
-    within = (
-        a.join(b_self, ["band", "band_key"])
-        .filter(F.col("a_id") > F.col("b_id"))
-        .select("a_id", "b_id")
-    )
-    candidates = cross.unionByName(within).distinct().transform(materialize)
-
-    # Verification partners (the b side) can be state docs (cross) or
-    # batch docs (within): fetch state rows by candidate ids only
-    # (bucket-pruned point reads under the cap, doc_id-bucketed semi-join
-    # above it — never a per-batch full postings scan) and union the
-    # batch's own in-memory frames. `ids_under_cap` makes the path
-    # choice in one bounded driver round-trip.
-    cand_ids = (
-        candidates.select(F.col("b_id").alias("doc_id"))
-        .distinct()
-        .transform(materialize)
-    )
-    partner_ids = ids_under_cap(cand_ids)
-    # join the uniqueness gate BEFORE any write starts: a rejected batch
-    # must stay write-free (test_neardup_stream's rearrival contract)
-    gate.result()
-    # State appends: each table's batch partition is replaced on
+    # Phase 2. State appends: each table's batch partition is replaced on
     # replay, so a crash between ANY two of the three commits leaves a
     # state the replay repairs in place — no write-order sentinel
     # needed (columns ordered to each table's schema; insertInto is
     # position-based). They consume only the already-materialized batch
-    # frames, so they run on the pool thread (guide §2.6) while the main
-    # thread executes the verify + gate-output writes below; joined
-    # before return so a failed append still propagates ahead of the
-    # caller's checkpoint commit.
+    # frames, so they run beside the verify + gate-output writes; the
+    # phase joins both before return, so a failed append propagates
+    # ahead of the caller's checkpoint commit.
     bid = F.lit(batch_id).cast("long")
-    appends = pool.submit(
-        sc.insert_dynamic,
-        spark,
-        [
-            (
-                bands_b.select(
-                    "doc_id", "band", "band_key", bid.alias("batch_id")
+
+    def _append_state() -> None:
+        sc.insert_dynamic(
+            spark,
+            [
+                (
+                    bands_b.select(
+                        "doc_id", "band", "band_key", bid.alias("batch_id")
+                    ),
+                    tables["bands"],
                 ),
-                tables["bands"],
-            ),
-            (
-                postings_b.select("doc_id", "h", bid.alias("batch_id")),
-                tables["postings"],
-            ),
-            (
-                sizes_b.select("doc_id", "sz", bid.alias("batch_id")),
-                tables["sizes"],
-            ),
-        ],
-    )
-    # SAFETY DEPENDENCY of the overlap above (ADVICE r12): these state
-    # reads execute on the main thread WHILE the pool thread may be
-    # deleting/replacing the current batch's partition (a replay). They
-    # are safe only because `pre` (batch_id < current) is a CATALOG
-    # PARTITION filter, pruned before file listing — the reader never
-    # lists the partition being rewritten. Any future read path that
-    # lists these tables without partition pruning (path-based
-    # spark.read.parquet, schema inference over the root, a pruning
-    # regression) would race the append and hit FileNotFoundException or
-    # torn data. Keep state reads going through spark.table(...)
-    # .filter(pre); tests/test_neardup_stream.py pins the pruned shape.
-    postings_part = partner_pruned(
-        _not_own(spark.table(tables["postings"]).filter(pre)).select(
-            "doc_id", "h"
-        ),
-        partner_ids,
-        cand_ids,
-    ).unionByName(postings_b)
-    sizes_part = partner_pruned(
-        _not_own(spark.table(tables["sizes"]).filter(pre)).select(
-            "doc_id", "sz"
-        ),
-        partner_ids,
-        cand_ids,
-    ).unionByName(sizes_b)
-    pairs = minhash_verified_pairs(
-        candidates,
-        postings_b,
-        postings_part,
-        sizes_b,
-        sizes_part,
-        JACCARD_THRESHOLD,
-    )
-    out = pairs.select(
-        F.col("a_id").alias("later_id"),
-        F.col("b_id").alias("earlier_id"),
-        "jaccard",
-    )
-    if decisions_dir is not None or pairs_dir is not None:
-        # the verified set always has a second potential consumer (the
-        # returned frame feeds composed pipelines); cut the band-join +
-        # postings-verify lineage so it runs once (round-12 review)
-        out = materialize(out)
-    if pairs_dir is not None:
-        # Exactly-once pair output: batch_id-partitioned dynamic overwrite.
-        idempotent_append(out, batch_id, pairs_dir)
-    if decisions_dir is not None:
-        # bounded gate output: ONE row per arriving doc (max-struct
-        # partial-aggregates map-side — the keeper discipline)
-        best = (
-            out.groupBy("later_id")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("jaccard"), (-F.col("earlier_id")).alias("ni")
-                    )
-                ).alias("_b")
-            )
-            .select(
-                F.col("later_id").alias("doc_id"),
-                F.col("_b.jaccard").alias("best_jaccard"),
-                (-F.col("_b.ni")).cast("long").alias("best_partner"),
-            )
+                (
+                    postings_b.select("doc_id", "h", bid.alias("batch_id")),
+                    tables["postings"],
+                ),
+                (
+                    sizes_b.select("doc_id", "sz", bid.alias("batch_id")),
+                    tables["sizes"],
+                ),
+            ],
         )
-        # every ARRIVING doc gets a row — including shingle-less docs
-        # that never reach the signature frame (trivially not dups)
-        decisions = (
-            docs.select("doc_id")
-            .join(best, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.col("best_partner").isNotNull().alias("is_dup"),
-                F.col("best_jaccard").cast("double").alias("best_jaccard"),
-                F.col("best_partner").cast("long").alias("best_partner"),
-            )
+
+    def _verify_and_write() -> DataFrame:
+        # SAFETY DEPENDENCY of the overlap above (ADVICE r12): these state
+        # reads execute on the main thread WHILE the pool thread may be
+        # deleting/replacing the current batch's partition (a replay). They
+        # are safe only because `pre` (batch_id < current) is a CATALOG
+        # PARTITION filter, pruned before file listing — the reader never
+        # lists the partition being rewritten. Any future read path that
+        # lists these tables without partition pruning (path-based
+        # spark.read.parquet, schema inference over the root, a pruning
+        # regression) would race the append and hit FileNotFoundException or
+        # torn data. Keep state reads going through spark.table(...)
+        # .filter(pre); tests/test_neardup_stream.py pins the pruned shape.
+        postings_part = partner_pruned(
+            _not_own(spark.table(tables["postings"]).filter(pre)).select(
+                "doc_id", "h"
+            ),
+            partner_ids,
+            cand_ids,
+        ).unionByName(postings_b)
+        sizes_part = partner_pruned(
+            _not_own(spark.table(tables["sizes"]).filter(pre)).select(
+                "doc_id", "sz"
+            ),
+            partner_ids,
+            cand_ids,
+        ).unionByName(sizes_b)
+        pairs = minhash_verified_pairs(
+            candidates,
+            postings_b,
+            postings_part,
+            sizes_b,
+            sizes_part,
+            JACCARD_THRESHOLD,
         )
-        idempotent_append(decisions, batch_id, decisions_dir)
-    # join the state appends launched above — failures propagate here,
-    # before the caller can commit its checkpoint
-    appends.result()
+        out = pairs.select(
+            F.col("a_id").alias("later_id"),
+            F.col("b_id").alias("earlier_id"),
+            "jaccard",
+        )
+        if decisions_dir is not None or pairs_dir is not None:
+            # the verified set always has a second potential consumer (the
+            # returned frame feeds composed pipelines); cut the band-join +
+            # postings-verify lineage so it runs once (round-12 review)
+            out = materialize(out)
+        if pairs_dir is not None:
+            # Exactly-once pair output: batch_id-partitioned dynamic overwrite.
+            idempotent_append(out, batch_id, pairs_dir)
+        if decisions_dir is not None:
+            # bounded gate output: ONE row per arriving doc (max-struct
+            # partial-aggregates map-side — the keeper discipline)
+            best = (
+                out.groupBy("later_id")
+                .agg(
+                    F.max(
+                        F.struct(
+                            F.col("jaccard"), (-F.col("earlier_id")).alias("ni")
+                        )
+                    ).alias("_b")
+                )
+                .select(
+                    F.col("later_id").alias("doc_id"),
+                    F.col("_b.jaccard").alias("best_jaccard"),
+                    (-F.col("_b.ni")).cast("long").alias("best_partner"),
+                )
+            )
+            # every ARRIVING doc gets a row — including shingle-less docs
+            # that never reach the signature frame (trivially not dups)
+            decisions = (
+                docs.select("doc_id")
+                .join(best, "doc_id", "left")
+                .select(
+                    "doc_id",
+                    F.col("best_partner").isNotNull().alias("is_dup"),
+                    F.col("best_jaccard").cast("double").alias("best_jaccard"),
+                    F.col("best_partner").cast("long").alias("best_partner"),
+                )
+            )
+            idempotent_append(decisions, batch_id, decisions_dir)
+        return out
+
+    _, out = run_concurrently(_append_state, _verify_and_write)
     return out
 
 

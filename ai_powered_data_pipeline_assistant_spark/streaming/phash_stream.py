@@ -59,7 +59,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ai_powered_data_pipeline_assistant_spark.execution import materialize
+from ai_powered_data_pipeline_assistant_spark.execution import (
+    materialize,
+    run_concurrently,
+)
 from ai_powered_data_pipeline_assistant_spark.operators.multimodal import (
     PHASH_BANDS,
     PHASH_HAMMING_T,
@@ -141,14 +144,18 @@ def process_phash_batch(
     reads strictly pre-batch state partitions and excludes the arriving
     ids by identity, so re-evaluating it AFTER this batch's state writes
     still yields this batch's pairs."""
+    from ai_powered_data_pipeline_assistant_spark.streaming.jobs import (
+        idempotent_append,
+    )
+
     spark = media.sparkSession
     tables = sc.create_state(spark, state_dir, STATE_SPECS, "phash stream")
 
     # hash ONCE per arriving blob; the frame feeds bands, verify, and
-    # both state appends. EAGER: the uniqueness gate (pool thread) and
-    # the band build (main thread) both consume it concurrently — racing
-    # two jobs into one lazy localCheckpoint costs block-lock waits (see
-    # the neardup twin); one eager pass gives both sides cached blocks.
+    # both state appends. EAGER: the uniqueness gate and the band build
+    # both consume it concurrently — racing two jobs into one lazy
+    # localCheckpoint costs block-lock waits (see the neardup twin); one
+    # eager pass gives both sides cached blocks.
     hashed_b = materialize(
         phash_projection(media.select("media_id", "modality", "payload")),
         eager=True,
@@ -209,37 +216,6 @@ def process_phash_batch(
                 "or state must be deduped before ingest (module docstring)"
             )
 
-    # Overlap (round 12, guide §2.6 — the neardup twin's discipline): the
-    # gate's bounded driver round-trips run on a pool thread while the
-    # main thread builds and materializes the candidate frames (both
-    # sides only READ); the gate is joined before any write starts, so a
-    # rejected batch stays write-free (test_phash_stream's contract), and
-    # the state appends then ride the pool thread under the verify +
-    # gate-output writes.
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=2)
-    try:
-        gate = pool.submit(_uniqueness_gate)
-        return _phash_candidates_and_outputs(
-            spark, hashed_b, own_ids, hashes_state, batch_id, tables,
-            pre, _not_own, pairs_dir, decisions_dir, gate, pool,
-        )
-    finally:
-        pool.shutdown(wait=True)
-
-
-def _phash_candidates_and_outputs(
-    spark, hashed_b, own_ids, hashes_state, batch_id, tables,
-    pre, _not_own, pairs_dir, decisions_dir, gate, pool,
-):
-    """Candidate join + verify + gate outputs + state appends for one
-    batch (the tail of `process_phash_batch`, factored so the overlap
-    pool wraps it; see that function for semantics)."""
-    from ai_powered_data_pipeline_assistant_spark.streaming.jobs import (
-        idempotent_append,
-    )
-
     bands_b = materialize(
         hashed_b.select(
             "media_id",
@@ -257,137 +233,154 @@ def _phash_candidates_and_outputs(
             ).alias("bk"),
         ).select("media_id", "modality", "bk.band", "bk.band_val")
     )
-    bands_s = _not_own(spark.table(tables["pbands"]).filter(pre))
 
-    a = bands_b.select(
-        F.col("media_id").alias("a_id"), "modality", "band", "band_val"
-    )
-    # cross-batch candidates: only the batch side shuffles into the
-    # state's bucket layout
-    b_state = bands_s.select(
-        F.col("media_id").alias("b_id"), "modality", "band", "band_val"
-    )
-    cross = a.join(b_state, ["modality", "band", "band_val"]).select(
-        "a_id", "b_id"
-    )
-    # within-batch: two near-dup blobs arriving together are still caught
-    b_self = bands_b.select(
-        F.col("media_id").alias("b_id"), "modality", "band", "band_val"
-    )
-    within = (
-        a.join(b_self, ["modality", "band", "band_val"])
-        .filter(F.col("a_id") > F.col("b_id"))
-        .select("a_id", "b_id")
-    )
-    candidates = cross.unionByName(within).distinct().transform(materialize)
+    def _candidates() -> tuple[DataFrame, DataFrame, list[int] | None]:
+        bands_s = _not_own(spark.table(tables["pbands"]).filter(pre))
 
-    # partner hashes: candidate-pruned state point reads + the batch's own
-    cand_ids = (
-        candidates.select(F.col("b_id").alias("doc_id"))
-        .distinct()
-        .transform(materialize)
+        a = bands_b.select(
+            F.col("media_id").alias("a_id"), "modality", "band", "band_val"
+        )
+        # cross-batch candidates: only the batch side shuffles into the
+        # state's bucket layout
+        b_state = bands_s.select(
+            F.col("media_id").alias("b_id"), "modality", "band", "band_val"
+        )
+        cross = a.join(b_state, ["modality", "band", "band_val"]).select(
+            "a_id", "b_id"
+        )
+        # within-batch: two near-dup blobs arriving together are still caught
+        b_self = bands_b.select(
+            F.col("media_id").alias("b_id"), "modality", "band", "band_val"
+        )
+        within = (
+            a.join(b_self, ["modality", "band", "band_val"])
+            .filter(F.col("a_id") > F.col("b_id"))
+            .select("a_id", "b_id")
+        )
+        candidates = (
+            cross.unionByName(within).distinct().transform(materialize)
+        )
+
+        # partner hashes: candidate-pruned state point reads + the batch's own
+        cand_ids = (
+            candidates.select(F.col("b_id").alias("doc_id"))
+            .distinct()
+            .transform(materialize)
+        )
+        return candidates, cand_ids, ids_under_cap(cand_ids)
+
+    # Overlap (round 12, guide §2.6 — the neardup twin's two phases):
+    # phase 1 runs the gate's bounded driver round-trips beside the
+    # candidate build (both sides only READ) and joins the gate before
+    # any write starts, so a rejected batch stays write-free
+    # (test_phash_stream's contract). Phase 2 runs the state appends —
+    # they consume only the already-materialized batch frames, are
+    # disjoint idempotent per-partition overwrites, and their commit
+    # order was never load-bearing — beside the verify + gate-output
+    # writes, and joins both before return so failures propagate ahead
+    # of the caller's checkpoint commit.
+    _, (candidates, cand_ids, partner_ids) = run_concurrently(
+        _uniqueness_gate, _candidates
     )
-    partner_ids = ids_under_cap(cand_ids)
-    # join the uniqueness gate BEFORE any write starts (write-free
-    # rejection), then launch the state appends on the pool thread: they
-    # consume only the already-materialized batch frames, are disjoint
-    # idempotent per-partition overwrites, and their commit order was
-    # never load-bearing — joined before return so failures propagate
-    # ahead of the caller's checkpoint commit (guide §2.6).
-    gate.result()
     bid = F.lit(batch_id).cast("long")
-    appends = pool.submit(
-        sc.insert_dynamic,
-        spark,
-        [
-            (
-                bands_b.select(
+
+    def _append_state() -> None:
+        sc.insert_dynamic(
+            spark,
+            [
+                (
+                    bands_b.select(
+                        "media_id",
+                        "modality",
+                        "band",
+                        "band_val",
+                        bid.alias("batch_id"),
+                    ),
+                    tables["pbands"],
+                ),
+                (
+                    hashed_b.select(
+                        "media_id",
+                        "modality",
+                        *_BAND_COLS,
+                        bid.alias("batch_id"),
+                    ),
+                    tables["phashes"],
+                ),
+            ],
+        )
+
+    def _verify_and_write() -> DataFrame:
+        partners = partner_pruned(
+            _not_own(hashes_state)
+            .withColumnRenamed("media_id", "doc_id")
+            .select("doc_id", *_BAND_COLS),
+            partner_ids,
+            cand_ids,
+        ).unionByName(
+            hashed_b.select(
+                F.col("media_id").alias("doc_id"), *_BAND_COLS
+            )
+        )
+        ha = hashed_b.select(
+            F.col("media_id").alias("a_id"),
+            *[F.col(c).alias(f"a_{c}") for c in _BAND_COLS],
+        )
+        hb = partners.select(
+            F.col("doc_id").alias("b_id"),
+            *[F.col(c).alias(f"p_{c}") for c in _BAND_COLS],
+        )
+        hamming = sum(
+            F.bit_count(F.col(f"a_{c}").bitwiseXOR(F.col(f"p_{c}")))
+            for c in _BAND_COLS
+        )
+        pairs = (
+            candidates.join(ha, "a_id")
+            .join(hb, "b_id")
+            .select(
+                F.col("a_id").alias("later_id"),
+                F.col("b_id").alias("earlier_id"),
+                hamming.cast("long").alias("hamming"),
+            )
+            .filter(F.col("hamming") <= PHASH_HAMMING_T)
+        )
+        if decisions_dir is not None or pairs_dir is not None:
+            # the verified set always has a second potential consumer — the
+            # returned frame feeds composed pipelines' clusterers — and the
+            # lineage behind it (candidate-pruned state point reads + two
+            # hash joins) is exactly what must not run twice; cut it once
+            # here (round-12 review)
+            pairs = materialize(pairs)
+        if pairs_dir is not None:
+            idempotent_append(pairs, batch_id, pairs_dir)
+        if decisions_dir is not None:
+            # bounded gate output: ONE row per arriving blob. The min-struct
+            # partial-aggregates map-side, so even a degenerate family's pair
+            # set collapses inside the scan stage instead of shuffling.
+            best = (
+                pairs.groupBy("later_id")
+                .agg(F.min(F.struct("hamming", "earlier_id")).alias("_b"))
+                .select(
+                    F.col("later_id").alias("media_id"),
+                    F.col("_b.hamming").alias("best_hamming"),
+                    F.col("_b.earlier_id").alias("best_partner"),
+                )
+            )
+            decisions = (
+                hashed_b.select("media_id", "modality")
+                .join(best, "media_id", "left")
+                .select(
                     "media_id",
                     "modality",
-                    "band",
-                    "band_val",
-                    bid.alias("batch_id"),
-                ),
-                tables["pbands"],
-            ),
-            (
-                hashed_b.select(
-                    "media_id", "modality", *_BAND_COLS, bid.alias("batch_id")
-                ),
-                tables["phashes"],
-            ),
-        ],
-    )
-    partners = partner_pruned(
-        _not_own(hashes_state)
-        .withColumnRenamed("media_id", "doc_id")
-        .select("doc_id", *_BAND_COLS),
-        partner_ids,
-        cand_ids,
-    ).unionByName(
-        hashed_b.select(
-            F.col("media_id").alias("doc_id"), *_BAND_COLS
-        )
-    )
-    ha = hashed_b.select(
-        F.col("media_id").alias("a_id"),
-        *[F.col(c).alias(f"a_{c}") for c in _BAND_COLS],
-    )
-    hb = partners.select(
-        F.col("doc_id").alias("b_id"),
-        *[F.col(c).alias(f"p_{c}") for c in _BAND_COLS],
-    )
-    hamming = sum(
-        F.bit_count(F.col(f"a_{c}").bitwiseXOR(F.col(f"p_{c}")))
-        for c in _BAND_COLS
-    )
-    pairs = (
-        candidates.join(ha, "a_id")
-        .join(hb, "b_id")
-        .select(
-            F.col("a_id").alias("later_id"),
-            F.col("b_id").alias("earlier_id"),
-            hamming.cast("long").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= PHASH_HAMMING_T)
-    )
-    if decisions_dir is not None or pairs_dir is not None:
-        # the verified set always has a second potential consumer — the
-        # returned frame feeds composed pipelines' clusterers — and the
-        # lineage behind it (candidate-pruned state point reads + two
-        # hash joins) is exactly what must not run twice; cut it once
-        # here (round-12 review)
-        pairs = materialize(pairs)
-    if pairs_dir is not None:
-        idempotent_append(pairs, batch_id, pairs_dir)
-    if decisions_dir is not None:
-        # bounded gate output: ONE row per arriving blob. The min-struct
-        # partial-aggregates map-side, so even a degenerate family's pair
-        # set collapses inside the scan stage instead of shuffling.
-        best = (
-            pairs.groupBy("later_id")
-            .agg(F.min(F.struct("hamming", "earlier_id")).alias("_b"))
-            .select(
-                F.col("later_id").alias("media_id"),
-                F.col("_b.hamming").alias("best_hamming"),
-                F.col("_b.earlier_id").alias("best_partner"),
+                    F.col("best_partner").isNotNull().alias("is_dup"),
+                    F.col("best_hamming").cast("long").alias("best_hamming"),
+                    F.col("best_partner").cast("long").alias("best_partner"),
+                )
             )
-        )
-        decisions = (
-            hashed_b.select("media_id", "modality")
-            .join(best, "media_id", "left")
-            .select(
-                "media_id",
-                "modality",
-                F.col("best_partner").isNotNull().alias("is_dup"),
-                F.col("best_hamming").cast("long").alias("best_hamming"),
-                F.col("best_partner").cast("long").alias("best_partner"),
-            )
-        )
-        idempotent_append(decisions, batch_id, decisions_dir)
-    # join the state appends launched above — failures propagate here,
-    # before the caller can commit its checkpoint
-    appends.result()
+            idempotent_append(decisions, batch_id, decisions_dir)
+        return pairs
+
+    _, pairs = run_concurrently(_append_state, _verify_and_write)
     return pairs
 
 

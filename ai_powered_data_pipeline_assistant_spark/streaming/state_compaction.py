@@ -78,13 +78,13 @@ from __future__ import annotations
 import hashlib
 import os
 import re
-from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_powered_data_pipeline_assistant_spark import hadoop_fs
+from ai_powered_data_pipeline_assistant_spark.execution import run_concurrently
 
 HISTORY_BATCH_ID = -1
 # Creation width of every state table. At 100 TB size buckets so one
@@ -226,7 +226,7 @@ def insert_dynamic(
     bucket layout — repartitioned on its bucket columns at its catalog
     width, the function bucketing itself uses — so an append lands one
     file per bucket instead of one per (task, bucket). Several inserts
-    run concurrently from a small driver pool: they touch disjoint
+    run concurrently (`execution.run_concurrently`): they touch disjoint
     tables, each is idempotent under replay, and their commit order is
     not load-bearing; a failure propagates before the caller can commit
     its checkpoint."""
@@ -234,14 +234,7 @@ def insert_dynamic(
     for df, table in inserts:
         cols, width = _bucket_spec(spark, table)
         writes.append((df.repartition(width, *cols).write, table))
-    if len(writes) == 1:
-        writer, table = writes[0]
-        writer.insertInto(table, overwrite=True)
-        return
-    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        futures = [pool.submit(w.insertInto, t, True) for w, t in writes]
-    for f in futures:
-        f.result()
+    run_concurrently(*(lambda w=w, t=t: w.insertInto(t, True) for w, t in writes))
 
 
 def newest_batch_id(frames: Iterable[DataFrame]) -> int | None:

@@ -156,6 +156,23 @@ def test_compaction_preserves_state_and_stream_continues(spark, sf_dir, dirs):
         drop_state(spark, state)
 
 
+def _sentinel_jobs(spark) -> list[int]:
+    """Fire a tiny action in a group of its own and return its job ids,
+    sorted: job ids are sequential, so two sentinels bracket the jobs
+    fired between them."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "phash-stream-sentinel"
+    before = set(tracker.getJobIdsForGroup(group))
+    sc.setJobGroup(group, "sentinel")
+    try:
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    return sorted(set(tracker.getJobIdsForGroup(group)) - before)
+
+
 def test_run_phash_stream_wiring(spark, sf_dir, dirs):
     """End-to-end through the actual writeStream wiring (round-11 review:
     the parity drives process_phash_batch directly, so a defect confined
@@ -163,7 +180,10 @@ def test_run_phash_stream_wiring(spark, sf_dir, dirs):
     otherwise ship untested): a file-source stream at one file per
     micro-batch must terminate and produce exactly the batch operator's
     banded pair set (unordered — the file order is the source's, not
-    ours)."""
+    ours). Every job the query fires — the overlapped gate, state
+    appends and sinks included — lands in the query's job group
+    (``runId``, the group ``StreamingQuery.stop()`` cancels), none
+    outside any group."""
     import tempfile as _tf
 
     from ai_powered_data_pipeline_assistant_spark.operators.multimodal import (
@@ -189,8 +209,15 @@ def test_run_phash_stream_wiring(spark, sf_dir, dirs):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
+        tracker = spark.sparkContext.statusTracker()
+        no_group = set(tracker.getJobIdsForGroup(None))
+        first = _sentinel_jobs(spark)[-1] + 1
         q = run_phash_stream(stream, state, pairs_dir, f"{tmp}/ckpt")
         q.awaitTermination(120)
+        query_jobs = set(range(first, _sentinel_jobs(spark)[0]))
+        assert query_jobs
+        assert query_jobs <= set(tracker.getJobIdsForGroup(str(q.runId)))
+        assert set(tracker.getJobIdsForGroup(None)) - no_group == set()
         got = {
             (min(r["later_id"], r["earlier_id"]),
              max(r["later_id"], r["earlier_id"]),
