@@ -19,6 +19,17 @@ Parity pins promoted from pytest (same fixtures, same comparisons):
 - session_stream_parity: streaming/sessions.session_counts_stream ≡
   operators/windows.session_window_counts (tests/test_streaming.py:300)
 
+Shared harnesses (private; each audit keeps only its own claims):
+- `_audit_scope`: a fresh temp dir at 4 shuffle partitions that drops the
+  audit's state tables and removes the dir on exit, also on error;
+- `_ordered_arrivals` + `_await`: N frames replayed as N ordered
+  micro-batches, and the wait that fails loudly on an unfinished stream;
+- `_sym_diff`: the symmetric-difference row count (exceptAll both ways);
+- `_state_report`: ingest → count → compact → count over `STATE_SPECS`,
+  the spine of the four `*_state_report` rows;
+- `_run_to_memory`: one snapshot → one micro-batch → memory sink, for the
+  single-operator twins.
+
 Scale notes: the harness is an AUDIT surface — it snapshots the fixture to
 a temp directory and uses a memory sink, both bounded by the audit input
 (per-key state rows, not raw events). A production parity check would
@@ -34,8 +45,6 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import time
-import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,23 +56,149 @@ from ai_powered_data_pipeline_assistant_spark.execution import (
     materialize_barrier,
 )
 
+# how long an availableNow audit stream may run before it counts as stuck
+_STREAM_TIMEOUT_S = 300
+
 
 @contextmanager
-def _audit_shuffle_partitions(spark: SparkSession):
-    """Run the block at 4 shuffle partitions, restoring the previous value
-    on exit: each stateful batch opens one state-store instance per
-    shuffle partition, and the audit inputs are small, so 4 keeps every
-    audit seconds-fast (a streaming query bakes the count into its own
-    checkpoint only). The conf is SESSION-GLOBAL, so it races whatever
-    else runs on the session at the same time: never enter this scope
-    from inside an `execution.run_concurrently` thunk, where it would
-    change, and then restore under, the sibling thunks' jobs."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+def _session_conf(spark: SparkSession, key: str, value: str):
+    """Set one session conf for the block, restoring the previous value on
+    exit. Session confs are SESSION-GLOBAL, so this races whatever else
+    runs on the session at the same time: never enter it from inside an
+    `execution.run_concurrently` thunk, where it would change, and then
+    restore under, the sibling thunks' jobs."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set(key, prev)
+
+
+@contextmanager
+def _audit_scope(spark: SparkSession, drop_state=None):
+    """Yield a fresh temp dir for one audit, run at 4 shuffle partitions:
+    each stateful batch opens one state-store instance per shuffle
+    partition, and the audit inputs are small, so 4 keeps every audit
+    seconds-fast (a streaming query bakes the count into its own
+    checkpoint only). On exit, also when the audit raises, the state
+    tables the audit registered at ``{tmp}/state`` are dropped with
+    ``drop_state(spark, state_dir)`` (when the audit has state) and the
+    dir is removed — every comparison must materialize inside the block."""
+    tmp = tempfile.mkdtemp(prefix="stream_parity_")
+    with _session_conf(spark, "spark.sql.shuffle.partitions", "4"):
+        try:
+            yield tmp
+        finally:
+            try:
+                if drop_state is not None:
+                    drop_state(spark, f"{tmp}/state")
+            finally:
+                shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _ordered_arrivals(
+    spark: SparkSession, tmp: str, frames: list[DataFrame]
+) -> DataFrame:
+    """Write ``frames`` under ``{tmp}/src`` as one parquet file each, with
+    strictly increasing mtimes in frame order, and return the
+    ``maxFilesPerTrigger=1`` readStream over them: frame i arrives as
+    micro-batch i.
+
+    Arrival-order assumption (ADVICE r9, shared by every ordered replay):
+    with ``maxFilesPerTrigger=1`` and utime-staggered files,
+    FileStreamSource picks oldest-mtime-first — Spark implementation
+    behavior (``latestFirst`` defaults false), not a documented contract.
+    If a Spark upgrade ever reorders the batches, the multi-batch audits
+    do NOT silently pass: their batch index is content-derived (e.g.
+    doc_id % NB), so the stream's accumulated state would diverge from
+    the arrival-rule oracle and the parity row fails loudly as
+    mismatches > 0."""
+    src = f"{tmp}/src"
+    os.makedirs(src)
+    for i, frame in enumerate(frames):
+        part_dir = f"{tmp}/part{i}"
+        frame.coalesce(1).write.mode("overwrite").parquet(part_dir)
+        part = next(f for f in os.listdir(part_dir) if f.endswith(".parquet"))
+        dst = f"{src}/batch{i:03d}.parquet"
+        os.replace(f"{part_dir}/{part}", dst)
+        mtime = 1_700_000_000 + i * 100
+        os.utime(dst, (mtime, mtime))
+    return (
+        spark.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
+def _await(q, what: str) -> None:
+    """Wait for an availableNow query to finish. One still running after
+    ``_STREAM_TIMEOUT_S`` is stopped (before the audit's dirs are removed)
+    and raises TimeoutError: a partial output table would be scored as a
+    semantic mismatch — or, for a rerun, as a match."""
+    if not q.awaitTermination(_STREAM_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"{what} did not finish within {_STREAM_TIMEOUT_S} s — parity "
+            "cannot be assessed on a partial output"
+        )
+
+
+def _sym_diff(a: DataFrame, b: DataFrame) -> int:
+    """Symmetric-difference row count of two same-schema frames (multiset
+    semantics via exceptAll, both directions — zero iff the frames are
+    equal)."""
+    return a.exceptAll(b).count() + b.exceptAll(a).count()
+
+
+def _count_parity(
+    spark: SparkSession, got: DataFrame, want: DataFrame, n_stream: str, n_batch: str
+) -> DataFrame:
+    """One row: both sides' row counts (named ``n_stream``/``n_batch``),
+    the symmetric-difference size, and the equality verdict."""
+    mismatches = _sym_diff(got, want)
+    return spark.range(1).select(
+        F.lit(got.count()).cast("long").alias(n_stream),
+        F.lit(want.count()).cast("long").alias(n_batch),
+        F.lit(mismatches).cast("long").alias("n_mismatches"),
+        F.lit(mismatches == 0).alias("stream_equals_batch"),
+    )
+
+
+def _state_report(spark: SparkSession, nb: int, ingest, layers, compact):
+    """Ingest arrival batches 0..nb-1 via ``ingest(i)``, count the rows and
+    committed parquet files of every table in ``layers`` (``(state_dir,
+    STATE_SPECS)`` pairs: a composed pipeline keeps delegated state in
+    sub-dirs), run ``compact()``, count again. Returns ``(rows after
+    compaction per table, rows_preserved, files_not_increased)`` — a row
+    the rewrite lost or duplicated changes the reported counts."""
+    from ai_powered_data_pipeline_assistant_spark import hadoop_fs
+    from ai_powered_data_pipeline_assistant_spark.streaming import (
+        state_compaction as sc,
+    )
+
+    for i in range(nb):
+        ingest(i)
+    tables = [
+        (k, name, sc.table_path(state_dir, k))
+        for state_dir, specs in layers
+        for k, name in sc.state_tables(state_dir, specs).items()
+    ]
+
+    def counts():
+        return (
+            {k: spark.table(n).count() for k, n, _p in tables},
+            {k: hadoop_fs.count_parquet(spark, p) for k, _n, p in tables},
+        )
+
+    pre_rows, pre_files = counts()
+    compact()
+    post_rows, post_files = counts()
+    return (
+        post_rows,
+        pre_rows == post_rows,
+        all(post_files[k] <= pre_files[k] for k in post_files),
+    )
 
 
 def _run_to_memory(
@@ -71,29 +206,22 @@ def _run_to_memory(
     fixture: DataFrame,
     build,
     output_mode: str,
-    poll_stateful: bool,
+    no_data_batches: bool = True,
 ) -> DataFrame:
-    """Snapshot `fixture` to parquet, run `build(stream)` availableNow into
-    a memory sink, and return the sink as a DataFrame. One parquet file →
-    one micro-batch → every key emits exactly once (deterministic output).
-
-    ProcessingTimeTimeout stateful queries stay active after the data is
-    consumed (state-TTL cleanup), so those are polled until the input is
-    fully processed and then stopped — identical to the pytest harness."""
-    run_id = uuid.uuid4().hex[:12]
-    tmp = tempfile.mkdtemp(prefix=f"stream_parity_{run_id}_")
-    src = f"{tmp}/src"
-    name = f"parity_{run_id}"
-    fixture.coalesce(1).write.mode("overwrite").parquet(src)
-    # the stop condition below must know how many rows the stream OWES:
-    # availableNow may split the snapshot across micro-batches, and a
-    # data-available/progress-exists check alone can fire in the gap
-    # between batches and stop the query before all input is consumed
-    n_input = spark.read.parquet(src).count()
-    stream = spark.readStream.schema(fixture.schema).parquet(src)
-    out = build(stream)
-    with _audit_shuffle_partitions(spark):
-        try:
+    """Replay `fixture` as one arrival file, run `build(stream)`
+    availableNow into a memory sink, and return the sink as a DataFrame.
+    One file → one micro-batch → every key emits exactly once.
+    ``no_data_batches=False`` is for ProcessingTimeTimeout queries, which
+    otherwise run no-data batches (state-TTL cleanup) forever; append-mode
+    queries need them — the no-data batch emits their closed sessions."""
+    with _audit_scope(spark) as tmp:
+        name = f"parity_{os.path.basename(tmp)}"
+        out = build(_ordered_arrivals(spark, tmp, [fixture]))
+        with _session_conf(
+            spark,
+            "spark.sql.streaming.noDataMicroBatches.enabled",
+            str(no_data_batches).lower(),
+        ):
             q = (
                 out.writeStream.outputMode(output_mode)
                 .format("memory")
@@ -102,34 +230,8 @@ def _run_to_memory(
                 .trigger(availableNow=True)
                 .start()
             )
-            if poll_stateful:
-                deadline = time.monotonic() + 120
-                while time.monotonic() < deadline:
-                    done = (
-                        not q.status["isDataAvailable"]
-                        and not q.status["isTriggerActive"]
-                        and sum(p["numInputRows"] for p in q.recentProgress)
-                        >= n_input
-                    )
-                    if done:
-                        break
-                    time.sleep(0.5)
-                q.stop()
-                q.awaitTermination(30)
-            else:
-                q.awaitTermination(180)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+            _await(q, f"{name} stream")
     return spark.sql(f"SELECT * FROM {name}")
-
-
-def _sym_diff_count(a: DataFrame, b: DataFrame) -> F.Column:
-    """Helper frame: one row with the symmetric-difference row count of two
-    same-schema frames (multiset semantics via exceptAll, both directions —
-    zero iff the frames are equal)."""
-    missing = b.exceptAll(a).count()
-    extra = a.exceptAll(b).count()
-    return F.lit(missing + extra).cast("long")
 
 
 def cdc_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -148,23 +250,14 @@ def cdc_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_id", "event_type", "value", "ts"
     )
     stream_state = _run_to_memory(
-        spark, fixture, cdc_latest_state, "update", poll_stateful=True
+        spark, fixture, cdc_latest_state, "update", no_data_batches=False
     )
     got = (
         stream_state.filter(~F.col("deleted"))
         .select("user_id", "last_op", F.round("last_value", 6).alias("last_value"))
     )
     want = cdc_apply(spark, sf_dir).select("user_id", "last_op", "last_value")
-    return spark.range(1).select(
-        F.lit(got.count()).cast("long").alias("n_keys_stream"),
-        F.lit(want.count()).cast("long").alias("n_keys_batch"),
-        _sym_diff_count(got, want).alias("n_mismatches"),
-    ).select(
-        "n_keys_stream",
-        "n_keys_batch",
-        "n_mismatches",
-        (F.col("n_mismatches") == 0).alias("stream_equals_batch"),
-    )
+    return _count_parity(spark, got, want, "n_keys_stream", "n_keys_batch")
 
 
 def funnel_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -183,7 +276,7 @@ def funnel_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_type", "ts"
     )
     state = _run_to_memory(
-        spark, fixture, funnel_conversion_state, "update", poll_stateful=True
+        spark, fixture, funnel_conversion_state, "update", no_data_batches=False
     )
     totals = state.agg(
         F.sum(F.col("s1_view").cast("long")).alias("n1"),
@@ -243,23 +336,14 @@ def session_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("events").alias("event_cnt"),
         )
 
-    got = _run_to_memory(spark, fixture, build, "append", poll_stateful=False)
+    got = _run_to_memory(spark, fixture, build, "append")
     want = session_window_counts(spark, sf_dir).select(
         "user_id",
         F.col("session_start").cast("timestamp").alias("session_start"),
         F.col("session_end").cast("timestamp").alias("session_end"),
         "event_cnt",
     )
-    return spark.range(1).select(
-        F.lit(got.count()).cast("long").alias("n_sessions_stream"),
-        F.lit(want.count()).cast("long").alias("n_sessions_batch"),
-        _sym_diff_count(got, want).alias("n_mismatches"),
-    ).select(
-        "n_sessions_stream",
-        "n_sessions_batch",
-        "n_mismatches",
-        (F.col("n_mismatches") == 0).alias("stream_equals_batch"),
-    )
+    return _count_parity(spark, got, want, "n_sessions_stream", "n_sessions_batch")
 
 
 def _job_requests(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -308,7 +392,7 @@ def job_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(stream: DataFrame) -> DataFrame:
         return answer_requests(dedup_requests(stream), kb)
 
-    got = _run_to_memory(spark, fixture, build, "append", poll_stateful=False)
+    got = _run_to_memory(spark, fixture, build, "append")
     # materialize_barrier (lineage barrier REQUIRED, all modes): exceptAll trips an
     # INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on this left-join + concat plan
     # (Catalyst project-collapse bug); materializing the twin sidesteps it
@@ -316,22 +400,16 @@ def job_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     want = answer_requests(dedup_requests(base_req), kb).transform(
         materialize_barrier
     )
-    n_stream = got.count()
+    n_no_context = got.join(
+        kb.select(F.col("doc_id").alias("job_id")), "job_id", "left_anti"
+    ).count()
+    mismatches = _sym_diff(got, want)
     return spark.range(1).select(
-        F.lit(n_stream).cast("long").alias("n_requests_stream"),
+        F.lit(got.count()).cast("long").alias("n_requests_stream"),
         F.lit(want.count()).cast("long").alias("n_requests_batch"),
-        F.lit(
-            got.join(
-                kb.select(F.col("doc_id").alias("job_id")), "job_id", "left_anti"
-            ).count()
-        ).cast("long").alias("n_no_context"),
-        _sym_diff_count(got, want).alias("n_mismatches"),
-    ).select(
-        "n_requests_stream",
-        "n_requests_batch",
-        "n_no_context",
-        "n_mismatches",
-        (F.col("n_mismatches") == 0).alias("stream_equals_batch"),
+        F.lit(n_no_context).cast("long").alias("n_no_context"),
+        F.lit(mismatches).cast("long").alias("n_mismatches"),
+        F.lit(mismatches == 0).alias("stream_equals_batch"),
     )
 
 
@@ -352,15 +430,11 @@ def channel_fanout_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     base_req, kb = _job_requests(spark, sf_dir)
-    run_id = uuid.uuid4().hex[:12]
-    tmp = tempfile.mkdtemp(prefix=f"chan_parity_{run_id}_")
-    try:
-        src = f"{tmp}/src"
-        base_req.coalesce(1).write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(base_req.schema).parquet(src)
+    with _audit_scope(spark) as tmp:
+        stream = _ordered_arrivals(spark, tmp, [base_req])
         answered = answer_requests(dedup_requests(stream), kb)
         q = publish_channels(answered, f"{tmp}/chan", f"{tmp}/ckpt")
-        q.awaitTermination(180)
+        _await(q, "channel fan-out stream")
 
         got_resp = spark.read.parquet(f"{tmp}/chan/job_responses")
         got_tasks = spark.read.parquet(f"{tmp}/chan/tasks")
@@ -378,30 +452,23 @@ def channel_fanout_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("INFO").alias("level"),
             F.concat(F.lit("answered "), "request_id").alias("message"),
         )
-        # all comparisons must materialize BEFORE the finally rmtree
         n_resp = got_resp.count()
         n_tasks = got_tasks.count()
         n_logs = got_logs.count()
-        resp_mm = (
-            want_resp.exceptAll(got_resp.select(*want_resp.columns)).count()
-            + got_resp.select(*want_resp.columns).exceptAll(want_resp).count()
+        mismatches = sum(
+            _sym_diff(want, got.select(*want.columns))
+            for want, got in (
+                (want_resp, got_resp),
+                (want_tasks, got_tasks),
+                (want_logs, got_logs),
+            )
         )
-        task_mm = (
-            want_tasks.exceptAll(got_tasks.select(*want_tasks.columns)).count()
-            + got_tasks.select(*want_tasks.columns).exceptAll(want_tasks).count()
-        )
-        log_mm = (
-            want_logs.exceptAll(got_logs.select(*want_logs.columns)).count()
-            + got_logs.select(*want_logs.columns).exceptAll(want_logs).count()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.range(1).select(
         F.lit(n_resp).cast("long").alias("n_responses"),
         F.lit(n_tasks).cast("long").alias("n_tasks"),
         F.lit(n_logs).cast("long").alias("n_logs"),
-        F.lit(resp_mm + task_mm + log_mm).cast("long").alias("n_mismatches"),
-        F.lit(resp_mm + task_mm + log_mm == 0).alias("channels_equal_batch"),
+        F.lit(mismatches).cast("long").alias("n_mismatches"),
+        F.lit(mismatches == 0).alias("channels_equal_batch"),
     )
 
 
@@ -435,69 +502,35 @@ def neardup_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nb = NEARDUP_STREAM_BATCHES
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    run_id = uuid.uuid4().hex[:12]
-    tmp = tempfile.mkdtemp(prefix=f"neardup_stream_{run_id}_")
-    with _audit_shuffle_partitions(spark):
-        try:
-            src = f"{tmp}/src"
-            os.makedirs(src)
-            # one FILE per arrival batch, mtimes strictly increasing so the
-            # file source replays them in batch-index order
-            for i in range(nb):
-                part_dir = f"{tmp}/part{i}"
-                docs.filter(F.col("doc_id") % nb == i).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(part_dir)
-                part = next(
-                    f for f in os.listdir(part_dir) if f.endswith(".parquet")
-                )
-                dst = f"{src}/batch{i:03d}.parquet"
-                shutil.copyfile(f"{part_dir}/{part}", dst)
-                os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
-            stream = (
-                spark.readStream.schema(docs.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            q = run_neardup_stream(
-                stream, f"{tmp}/state", f"{tmp}/pairs", f"{tmp}/ckpt"
-            )
-            if not q.awaitTermination(300):
-                # a partial pairs table would read as a semantic mismatch;
-                # fail loudly instead (and stop before the dirs are removed)
-                q.stop()
-                q.awaitTermination(30)
-                raise TimeoutError(
-                    "neardup stream did not finish within 300 s — parity "
-                    "cannot be assessed on a partial pairs table"
-                )
-            # pairs land batch_id-partitioned (the exactly-once writer);
-            # project the semantic columns
-            got = spark.read.parquet(f"{tmp}/pairs").select(
-                "later_id", "earlier_id", "jaccard"
-            )
-            want = minhash_lsh_pairs_for(
-                docs,
-                pair_cond=lambda a, b: ((a % nb) > (b % nb))
-                | (((a % nb) == (b % nb)) & (a > b)),
-            ).select(
-                F.col("a_id").alias("later_id"),
-                F.col("b_id").alias("earlier_id"),
-                "jaccard",
-            ).transform(materialize_barrier)
-            n_stream = got.count()
-            n_batch = want.count()
-            missing = want.exceptAll(got).count()
-            extra = got.exceptAll(want).count()
-        finally:
-            drop_state(spark, f"{tmp}/state")
-            shutil.rmtree(tmp, ignore_errors=True)
+    with _audit_scope(spark, drop_state) as tmp:
+        stream = _ordered_arrivals(
+            spark, tmp, [docs.filter(F.col("doc_id") % nb == i) for i in range(nb)]
+        )
+        q = run_neardup_stream(stream, f"{tmp}/state", f"{tmp}/pairs", f"{tmp}/ckpt")
+        _await(q, "neardup stream")
+        # pairs land batch_id-partitioned (the exactly-once writer);
+        # project the semantic columns
+        got = spark.read.parquet(f"{tmp}/pairs").select(
+            "later_id", "earlier_id", "jaccard"
+        )
+        want = minhash_lsh_pairs_for(
+            docs,
+            pair_cond=lambda a, b: ((a % nb) > (b % nb))
+            | (((a % nb) == (b % nb)) & (a > b)),
+        ).select(
+            F.col("a_id").alias("later_id"),
+            F.col("b_id").alias("earlier_id"),
+            "jaccard",
+        ).transform(materialize_barrier)
+        n_stream = got.count()
+        n_batch = want.count()
+        mismatches = _sym_diff(want, got)
     return spark.range(1).select(
         F.lit(n_stream).cast("long").alias("n_pairs_stream"),
         F.lit(n_batch).cast("long").alias("n_pairs_batch"),
         F.lit(nb).cast("int").alias("n_batches"),
-        F.lit(missing + extra).cast("long").alias("n_mismatches"),
-        F.lit(missing + extra == 0).alias("stream_equals_batch"),
+        F.lit(mismatches).cast("long").alias("n_mismatches"),
+        F.lit(mismatches == 0).alias("stream_equals_batch"),
     )
 
 
@@ -525,17 +558,8 @@ def substring_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle from the shared CTE — the dedup-at-ingest deployment emits
     TEXT, and this pins the text, not just the accounting.
     The oracle recomputes the batch side via the shared `_spans_cte` with
-    the arrival ordering and pins mismatches = 0.
-
-    Arrival-order assumption (ADVICE r9, shared by the other ordered
-    replays — crawl_pipeline_parity, neardup_stream_parity): with
-    ``maxFilesPerTrigger=1`` and utime-staggered files, FileStreamSource
-    picks oldest-mtime-first — Spark implementation behavior
-    (``latestFirst`` defaults false), not a documented contract. If a
-    Spark upgrade ever reorders the batches, this does NOT silently pass:
-    the batch index is content-derived (doc_id % NB), so the stream's
-    accumulated accounting would diverge from the arrival-rule oracle and
-    the parity row fails loudly as mismatches > 0."""
+    the arrival ordering and pins mismatches = 0 (arrival order: see
+    `_ordered_arrivals`)."""
     from ai_powered_data_pipeline_assistant_spark.operators.substring import (
         accounting_for,
         dropped_intervals_for,
@@ -550,106 +574,71 @@ def substring_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nb = SUBSTR_STREAM_BATCHES
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    run_id = uuid.uuid4().hex[:12]
-    tmp = tempfile.mkdtemp(prefix=f"substr_stream_{run_id}_")
-    with _audit_shuffle_partitions(spark):
-        try:
-            src = f"{tmp}/src"
-            os.makedirs(src)
-            for i in range(nb):
-                part_dir = f"{tmp}/part{i}"
-                docs.filter(F.col("doc_id") % nb == i).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(part_dir)
-                part = next(
-                    f for f in os.listdir(part_dir) if f.endswith(".parquet")
-                )
-                dst = f"{src}/batch{i:03d}.parquet"
-                shutil.copyfile(f"{part_dir}/{part}", dst)
-                os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
-            stream = (
-                spark.readStream.schema(docs.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            q = run_substring_stream(
-                stream, f"{tmp}/state", f"{tmp}/acct", f"{tmp}/ckpt",
-                text_out_dir=f"{tmp}/text",
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                q.awaitTermination(30)
-                raise TimeoutError(
-                    "substring stream did not finish within 300 s — parity "
-                    "cannot be assessed on a partial accounting table"
-                )
-            got = spark.read.parquet(f"{tmp}/acct").select(
-                "doc_id",
-                "n_tokens",
-                "n_dup_spans",
-                "dup_windows",
-                "tokens_removed",
-                "tokens_kept",
-            )
-            sized = sized_docs(docs)
-            # explicitly TEXT-keyed batch twin (the engine default is the
-            # 128-bit hash): this parity's job includes surfacing any hash
-            # collision as a mismatch, so the reference side must carry the
-            # exact text semantics the oracle recomputes
-            dropped_arrival = dropped_intervals_for(
-                sized, batch_expr=lambda d: d % nb, hash_keyed=False
-            ).transform(materialize_barrier)
-            want = accounting_for(sized, dropped_arrival).transform(
-                materialize_barrier
-            )
-            n_stream = got.count()
-            n_batch = want.count()
-            missing = want.exceptAll(got).count()
-            extra = got.exceptAll(want).count()
-            # rewrite leg (round 10): the per-batch TEXT output accumulated by
-            # the stream must equal the batch rewrite under the arrival order
-            text_cols = ["doc_id", "tokens_kept", "kept_text"]
-            got_text = spark.read.parquet(f"{tmp}/text").select(*text_cols)
-            # barriered like `want` above: rewrite_for's left-join + lambda +
-            # concat plan feeds two exceptAll directions — the barrier both
-            # avoids recomputing the whole pipeline per direction and
-            # sidesteps the Catalyst project-collapse class documented at the
-            # accounting leg (round-10 review)
-            want_text = materialize_barrier(
-                rewrite_for(sized, dropped_arrival).select(*text_cols)
-            )
-            rw_mismatch = (
-                got_text.exceptAll(want_text).count()
-                + want_text.exceptAll(got_text).count()
-            )
-            fp_row = got_text.select(
-                "tokens_kept", kept_fingerprint_col().alias("fh")
-            ).agg(
-                F.sum("tokens_kept").cast("long").alias("tk"),
-                F.expr("bit_xor(fh)").cast("long").alias("fp"),
-            ).first()
-            tokens_kept_total = int(fp_row["tk"] or 0)
-            corpus_fp = int(fp_row["fp"] or 0)
-            # sums are NULL on an empty accounting table (empty corpus /
-            # zero-row batches) — coalesce so the parity row reports zeros
-            # instead of raising TypeError (ADVICE r9)
-            dropped_total = got.agg(
-                F.sum("dup_windows").cast("long")
-            ).first()[0] or 0
-            removed_total = got.agg(
-                F.sum("tokens_removed").cast("long")
-            ).first()[0] or 0
-        finally:
-            drop_state(spark, f"{tmp}/state")
-            shutil.rmtree(tmp, ignore_errors=True)
+    with _audit_scope(spark, drop_state) as tmp:
+        stream = _ordered_arrivals(
+            spark, tmp, [docs.filter(F.col("doc_id") % nb == i) for i in range(nb)]
+        )
+        q = run_substring_stream(
+            stream, f"{tmp}/state", f"{tmp}/acct", f"{tmp}/ckpt",
+            text_out_dir=f"{tmp}/text",
+        )
+        _await(q, "substring stream")
+        got = spark.read.parquet(f"{tmp}/acct").select(
+            "doc_id",
+            "n_tokens",
+            "n_dup_spans",
+            "dup_windows",
+            "tokens_removed",
+            "tokens_kept",
+        )
+        sized = sized_docs(docs)
+        # explicitly TEXT-keyed batch twin (the engine default is the
+        # 128-bit hash): this parity's job includes surfacing any hash
+        # collision as a mismatch, so the reference side must carry the
+        # exact text semantics the oracle recomputes
+        dropped_arrival = dropped_intervals_for(
+            sized, batch_expr=lambda d: d % nb, hash_keyed=False
+        ).transform(materialize_barrier)
+        want = accounting_for(sized, dropped_arrival).transform(
+            materialize_barrier
+        )
+        n_stream = got.count()
+        n_batch = want.count()
+        mismatches = _sym_diff(want, got)
+        # rewrite leg (round 10): the per-batch TEXT output accumulated by
+        # the stream must equal the batch rewrite under the arrival order
+        text_cols = ["doc_id", "tokens_kept", "kept_text"]
+        got_text = spark.read.parquet(f"{tmp}/text").select(*text_cols)
+        # barriered like `want` above: rewrite_for's left-join + lambda +
+        # concat plan feeds two exceptAll directions — the barrier both
+        # avoids recomputing the whole pipeline per direction and
+        # sidesteps the Catalyst project-collapse class documented at the
+        # accounting leg (round-10 review)
+        want_text = materialize_barrier(
+            rewrite_for(sized, dropped_arrival).select(*text_cols)
+        )
+        rw_mismatch = _sym_diff(got_text, want_text)
+        fp_row = got_text.select(
+            "tokens_kept", kept_fingerprint_col().alias("fh")
+        ).agg(
+            F.sum("tokens_kept").cast("long").alias("tk"),
+            F.expr("bit_xor(fh)").cast("long").alias("fp"),
+        ).first()
+        tokens_kept_total = int(fp_row["tk"] or 0)
+        corpus_fp = int(fp_row["fp"] or 0)
+        # sums are NULL on an empty accounting table (empty corpus /
+        # zero-row batches) — coalesce so the parity row reports zeros
+        # instead of raising TypeError (ADVICE r9)
+        dropped_total = got.agg(F.sum("dup_windows").cast("long")).first()[0] or 0
+        removed_total = got.agg(F.sum("tokens_removed").cast("long")).first()[0] or 0
     return spark.range(1).select(
         F.lit(n_stream).cast("long").alias("n_docs_stream"),
         F.lit(n_batch).cast("long").alias("n_docs_batch"),
         F.lit(int(dropped_total)).cast("long").alias("dropped_windows"),
         F.lit(int(removed_total)).cast("long").alias("tokens_removed"),
         F.lit(nb).cast("int").alias("n_batches"),
-        F.lit(missing + extra).cast("long").alias("n_mismatches"),
-        F.lit(missing + extra == 0).alias("stream_equals_batch"),
+        F.lit(mismatches).cast("long").alias("n_mismatches"),
+        F.lit(mismatches == 0).alias("stream_equals_batch"),
         F.lit(tokens_kept_total).cast("long").alias("tokens_kept_total"),
         F.lit(corpus_fp).cast("long").alias("corpus_fingerprint"),
         F.lit(rw_mismatch).cast("long").alias("rewrite_mismatches"),
@@ -658,6 +647,42 @@ def substring_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CLUSTER_STREAM_BATCHES = 3
+
+
+def _replay_lsh_clusters(docs: DataFrame, nb: int, state: str) -> DataFrame:
+    """Ingest the corpus's verified LSH pairs through the union-find as
+    ``nb`` pair-batches, each pair in the ARRIVAL batch of its LATER
+    endpoint (doc_id % nb — a cross-batch pair exists the moment its
+    second doc arrives). Returns the barriered pairs."""
+    from ai_powered_data_pipeline_assistant_spark.operators.dedup import (
+        minhash_lsh_pairs_for,
+    )
+    from ai_powered_data_pipeline_assistant_spark.streaming.cluster_stream import (
+        process_cluster_batch,
+    )
+
+    pairs = materialize_barrier(minhash_lsh_pairs_for(docs).select("a_id", "b_id"))
+    arrival = F.greatest(F.col("a_id") % nb, F.col("b_id") % nb)
+    for i in range(nb):
+        process_cluster_batch(pairs.filter(arrival == i), i, state)
+    return pairs
+
+
+def _cluster_columns(assign: DataFrame) -> list:
+    """The membership scalars of a (doc_id, cluster_id) assignment, as the
+    four leading literal columns of both clustering audits' rows."""
+    agg = assign.agg(
+        F.count("*").cast("long"),
+        F.countDistinct("cluster_id").cast("long"),
+        F.sum("cluster_id").cast("long"),
+    ).first()
+    largest = assign.groupBy("cluster_id").count().agg(F.max("count")).first()[0]
+    return [
+        F.lit(int(agg[0])).cast("long").alias("n_docs_clustered"),
+        F.lit(int(agg[1])).cast("long").alias("n_clusters"),
+        F.lit(int(largest or 0)).cast("long").alias("largest_cluster"),
+        F.lit(int(agg[2] or 0)).cast("long").alias("cluster_id_checksum"),
+    ]
 
 
 def neardup_cluster_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -676,70 +701,32 @@ def neardup_cluster_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     pins mismatches = 0 — while the STREAM side's correctness burden is
     exactly the redirect machinery (merges across batches) the replay
     exercises."""
-    from ai_powered_data_pipeline_assistant_spark.operators.dedup import (
-        minhash_lsh_pairs_for,
-    )
     from ai_powered_data_pipeline_assistant_spark.operators.neardup_cluster import (
         connected_components,
     )
     from ai_powered_data_pipeline_assistant_spark.streaming.cluster_stream import (
         drop_state,
-        process_cluster_batch,
-        read_redirects,
         resolved_roots,
-    )
-    from ai_powered_data_pipeline_assistant_spark.streaming.state_compaction import (
-        state_tables,
     )
 
     nb = CLUSTER_STREAM_BATCHES
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    run_id = uuid.uuid4().hex[:12]
-    tmp = tempfile.mkdtemp(prefix=f"cc_stream_{run_id}_")
-    state = f"{tmp}/state"
-    with _audit_shuffle_partitions(spark):
-        try:
-            pairs = materialize_barrier(
-                minhash_lsh_pairs_for(docs).select("a_id", "b_id")
+    with _audit_scope(spark, drop_state) as tmp:
+        state = f"{tmp}/state"
+        pairs = _replay_lsh_clusters(docs, nb, state)
+        got = resolved_roots(spark, state).select(
+            "doc_id", "cluster_id"
+        ).transform(materialize_barrier)
+        want = materialize_barrier(
+            connected_components(pairs).select(
+                F.col("node").alias("doc_id"),
+                F.col("label").alias("cluster_id"),
             )
-            bidx = lambda c: c % nb  # noqa: E731
-            arrival = F.greatest(bidx(F.col("a_id")), bidx(F.col("b_id")))
-            for i in range(nb):
-                process_cluster_batch(
-                    pairs.filter(arrival == i), i, state
-                )
-            got = resolved_roots(spark, state).select(
-                "doc_id", "cluster_id"
-            ).transform(materialize_barrier)
-            want = materialize_barrier(
-                connected_components(pairs).select(
-                    F.col("node").alias("doc_id"),
-                    F.col("label").alias("cluster_id"),
-                )
-            )
-            mismatches = (
-                got.exceptAll(want).count() + want.exceptAll(got).count()
-            )
-            n_docs = got.count()
-            agg = got.agg(
-                F.countDistinct("cluster_id").cast("long").alias("nc"),
-                F.sum("cluster_id").cast("long").alias("ck"),
-            ).first()
-            largest = (
-                got.groupBy("cluster_id")
-                .count()
-                .agg(F.max("count").cast("long"))
-                .first()[0]
-                or 0
-            )
-        finally:
-            drop_state(spark, state)
-            shutil.rmtree(tmp, ignore_errors=True)
+        )
+        mismatches = _sym_diff(got, want)
+        membership = _cluster_columns(got)
     return spark.range(1).select(
-        F.lit(n_docs).cast("long").alias("n_docs_clustered"),
-        F.lit(int(agg["nc"] or 0)).cast("long").alias("n_clusters"),
-        F.lit(int(largest)).cast("long").alias("largest_cluster"),
-        F.lit(int(agg["ck"] or 0)).cast("long").alias("cluster_id_checksum"),
+        *membership,
         F.lit(nb).cast("int").alias("n_batches"),
         F.lit(mismatches).cast("long").alias("n_mismatches"),
         F.lit(mismatches == 0).alias("stream_equals_batch"),
@@ -788,59 +775,52 @@ def media_phash_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nb = PHASH_STREAM_BATCHES
     media = media_table(spark, sf_dir).select("media_id", "modality", "payload")
-    tmp = tempfile.mkdtemp(prefix="phash_stream_")
-    state = f"{tmp}/state"
-    pairs_dir = f"{tmp}/pairs"
-    with _audit_shuffle_partitions(spark):
-        try:
-            for i in range(nb):
-                process_phash_batch(
-                    media.filter(F.col("media_id") % nb == i), i, state, pairs_dir
-                )
-                if i == 1:
-                    compact_phash_state(spark, state)
-            # explicit schema: a zero-pair corpus leaves only _SUCCESS markers
-            # in the batch partitions, and schema inference would crash where
-            # the oracle correctly reports n_pairs = 0 (round-11 review)
-            got = materialize_barrier(
-                spark.read.schema(f"{PAIRS_SCHEMA}, batch_id long")
-                .parquet(pairs_dir)
-                .select("later_id", "earlier_id", "hamming")
+    with _audit_scope(spark, drop_state) as tmp:
+        state = f"{tmp}/state"
+        pairs_dir = f"{tmp}/pairs"
+        for i in range(nb):
+            process_phash_batch(
+                media.filter(F.col("media_id") % nb == i), i, state, pairs_dir
             )
-            batch_pairs = _phash_pairs(phash_projection(media).transform(materialize))
-            ba = F.col("a_id") % nb
-            bb = F.col("b_id") % nb
-            # arrival orientation: later = the endpoint whose batch is later;
-            # same batch → the greater id (a_id < b_id in the batch frame)
-            want = materialize_barrier(
-                batch_pairs.select(
-                    F.when(ba > bb, F.col("a_id"))
-                    .otherwise(F.col("b_id"))
-                    .alias("later_id"),
-                    F.when(ba > bb, F.col("b_id"))
-                    .otherwise(F.col("a_id"))
-                    .alias("earlier_id"),
-                    "hamming",
-                )
+            if i == 1:
+                compact_phash_state(spark, state)
+        # explicit schema: a zero-pair corpus leaves only _SUCCESS markers
+        # in the batch partitions, and schema inference would crash where
+        # the oracle correctly reports n_pairs = 0 (round-11 review)
+        got = materialize_barrier(
+            spark.read.schema(f"{PAIRS_SCHEMA}, batch_id long")
+            .parquet(pairs_dir)
+            .select("later_id", "earlier_id", "hamming")
+        )
+        batch_pairs = _phash_pairs(phash_projection(media).transform(materialize))
+        ba = F.col("a_id") % nb
+        bb = F.col("b_id") % nb
+        # arrival orientation: later = the endpoint whose batch is later;
+        # same batch → the greater id (a_id < b_id in the batch frame)
+        want = materialize_barrier(
+            batch_pairs.select(
+                F.when(ba > bb, F.col("a_id"))
+                .otherwise(F.col("b_id"))
+                .alias("later_id"),
+                F.when(ba > bb, F.col("b_id"))
+                .otherwise(F.col("a_id"))
+                .alias("earlier_id"),
+                "hamming",
             )
-            mismatches = (
-                got.exceptAll(want).count() + want.exceptAll(got).count()
+        )
+        mismatches = _sym_diff(got, want)
+        agg = got.agg(
+            F.count("*").cast("long").alias("np"),
+            F.sum("hamming").cast("long").alias("hs"),
+            F.sum(
+                F.when(
+                    F.col("later_id") % nb != F.col("earlier_id") % nb, 1
+                ).otherwise(0)
             )
-            agg = got.agg(
-                F.count("*").cast("long").alias("np"),
-                F.sum("hamming").cast("long").alias("hs"),
-                F.sum(
-                    F.when(
-                        F.col("later_id") % nb != F.col("earlier_id") % nb, 1
-                    ).otherwise(0)
-                )
-                .cast("long")
-                .alias("ncross"),
-            ).first()
-            n_blobs = media.count()
-        finally:
-            drop_state(spark, state)
-            shutil.rmtree(tmp, ignore_errors=True)
+            .cast("long")
+            .alias("ncross"),
+        ).first()
+        n_blobs = media.count()
     n_pairs = int(agg["np"] or 0)
     n_cross = int(agg["ncross"] or 0)
     return spark.range(1).select(
@@ -919,12 +899,8 @@ def phash_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows per blob ever ingested, phashes exactly one hash row per blob
     (both recomputed by the SQL twin from the corpus), compaction
     preserves every row, and never increases the file count."""
-    from ai_powered_data_pipeline_assistant_spark import hadoop_fs
     from ai_powered_data_pipeline_assistant_spark.operators.multimodal import (
         media_table,
-    )
-    from ai_powered_data_pipeline_assistant_spark.streaming import (
-        state_compaction as sc,
     )
     from ai_powered_data_pipeline_assistant_spark.streaming.phash_stream import (
         STATE_SPECS,
@@ -935,38 +911,25 @@ def phash_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nb = PHASH_STREAM_BATCHES
     media = media_table(spark, sf_dir).select("media_id", "modality", "payload")
-    tmp = tempfile.mkdtemp(prefix="phash_report_")
-    state = f"{tmp}/state"
-    with _audit_shuffle_partitions(spark):
-        try:
-            for i in range(nb):
-                process_phash_batch(
-                    media.filter(F.col("media_id") % nb == i),
-                    i,
-                    state,
-                    f"{tmp}/pairs",
-                )
-            tables = sc.state_tables(state, STATE_SPECS)
-            pre = {k: spark.table(n).count() for k, n in tables.items()}
-            pre_files = {
-                k: hadoop_fs.count_parquet(spark, sc.table_path(state, k))
-                for k in tables
-            }
-            post_files = compact_phash_state(spark, state)
-            post = {k: spark.table(n).count() for k, n in tables.items()}
-            n_blobs = media.count()
-        finally:
-            drop_state(spark, state)
-            shutil.rmtree(tmp, ignore_errors=True)
+    with _audit_scope(spark, drop_state) as tmp:
+        state = f"{tmp}/state"
+        rows, preserved, files_ok = _state_report(
+            spark,
+            nb,
+            lambda i: process_phash_batch(
+                media.filter(F.col("media_id") % nb == i), i, state, f"{tmp}/pairs"
+            ),
+            [(state, STATE_SPECS)],
+            lambda: compact_phash_state(spark, state),
+        )
+        n_blobs = media.count()
     return spark.range(1).select(
         F.lit(n_blobs).cast("long").alias("n_blobs"),
         F.lit(nb).cast("int").alias("n_batches"),
-        F.lit(post["pbands"]).cast("long").alias("pbands_rows"),
-        F.lit(post["phashes"]).cast("long").alias("phashes_rows"),
-        F.lit(pre == post).alias("rows_preserved"),
-        F.lit(
-            all(post_files[k] <= pre_files[k] for k in post_files)
-        ).alias("files_not_increased"),
+        F.lit(rows["pbands"]).cast("long").alias("pbands_rows"),
+        F.lit(rows["phashes"]).cast("long").alias("phashes_rows"),
+        F.lit(preserved).alias("rows_preserved"),
+        F.lit(files_ok).alias("files_not_increased"),
     )
 
 
@@ -1026,58 +989,34 @@ def media_cluster_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     nb = MEDIA_CLUSTER_BATCHES
-    tmp = tempfile.mkdtemp(prefix="media_cc_stream_")
-    state = f"{tmp}/state"
-    with _audit_shuffle_partitions(spark):
-        try:
-            media = media_table(spark, sf_dir)
-            pairs = materialize_barrier(
-                _phash_pairs(_phash_frame(media)).select("a_id", "b_id")
-            )
-            arrival = F.greatest(F.col("a_id") % nb, F.col("b_id") % nb)
-            for i in range(nb):
-                process_cluster_batch(pairs.filter(arrival == i), i, state)
-                if i == 1:
-                    compact_cluster_state(spark, state)
-            sized = media.select(
-                F.col("media_id").alias("doc_id"),
-                "modality",
-                F.octet_length("payload").cast("long").alias("bytes"),
-            )
-            fam = resolved_roots(spark, state).join(sized, "doc_id")
-            got = materialize_barrier(
-                fam.groupBy("cluster_id")
-                .agg(
-                    F.count("*").cast("long").alias("family_size"),
-                    F.max(
-                        F.struct(F.col("bytes"), (-F.col("doc_id")).alias("ni"))
-                    ).alias("_s"),
-                    F.min("modality").alias("modality"),
-                )
-                .select(
-                    F.col("cluster_id").alias("family_id"),
-                    "modality",
-                    "family_size",
-                    (-F.col("_s.ni")).cast("long").alias("keeper_id"),
-                    F.col("_s.bytes").cast("long").alias("keeper_bytes"),
-                )
-            )
-            want = materialize_barrier(
-                media_phash_keep_best(spark, sf_dir).select(
-                    "family_id", "modality", "family_size",
-                    "keeper_id", "keeper_bytes",
-                )
-            )
-            mismatches = got.exceptAll(want).count() + want.exceptAll(got).count()
-            agg = got.agg(
-                F.count("*").cast("long").alias("nf"),
-                F.max("family_size").cast("long").alias("lf"),
-                F.sum("keeper_id").cast("long").alias("kc"),
-                F.sum("keeper_bytes").cast("long").alias("kb"),
-            ).first()
-        finally:
-            drop_state(spark, state)
-            shutil.rmtree(tmp, ignore_errors=True)
+    with _audit_scope(spark, drop_state) as tmp:
+        state = f"{tmp}/state"
+        media = media_table(spark, sf_dir)
+        pairs = materialize_barrier(
+            _phash_pairs(_phash_frame(media)).select("a_id", "b_id")
+        )
+        arrival = F.greatest(F.col("a_id") % nb, F.col("b_id") % nb)
+        for i in range(nb):
+            process_cluster_batch(pairs.filter(arrival == i), i, state)
+            if i == 1:
+                compact_cluster_state(spark, state)
+        sized = media.select(
+            F.col("media_id").alias("doc_id"),
+            "modality",
+            F.octet_length("payload").cast("long").alias("bytes"),
+        )
+        fam = resolved_roots(spark, state).join(sized, "doc_id")
+        got = materialize_barrier(_keep_best(fam, "doc_id", "cluster_id"))
+        want = materialize_barrier(
+            media_phash_keep_best(spark, sf_dir).select(*got.columns)
+        )
+        mismatches = _sym_diff(got, want)
+        agg = got.agg(
+            F.count("*").cast("long").alias("nf"),
+            F.max("family_size").cast("long").alias("lf"),
+            F.sum("keeper_id").cast("long").alias("kc"),
+            F.sum("keeper_bytes").cast("long").alias("kb"),
+        ).first()
     return spark.range(1).select(
         F.lit(int(agg["nf"] or 0)).cast("long").alias("n_families"),
         F.lit(int(agg["lf"] or 0)).cast("long").alias("largest_family"),
@@ -1110,6 +1049,28 @@ def _media_cluster_parity_sql() -> str:
                true AS stream_equals_batch
         FROM ({_phash_keep_best_oracle()}) t
     """
+
+
+def _keep_best(members: DataFrame, id_col: str, family_col: str) -> DataFrame:
+    """Keep-best per family over (id, family, modality, bytes) member rows:
+    family size, the largest member as keeper (ties → the lowest id, one
+    max-struct aggregate), in `media_phash_keep_best`'s (family_id,
+    modality, family_size, keeper_id, keeper_bytes) shape."""
+    return (
+        members.groupBy(family_col)
+        .agg(
+            F.count("*").cast("long").alias("family_size"),
+            F.max(F.struct(F.col("bytes"), (-F.col(id_col)).alias("ni"))).alias("_s"),
+            F.min("modality").alias("modality"),
+        )
+        .select(
+            F.col(family_col).alias("family_id"),
+            "modality",
+            "family_size",
+            (-F.col("_s.ni")).cast("long").alias("keeper_id"),
+            F.col("_s.bytes").cast("long").alias("keeper_bytes"),
+        )
+    )
 
 
 # 4 arrival batches for the composed media pipeline — coprime with the
@@ -1171,6 +1132,17 @@ def _media_keep_cte(nb: int) -> str:
             FROM verified)"""
 
 
+def _media_output(spark: SparkSession, out: str, name: str) -> DataFrame:
+    """One batch-partitioned output of the composed media pipeline, read
+    with its explicit schema (a batch that lands no rows leaves only
+    _SUCCESS markers, which schema inference cannot read)."""
+    schema = {
+        "curated": "media_id long, modality string",
+        "exact_dropped": "media_id long, modality string, keeper_id long",
+    }[name]
+    return spark.read.schema(f"{schema}, batch_id long").parquet(f"{out}/{name}")
+
+
 def media_crawl_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPOSED media ingest pipeline
     (`streaming/media_pipeline.py`: exact sha256 keeper gate →
@@ -1206,107 +1178,82 @@ def media_crawl_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     nb = MEDIA_CRAWL_BATCHES
-    tmp = tempfile.mkdtemp(prefix="media_crawl_")
-    state, out = f"{tmp}/state", f"{tmp}/out"
-    with _audit_shuffle_partitions(spark):
-        try:
-            media = media_table(spark, sf_dir).select(
-                "media_id", "modality", "payload"
+    with _audit_scope(spark, drop_state) as tmp:
+        state, out = f"{tmp}/state", f"{tmp}/out"
+        media = media_table(spark, sf_dir).select(
+            "media_id", "modality", "payload"
+        )
+        for i in range(nb):
+            process_media_batch(
+                media.filter(F.col("media_id") % nb == i), i, state, out,
+                compact_every=2,
             )
-            for i in range(nb):
-                process_media_batch(
-                    media.filter(F.col("media_id") % nb == i), i, state, out,
-                    compact_every=2,
-                )
-            got_curated = materialize_barrier(
-                spark.read.schema("media_id long, modality string, batch_id long")
-                .parquet(f"{out}/curated")
-                .select("media_id", "modality")
+        got_curated = materialize_barrier(
+            _media_output(spark, out, "curated").select("media_id", "modality")
+        )
+        got_fams = materialize_barrier(
+            media_keep_best_state(spark, state).select(
+                "family_id", "modality", "family_size",
+                "keeper_id", "keeper_bytes",
             )
-            got_fams = materialize_barrier(
-                media_keep_best_state(spark, state).select(
-                    "family_id", "modality", "family_size",
-                    "keeper_id", "keeper_bytes",
-                )
+        )
+        # batch arrival-rule recompute (Spark side of the pin)
+        sized = media.select(
+            "media_id",
+            "modality",
+            F.sha2("payload", 256).alias("d"),
+            F.octet_length("payload").cast("long").alias("bytes"),
+            (F.col("media_id") % nb).alias("b"),
+        )
+        keeper_ids = (
+            sized.groupBy("modality", "d")
+            .agg(F.min(F.struct("b", "media_id")).alias("s"))
+            .select(F.col("s.media_id").alias("media_id"))
+        )
+        keepers = media.join(F.broadcast(keeper_ids), "media_id", "left_semi")
+        khash = materialize(phash_projection(keepers))
+        kpairs = materialize(_phash_pairs(khash))
+        later_ids = kpairs.select(
+            F.when(
+                F.col("a_id") % nb > F.col("b_id") % nb, F.col("a_id")
             )
-            # batch arrival-rule recompute (Spark side of the pin)
-            sized = media.select(
+            .otherwise(F.col("b_id"))
+            .alias("media_id")
+        ).distinct()
+        want_curated = materialize_barrier(
+            keepers.select("media_id", "modality").join(
+                later_ids, "media_id", "left_anti"
+            )
+        )
+        comp = connected_components(kpairs.select("a_id", "b_id")).select(
+            F.col("node").alias("media_id"), F.col("label").alias("family_id")
+        )
+        want_fams = materialize_barrier(
+            _keep_best(
+                comp.join(sized.select("media_id", "modality", "bytes"), "media_id"),
                 "media_id",
-                "modality",
-                F.sha2("payload", 256).alias("d"),
-                F.octet_length("payload").cast("long").alias("bytes"),
-                (F.col("media_id") % nb).alias("b"),
+                "family_id",
             )
-            keeper_ids = (
-                sized.groupBy("modality", "d")
-                .agg(F.min(F.struct("b", "media_id")).alias("s"))
-                .select(F.col("s.media_id").alias("media_id"))
-            )
-            keepers = media.join(F.broadcast(keeper_ids), "media_id", "left_semi")
-            khash = materialize(phash_projection(keepers))
-            kpairs = materialize(_phash_pairs(khash))
-            later_ids = kpairs.select(
-                F.when(
-                    F.col("a_id") % nb > F.col("b_id") % nb, F.col("a_id")
-                )
-                .otherwise(F.col("b_id"))
-                .alias("media_id")
-            ).distinct()
-            want_curated = materialize_barrier(
-                keepers.select("media_id", "modality").join(
-                    later_ids, "media_id", "left_anti"
-                )
-            )
-            comp = connected_components(kpairs.select("a_id", "b_id")).select(
-                F.col("node").alias("media_id"), F.col("label").alias("family_id")
-            )
-            want_fams = materialize_barrier(
-                comp.join(sized.select("media_id", "modality", "bytes"), "media_id")
-                .groupBy("family_id")
-                .agg(
-                    F.count("*").cast("long").alias("family_size"),
-                    F.max(
-                        F.struct(F.col("bytes"), (-F.col("media_id")).alias("ni"))
-                    ).alias("_s"),
-                    F.min("modality").alias("modality"),
-                )
-                .select(
-                    "family_id", "modality", "family_size",
-                    (-F.col("_s.ni")).cast("long").alias("keeper_id"),
-                    F.col("_s.bytes").cast("long").alias("keeper_bytes"),
-                )
-            )
-            mismatches = (
-                got_curated.exceptAll(want_curated).count()
-                + want_curated.exceptAll(got_curated).count()
-                + got_fams.exceptAll(want_fams).count()
-                + want_fams.exceptAll(got_fams).count()
-            )
-            n_arrivals = media.count()
-            n_exact_dropped = (
-                spark.read.schema(
-                    "media_id long, modality string, keeper_id long, batch_id long"
-                )
-                .parquet(f"{out}/exact_dropped")
-                .count()
-            )
-            n_perc_dropped = (
-                spark.read.schema(f"{DECISIONS_SCHEMA}, batch_id long")
-                .parquet(f"{out}/decisions")
-                .filter("is_dup")
-                .count()
-            )
-            cagg = got_curated.agg(
-                F.count("*").cast("long").alias("n"),
-                F.sum("media_id").cast("long").alias("ck"),
-            ).first()
-            fagg = got_fams.agg(
-                F.count("*").cast("long").alias("nf"),
-                F.sum("keeper_id").cast("long").alias("kc"),
-            ).first()
-        finally:
-            drop_state(spark, state)
-            shutil.rmtree(tmp, ignore_errors=True)
+        )
+        mismatches = _sym_diff(got_curated, want_curated) + _sym_diff(
+            got_fams, want_fams
+        )
+        n_arrivals = media.count()
+        n_exact_dropped = _media_output(spark, out, "exact_dropped").count()
+        n_perc_dropped = (
+            spark.read.schema(f"{DECISIONS_SCHEMA}, batch_id long")
+            .parquet(f"{out}/decisions")
+            .filter("is_dup")
+            .count()
+        )
+        cagg = got_curated.agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum("media_id").cast("long").alias("ck"),
+        ).first()
+        fagg = got_fams.agg(
+            F.count("*").cast("long").alias("nf"),
+            F.sum("keeper_id").cast("long").alias("kc"),
+        ).first()
     return spark.range(1).select(
         F.lit(n_arrivals).cast("long").alias("n_arrivals"),
         F.lit(nb).cast("int").alias("n_batches"),
@@ -1383,7 +1330,6 @@ def media_pipeline_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_powered_data_pipeline_assistant_spark.streaming import (
         media_pipeline,
         phash_stream,
-        state_compaction as sc,
     )
     from ai_powered_data_pipeline_assistant_spark.streaming.media_pipeline import (
         compact_media_state,
@@ -1392,51 +1338,35 @@ def media_pipeline_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     nb = MEDIA_CRAWL_BATCHES
-    tmp = tempfile.mkdtemp(prefix="media_report_")
-    state, out = f"{tmp}/state", f"{tmp}/out"
-    with _audit_shuffle_partitions(spark):
-        try:
-            media = media_table(spark, sf_dir).select(
-                "media_id", "modality", "payload"
-            )
-            for i in range(nb):
-                process_media_batch(
-                    media.filter(F.col("media_id") % nb == i), i, state, out,
-                    compact_every=2,
-                )
-            tables = sc.state_tables(state, media_pipeline.STATE_SPECS)
-            tables.update(
-                sc.state_tables(f"{state}/phash", phash_stream.STATE_SPECS)
-            )
-            pre = {k: spark.table(n).count() for k, n in tables.items()}
-            compact_media_state(spark, state)
-            post = {k: spark.table(n).count() for k, n in tables.items()}
-            n_curated = (
-                spark.read.schema("media_id long, modality string, batch_id long")
-                .parquet(f"{out}/curated")
-                .count()
-            )
-            n_exact_dropped = (
-                spark.read.schema(
-                    "media_id long, modality string, keeper_id long, batch_id long"
-                )
-                .parquet(f"{out}/exact_dropped")
-                .count()
-            )
-            n_arrivals = media.count()
-        finally:
-            drop_state(spark, state)
-            shutil.rmtree(tmp, ignore_errors=True)
+    with _audit_scope(spark, drop_state) as tmp:
+        state, out = f"{tmp}/state", f"{tmp}/out"
+        media = media_table(spark, sf_dir).select("media_id", "modality", "payload")
+        rows, preserved, _ = _state_report(
+            spark,
+            nb,
+            lambda i: process_media_batch(
+                media.filter(F.col("media_id") % nb == i), i, state, out,
+                compact_every=2,
+            ),
+            [
+                (state, media_pipeline.STATE_SPECS),
+                (f"{state}/phash", phash_stream.STATE_SPECS),
+            ],
+            lambda: compact_media_state(spark, state),
+        )
+        n_curated = _media_output(spark, out, "curated").count()
+        n_exact_dropped = _media_output(spark, out, "exact_dropped").count()
+        n_arrivals = media.count()
     return spark.range(1).select(
         F.lit(n_arrivals).cast("long").alias("n_arrivals"),
         F.lit(nb).cast("int").alias("n_batches"),
-        F.lit(post["mdigest"]).cast("long").alias("mdigest_rows"),
-        F.lit(post["msizes"]).cast("long").alias("msizes_rows"),
-        F.lit(post["pbands"]).cast("long").alias("pbands_rows"),
-        F.lit(post["phashes"]).cast("long").alias("phashes_rows"),
+        F.lit(rows["mdigest"]).cast("long").alias("mdigest_rows"),
+        F.lit(rows["msizes"]).cast("long").alias("msizes_rows"),
+        F.lit(rows["pbands"]).cast("long").alias("pbands_rows"),
+        F.lit(rows["phashes"]).cast("long").alias("phashes_rows"),
         F.lit(n_curated).cast("long").alias("curated_total"),
         F.lit(n_exact_dropped).cast("long").alias("exact_dropped_total"),
-        F.lit(pre == post).alias("rows_preserved"),
+        F.lit(preserved).alias("rows_preserved"),
     )
 
 
@@ -1490,14 +1420,10 @@ def cluster_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``redirects_folded`` (merges at the intermediate batches) from
     per-arrival-prefix transitive closures, so a compactor that dropped a
     live redirect or kept an absorbed one flips the driver hash."""
-    from ai_powered_data_pipeline_assistant_spark.operators.dedup import (
-        minhash_lsh_pairs_for,
-    )
     from ai_powered_data_pipeline_assistant_spark.streaming.cluster_stream import (
         STATE_SPECS,
         compact_cluster_state,
         drop_state,
-        process_cluster_batch,
         read_redirects,
         resolved_roots,
     )
@@ -1507,53 +1433,26 @@ def cluster_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nb = CLUSTER_STREAM_BATCHES
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="cc_report_")
-    state = f"{tmp}/state"
-    with _audit_shuffle_partitions(spark):
-        try:
-            pairs = materialize_barrier(
-                minhash_lsh_pairs_for(docs).select("a_id", "b_id")
-            )
-            bidx = lambda c: c % nb  # noqa: E731
-            arrival = F.greatest(bidx(F.col("a_id")), bidx(F.col("b_id")))
-            for i in range(nb):
-                process_cluster_batch(pairs.filter(arrival == i), i, state)
-            # EAGER barrier: the compaction below swap-DELETES the roots files
-            # this plan reads; a lazy checkpoint would re-read them post-swap
-            before = materialize(
-                resolved_roots(spark, state).select("doc_id", "cluster_id"),
-                eager=True,
-                require_barrier=True,
-            )
-            red_before = read_redirects(spark, state).count()
-            stats = compact_cluster_state(spark, state)
-            after = materialize_barrier(
-                resolved_roots(spark, state).select("doc_id", "cluster_id")
-            )
-            preserved = (
-                before.exceptAll(after).count() + after.exceptAll(before).count()
-            ) == 0
-            roots_rows = spark.table(state_tables(state, STATE_SPECS)["roots"]).count()
-            agg = after.agg(
-                F.count("*").cast("long").alias("nd"),
-                F.countDistinct("cluster_id").cast("long").alias("nc"),
-                F.sum("cluster_id").cast("long").alias("ck"),
-            ).first()
-            largest = (
-                after.groupBy("cluster_id")
-                .count()
-                .agg(F.max("count").cast("long"))
-                .first()[0]
-                or 0
-            )
-        finally:
-            drop_state(spark, state)
-            shutil.rmtree(tmp, ignore_errors=True)
+    with _audit_scope(spark, drop_state) as tmp:
+        state = f"{tmp}/state"
+        _replay_lsh_clusters(docs, nb, state)
+        # EAGER barrier: the compaction below swap-DELETES the roots files
+        # this plan reads; a lazy checkpoint would re-read them post-swap
+        before = materialize(
+            resolved_roots(spark, state).select("doc_id", "cluster_id"),
+            eager=True,
+            require_barrier=True,
+        )
+        red_before = read_redirects(spark, state).count()
+        stats = compact_cluster_state(spark, state)
+        after = materialize_barrier(
+            resolved_roots(spark, state).select("doc_id", "cluster_id")
+        )
+        preserved = _sym_diff(before, after) == 0
+        roots_rows = spark.table(state_tables(state, STATE_SPECS)["roots"]).count()
+        membership = _cluster_columns(after)
     return spark.range(1).select(
-        F.lit(int(agg["nd"] or 0)).cast("long").alias("n_docs_clustered"),
-        F.lit(int(agg["nc"] or 0)).cast("long").alias("n_clusters"),
-        F.lit(int(largest)).cast("long").alias("largest_cluster"),
-        F.lit(int(agg["ck"] or 0)).cast("long").alias("cluster_id_checksum"),
+        *membership,
         F.lit(nb).cast("int").alias("n_batches"),
         F.lit(int(roots_rows)).cast("long").alias("roots_rows"),
         F.lit(int(stats["redirect_rows"])).cast("long").alias("redirect_rows"),
@@ -1683,10 +1582,6 @@ def substring_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 60-bit hash collision would under-count and flip the driver hash),
     compaction preserves every row, and compaction never increases the
     file count."""
-    from ai_powered_data_pipeline_assistant_spark import hadoop_fs
-    from ai_powered_data_pipeline_assistant_spark.streaming import (
-        state_compaction as sc,
-    )
     from ai_powered_data_pipeline_assistant_spark.streaming.substring_stream import (
         STATE_SPECS,
         compact_substring_state,
@@ -1696,38 +1591,20 @@ def substring_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nb = SUBSTR_STREAM_BATCHES
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="substr_report_")
-    state_dir = f"{tmp}/state"
-    with _audit_shuffle_partitions(spark):
-        try:
-            for i in range(nb):
-                process_substring_batch(
-                    docs.filter(F.col("doc_id") % nb == i),
-                    i,
-                    state_dir,
-                    f"{tmp}/acct",
-                )
-            table = sc.state_tables(state_dir, STATE_SPECS)["wins"]
-            pre_rows = spark.table(table).count()
-            pre_files = hadoop_fs.count_parquet(
-                spark, sc.table_path(state_dir, "wins")
-            )
-            post_files = compact_substring_state(spark, state_dir)
-            post_rows = spark.table(table).count()
-            n_docs = docs.count()
-        finally:
-            drop_state(spark, state_dir)
-            shutil.rmtree(tmp, ignore_errors=True)
+    with _audit_scope(spark, drop_state) as tmp:
+        state = f"{tmp}/state"
+        rows, preserved, files_ok = _state_report(
+            spark,
+            nb,
+            lambda i: process_substring_batch(
+                docs.filter(F.col("doc_id") % nb == i), i, state, f"{tmp}/acct"
+            ),
+            [(state, STATE_SPECS)],
+            lambda: compact_substring_state(spark, state),
+        )
+        n_docs = docs.count()
     return spark.createDataFrame(
-        [
-            (
-                n_docs,
-                nb,
-                post_rows,
-                pre_rows == post_rows,
-                post_files <= pre_files,
-            )
-        ],
+        [(n_docs, nb, rows["wins"], preserved, files_ok)],
         "n_docs long, n_batches int, wins_rows long, rows_preserved boolean, "
         "files_not_increased boolean",
     )
@@ -1827,6 +1704,40 @@ def _cluster_stream_parity_sql() -> str:
 ANN_INGEST_BATCHES = 2
 
 
+def _index_codes(spark: SparkSession, layout: str) -> DataFrame:
+    """The (vec_id, list_id, _c0.._c{M-1}) rows of an IVF-PQ layout's
+    codes table."""
+    from ai_powered_data_pipeline_assistant_spark.operators.pq import PQ_M
+
+    return spark.read.parquet(f"{layout}/codes").select(
+        "vec_id",
+        F.col("list_id").cast("long").alias("list_id"),
+        *[F.col(f"_c{m}") for m in range(PQ_M)],
+    )
+
+
+def _one_pass_codes(spark: SparkSession, layout: str, vecs: DataFrame) -> DataFrame:
+    """``vecs`` encoded in one pass against the layout's stored artifacts,
+    barriered, in `_index_codes`' shape — what a maintained index must
+    equal exactly."""
+    from ai_powered_data_pipeline_assistant_spark.operators.ivfpq import (
+        read_ivfpq_artifacts,
+        residual_frame,
+    )
+    from ai_powered_data_pipeline_assistant_spark.operators.pq import (
+        PQ_M,
+        PQ_SUBDIM,
+        assign_codes,
+    )
+
+    centroids, _cm, pq_cents, _, _ = read_ivfpq_artifacts(spark, layout)
+    return materialize_barrier(
+        assign_codes(residual_frame(vecs, centroids), pq_cents, PQ_SUBDIM).select(
+            "vec_id", "list_id", *[F.col(f"_c{m}") for m in range(PQ_M)]
+        )
+    )
+
+
 def ann_ingest_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ANN index ingest ≡ one-pass encode: build the BATCHED
     IVF-PQ layout on the base corpus (vec_id % 4 != 0), replay the
@@ -1851,7 +1762,6 @@ def ann_ingest_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         IVFPQ_RERANK,
         IVFPQ_TOPK,
         read_ivfpq_artifacts,
-        residual_frame,
         _route_and_luts,
         _score_and_rerank,
     )
@@ -1859,7 +1769,6 @@ def ann_ingest_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         PQ_K,
         PQ_M,
         PQ_SUBDIM,
-        assign_codes,
     )
     from ai_powered_data_pipeline_assistant_spark.operators.vector import (
         _query_vectors,
@@ -1878,64 +1787,25 @@ def ann_ingest_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.filter(F.col("vec_id") % 4 != 0)
     delta = emb.filter(F.col("vec_id") % 4 == 0)
     nb = ANN_INGEST_BATCHES
-    run_id = uuid.uuid4().hex[:12]
-    tmp = tempfile.mkdtemp(prefix=f"ann_ingest_{run_id}_")
-    try:
+    with _audit_scope(spark) as tmp:
         layout = f"{tmp}/index"
         write_ivfpq_layout_for(spark, base, layout, batched=True)
-        codes_dir = f"{layout}/codes"
-        src = f"{tmp}/src"
-        os.makedirs(src)
-        batch_frames = []
-        for i in range(nb):
-            part_dir = f"{tmp}/part{i}"
-            bf = delta.filter((F.col("vec_id") / 4).cast("long") % nb == i)
-            batch_frames.append(bf)
-            bf.coalesce(1).write.mode("overwrite").parquet(part_dir)
-            part = next(
-                f for f in os.listdir(part_dir) if f.endswith(".parquet")
-            )
-            dst = f"{src}/batch{i:03d}.parquet"
-            shutil.copyfile(f"{part_dir}/{part}", dst)
-            os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
-        stream = (
-            spark.readStream.schema(delta.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        batch_frames = [
+            delta.filter((F.col("vec_id") / 4).cast("long") % nb == i)
+            for i in range(nb)
+        ]
+        stream = _ordered_arrivals(spark, tmp, batch_frames)
         q = run_ann_ingest_stream(stream, layout, f"{tmp}/ckpt")
-        if not q.awaitTermination(300):
-            q.stop()
-            q.awaitTermination(30)
-            raise TimeoutError("ANN ingest stream did not finish within 300 s")
-
-        def _codes():
-            return spark.read.parquet(codes_dir).select(
-                "vec_id",
-                F.col("list_id").cast("long").alias("list_id"),
-                *[F.col(f"_c{m}") for m in range(PQ_M)],
-            )
-
+        _await(q, "ANN ingest stream")
         centroids, cent_map, pq_cents, _, _ = read_ivfpq_artifacts(spark, layout)
-        ref = materialize_barrier(
-            assign_codes(
-                residual_frame(emb, centroids), pq_cents, PQ_SUBDIM
-            ).select(
-                "vec_id", "list_id", *[F.col(f"_c{m}") for m in range(PQ_M)]
-            )
-        )
-        streamed = materialize_barrier(_codes())
-        codes_mm = (
-            streamed.exceptAll(ref).count() + ref.exceptAll(streamed).count()
-        )
+        ref = _one_pass_codes(spark, layout, emb)
+        streamed = materialize_barrier(_index_codes(spark, layout))
+        codes_mm = _sym_diff(streamed, ref)
         # replay batch 0's append against the finished index: dynamic
         # overwrite of its own partitions must leave the rows identical
         append_ivfpq_layout(spark, layout, batch_frames[0], batch_id=0)
-        replayed = _codes()
-        replay_mm = (
-            replayed.exceptAll(streamed).count()
-            + streamed.exceptAll(replayed).count()
-        )
+        replayed = _index_codes(spark, layout)
+        replay_mm = _sym_diff(replayed, streamed)
         queries = _query_vectors(spark, sf_dir, IVFPQ_N_QUERIES)
         lut_df, probe_pairs = _route_and_luts(
             spark, queries, centroids, cent_map, pq_cents,
@@ -1950,14 +1820,9 @@ def ann_ingest_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         final_l, _c3, _c4 = _score_and_rerank(
             ref, raw_df, queries, lut_df, PQ_M, IVFPQ_TOPK, IVFPQ_RERANK
         )
-        q_mm = (
-            final_p.exceptAll(final_l).count()
-            + final_l.exceptAll(final_p).count()
-        )
+        q_mm = _sym_diff(final_p, final_l)
         n_base = base.count()
         n_delta = delta.count()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         [
             (
@@ -2012,15 +1877,6 @@ def crawl_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_powered_data_pipeline_assistant_spark.operators.dedup import (
         minhash_lsh_pairs_for,
     )
-    from ai_powered_data_pipeline_assistant_spark.operators.ivfpq import (
-        read_ivfpq_artifacts,
-        residual_frame,
-    )
-    from ai_powered_data_pipeline_assistant_spark.operators.pq import (
-        PQ_M,
-        PQ_SUBDIM,
-        assign_codes,
-    )
     from ai_powered_data_pipeline_assistant_spark.sources.layout import (
         write_ivfpq_layout_for,
     )
@@ -2033,85 +1889,43 @@ def crawl_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nb = CRAWL_BATCHES
     arrivals, base = _crawl_splits(spark, sf_dir)
-    run_id = uuid.uuid4().hex[:12]
-    tmp = tempfile.mkdtemp(prefix=f"crawl_{run_id}_")
-    with _audit_shuffle_partitions(spark):
-        try:
-            layout = f"{tmp}/index"
-            write_ivfpq_layout_for(spark, base, layout, batched=True)
-            src = f"{tmp}/src"
-            os.makedirs(src)
-            bidx = (F.col("doc_id") / 4).cast("long") % nb
-            for i in range(nb):
-                part_dir = f"{tmp}/part{i}"
-                arrivals.filter(bidx == i).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(part_dir)
-                part = next(
-                    f for f in os.listdir(part_dir) if f.endswith(".parquet")
-                )
-                dst = f"{src}/batch{i:03d}.parquet"
-                shutil.copyfile(f"{part_dir}/{part}", dst)
-                os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
-            stream = (
-                spark.readStream.schema(arrivals.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            q = run_crawl_pipeline(
-                stream, f"{tmp}/state", layout, f"{tmp}/out", f"{tmp}/ckpt"
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                q.awaitTermination(30)
-                raise TimeoutError("crawl pipeline did not finish within 300 s")
+    with _audit_scope(spark, drop_state) as tmp:
+        layout = f"{tmp}/index"
+        write_ivfpq_layout_for(spark, base, layout, batched=True)
+        bidx = (F.col("doc_id") / 4).cast("long") % nb
+        stream = _ordered_arrivals(
+            spark, tmp, [arrivals.filter(bidx == i) for i in range(nb)]
+        )
+        q = run_crawl_pipeline(
+            stream, f"{tmp}/state", layout, f"{tmp}/out", f"{tmp}/ckpt"
+        )
+        _await(q, "crawl pipeline")
 
-            got_curated = spark.read.parquet(f"{tmp}/out/curated").select("doc_id")
-            # batch rule: keep arrivals that are not the LATER side of any
-            # verified pair under the arrival order (cross-batch, then doc_id)
-            a_b = lambda c: (c / 4).cast("long") % nb  # noqa: E731
-            later = minhash_lsh_pairs_for(
-                arrivals.select("doc_id", "text"),
-                pair_cond=lambda a, b: (a_b(a) > a_b(b))
-                | ((a_b(a) == a_b(b)) & (a > b)),
-            ).select(F.col("a_id").alias("doc_id")).distinct()
-            want_curated = materialize_barrier(
-                arrivals.select("doc_id").join(later, "doc_id", "left_anti")
-            )
-            cur_mm = (
-                got_curated.exceptAll(want_curated).count()
-                + want_curated.exceptAll(got_curated).count()
-            )
-            n_stream = got_curated.count()
-            n_batch = want_curated.count()
+        got_curated = spark.read.parquet(f"{tmp}/out/curated").select("doc_id")
+        # batch rule: keep arrivals that are not the LATER side of any
+        # verified pair under the arrival order (cross-batch, then doc_id)
+        a_b = lambda c: (c / 4).cast("long") % nb  # noqa: E731
+        later = minhash_lsh_pairs_for(
+            arrivals.select("doc_id", "text"),
+            pair_cond=lambda a, b: (a_b(a) > a_b(b))
+            | ((a_b(a) == a_b(b)) & (a > b)),
+        ).select(F.col("a_id").alias("doc_id")).distinct()
+        want_curated = materialize_barrier(
+            arrivals.select("doc_id").join(later, "doc_id", "left_anti")
+        )
+        cur_mm = _sym_diff(got_curated, want_curated)
+        n_stream = got_curated.count()
+        n_batch = want_curated.count()
 
-            centroids, _cm, pq_cents, _, _ = read_ivfpq_artifacts(spark, layout)
-            kept_vecs = base.unionByName(
-                arrivals.join(want_curated, "doc_id").select(
-                    F.col("doc_id").alias("vec_id"), "embedding"
-                )
+        kept_vecs = base.unionByName(
+            arrivals.join(want_curated, "doc_id").select(
+                F.col("doc_id").alias("vec_id"), "embedding"
             )
-            ref = materialize_barrier(
-                assign_codes(
-                    residual_frame(kept_vecs, centroids), pq_cents, PQ_SUBDIM
-                ).select(
-                    "vec_id", "list_id", *[F.col(f"_c{m}") for m in range(PQ_M)]
-                )
-            )
-            streamed = materialize_barrier(
-                spark.read.parquet(f"{layout}/codes").select(
-                    "vec_id",
-                    F.col("list_id").cast("long").alias("list_id"),
-                    *[F.col(f"_c{m}") for m in range(PQ_M)],
-                )
-            )
-            idx_mm = (
-                streamed.exceptAll(ref).count() + ref.exceptAll(streamed).count()
-            )
-            n_arrivals = arrivals.count()
-        finally:
-            drop_state(spark, f"{tmp}/state")
-            shutil.rmtree(tmp, ignore_errors=True)
+        )
+        ref = _one_pass_codes(spark, layout, kept_vecs)
+        streamed = materialize_barrier(_index_codes(spark, layout))
+        idx_mm = _sym_diff(streamed, ref)
+        n_arrivals = arrivals.count()
     return spark.createDataFrame(
         [
             (
@@ -2272,38 +2086,31 @@ def neardup_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nb = NEARDUP_STREAM_BATCHES
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="neardup_report_")
-    state_dir = f"{tmp}/state"
-    with _audit_shuffle_partitions(spark):
-        try:
-            for i in range(nb):
-                process_neardup_batch(
-                    docs.filter(F.col("doc_id") % nb == i),
-                    i,
-                    state_dir,
-                    f"{tmp}/pairs",
-                )
-            tables = sc.state_tables(state_dir, STATE_SPECS)
-            pre = {k: spark.table(n).count() for k, n in tables.items()}
-            compact_neardup_state(spark, state_dir)
-            post = {k: spark.table(n).count() for k, n in tables.items()}
-            # copies of the bands table holding data after compaction (the
-            # live dir plus any swap asides) — exactly one
-            generations = len(sc.state_copies(spark, state_dir, "bands"))
-            n_docs = docs.count()
-        finally:
-            drop_state(spark, state_dir)
-            shutil.rmtree(tmp, ignore_errors=True)
+    with _audit_scope(spark, drop_state) as tmp:
+        state = f"{tmp}/state"
+        rows, preserved, _ = _state_report(
+            spark,
+            nb,
+            lambda i: process_neardup_batch(
+                docs.filter(F.col("doc_id") % nb == i), i, state, f"{tmp}/pairs"
+            ),
+            [(state, STATE_SPECS)],
+            lambda: compact_neardup_state(spark, state),
+        )
+        # copies of the bands table holding data after compaction (the
+        # live dir plus any swap asides) — exactly one
+        generations = len(sc.state_copies(spark, state, "bands"))
+        n_docs = docs.count()
     return spark.createDataFrame(
         [
             (
                 n_docs,
                 nb,
-                post["bands"],
-                post["postings"],
-                post["sizes"],
+                rows["bands"],
+                rows["postings"],
+                rows["sizes"],
                 generations,
-                pre == post,
+                preserved,
             )
         ],
         "n_docs long, n_batches int, bands_rows long, postings_rows long, "
@@ -2395,26 +2202,16 @@ def trigger_cadence_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture = base_req.union(
         base_req.filter(F.col("request_id").cast("long") % 7 == 0)
     )
-    run_id = uuid.uuid4().hex[:12]
-    tmp = tempfile.mkdtemp(prefix=f"cadence_{run_id}_")
-    with _audit_shuffle_partitions(spark):
-        try:
-            src = f"{tmp}/src"
-            fixture.coalesce(1).write.mode("overwrite").parquet(src)
-
-            def fire():
-                stream = spark.readStream.schema(fixture.schema).parquet(src)
-                return run_job_stream(stream, kb, f"{tmp}/out", f"{tmp}/ckpt")
-
-            q1 = fire()
-            q1.awaitTermination(180)
-            n_run1 = spark.read.parquet(f"{tmp}/out").count()
-            q2 = fire()
-            q2.awaitTermination(180)
-            rows_in_run2 = sum(p["numInputRows"] for p in q2.recentProgress)
-            n_run2 = spark.read.parquet(f"{tmp}/out").count()
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+    with _audit_scope(spark) as tmp:
+        # one stream plan, started twice against the same checkpoint
+        stream = _ordered_arrivals(spark, tmp, [fixture])
+        q1 = run_job_stream(stream, kb, f"{tmp}/out", f"{tmp}/ckpt")
+        _await(q1, "job stream (first run)")
+        n_run1 = spark.read.parquet(f"{tmp}/out").count()
+        q2 = run_job_stream(stream, kb, f"{tmp}/out", f"{tmp}/ckpt")
+        _await(q2, "job stream (rerun)")
+        rows_in_run2 = sum(p["numInputRows"] for p in q2.recentProgress)
+        n_run2 = spark.read.parquet(f"{tmp}/out").count()
     return spark.range(1).select(
         F.lit(n_run1).cast("long").alias("n_output_run1"),
         F.lit(rows_in_run2).cast("long").alias("n_input_run2"),

@@ -20,6 +20,7 @@ from __future__ import annotations
 import decimal
 import math
 import sys
+import time
 
 import duckdb
 
@@ -130,9 +131,13 @@ def main() -> int:
     for name in sorted(queries):
         if only is not None and name not in only:
             continue
+        # per-row wall time (query and oracle): a stall shows up in every
+        # sweep instead of hiding behind a MATCH
+        t0 = time.perf_counter()
         df = queries[name](spark, sf_dir)
         if name not in oracles:
-            print(f"{name}: rows-only rows={df.count()}")
+            n = df.count()
+            print(f"{name}: rows-only rows={n} t={time.perf_counter() - t0:.1f}s")
             continue
         rel = con.sql(oracles[name])
         rep = driver_representable(df, rel)
@@ -146,7 +151,10 @@ def main() -> int:
         idx = [cols.index(c) for c in sorted(cols)]
         d_rows = sorted(tuple(norm(r[i]) for i in idx) for r in rel.fetchall())
         ok = s_cols == sorted(cols) and s_rows == d_rows
-        print(f"{name}: {'MATCH' if ok else 'MISMATCH'} rows={len(s_rows)}/{len(d_rows)}")
+        print(
+            f"{name}: {'MATCH' if ok else 'MISMATCH'} rows={len(s_rows)}/{len(d_rows)}"
+            f" t={time.perf_counter() - t0:.1f}s"
+        )
         if not ok:
             fails.append(name)
     print("FAILS:", fails)

@@ -14,7 +14,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, ".")
@@ -27,9 +29,17 @@ def main() -> int:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    log_dir = f"/tmp/spark_events_{os.getpid()}"
-    os.makedirs(log_dir, exist_ok=True)
+    # a private event-log dir, removed once the log is parsed
+    log_dir = tempfile.mkdtemp(prefix="spark_events_")
+    try:
+        return _profile(names, sf_dir, log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
 
+
+def _profile(names: list[str], sf_dir: str, log_dir: str) -> int:
+    """Run the queries with the event log written to ``log_dir``, then parse
+    it and print the per-job/stage profile."""
     # same config surface as get_spark(), plus event logging via the
     # SPARK_GRAFT_EXTRA_CONF environment hook
     os.environ["SPARK_GRAFT_EXTRA_CONF"] = (

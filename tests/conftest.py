@@ -97,8 +97,6 @@ _SLOW_TIER = {
     "tests/test_plans.py::test_no_cartesian_products_anywhere",
     "tests/test_plans.py::test_plan_shuffle_census_within_budget",
     "tests/test_ann_ingest.py::test_stream_ingested_index_matches_one_pass",
-    "tests/test_oracle_parity.py::test_oracle_parity[cdc_stream_parity]",
-    "tests/test_oracle_parity.py::test_oracle_parity[funnel_stream_parity]",
     "tests/test_ivfpq.py::test_drift_rebuild_resets_baseline_and_matches_fresh_build",
     "tests/test_crawl_drift.py::test_compaction_cadence_inside_pipeline",
     "tests/test_oracle_parity.py::test_oracle_parity[ivfpq_incremental_parity]",
