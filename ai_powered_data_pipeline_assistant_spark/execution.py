@@ -1,92 +1,55 @@
-"""Materialization policy for shared intermediates.
+"""Materialization of shared intermediates.
 
 Several operators compute a frame once and feed it to multiple consumers
 (LSH postings into both self-join sides, edge lists into degree/wedge/stat
 branches, per-round frames in iterative loops). Each such site routes
-through :func:`materialize` so the *mechanism* is a single session-level
-choice instead of 33 hard-coded calls:
+through :func:`materialize`, the package's one way to materialize a frame
+and truncate its lineage. The mechanism follows from the master alone:
 
-``SPARK_GRAFT_MATERIALIZE`` =
-
-* ``local_checkpoint`` (default) — ``DataFrame.localCheckpoint``: blocks
-  live on executors, lineage is truncated, and the ContextCleaner releases
-  them when the plan object is GC'd (no CacheManager growth, no manual
-  unpersist). **Trade-off**: local-checkpoint blocks are NOT recomputable —
-  on a multi-node cluster, losing an executor that holds them fails the
-  query instead of recomputing, and Spark documents the mode as unsafe
-  with dynamic allocation. Correct for single-JVM local[N] bench/test
-  runs; choose one of the modes below for real clusters.
-* ``checkpoint`` — reliable ``DataFrame.checkpoint`` into
+* ``local`` / ``local[...]`` — ``DataFrame.localCheckpoint``. One JVM
+  holds every block, so losing an executor loses the whole application
+  anyway; the ContextCleaner releases the blocks when the plan object is
+  GC'd (no CacheManager growth, no manual unpersist).
+* any other master (``local-cluster[...]``, ``spark://``, ``yarn``,
+  ``k8s://``) — reliable ``DataFrame.checkpoint`` into
   ``SPARK_GRAFT_CHECKPOINT_DIR`` (default ``/tmp/spark_graft_checkpoints``;
-  point it at HDFS/S3 on a cluster). Survives executor loss and dynamic
-  allocation; costs one write+read of the intermediate.
-* ``persist`` — ``MEMORY_AND_DISK`` persist: keeps lineage, so lost blocks
-  recompute from source. Cheapest cluster-safe mode, but cached frames
-  stay registered in the CacheManager for the session lifetime (these
-  operators are pure functions and cannot unpersist on behalf of callers
-  still holding the result), and a handful of sites *require* a lineage
-  barrier (Catalyst plan-size/rewrite issues, flagged
-  ``require_barrier=True``) — those fall back to reliable checkpoint.
-* ``none`` — pass-through (debugging; barrier sites still checkpoint).
+  point it at HDFS/S3 on a cluster). Local-checkpoint blocks are not
+  recomputable, so on a cluster an executor loss would fail the query;
+  a reliable checkpoint survives it and dynamic allocation.
 
-Plan tests (tests/test_plans.py) run under the default mode; the census
-budgets there assume lineage truncation at the flagged barrier sites.
+Contract: on both branches the returned frame's plan scans the
+materialized RDD (a ``LogicalRDD``), not the upstream DAG. Sites rely on
+that truncation — the exceptAll Catalyst bug in stream_parity, the
+plan-size budgets of the pointer-doubling and BPE loops, a snapshot
+re-read after a dynamic overwrite rewrites its source — and the plan
+census budgets in tests/test_plans.py assume it.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-_MODES = ("local_checkpoint", "checkpoint", "persist", "none")
 
+def materialize(df: DataFrame, *, eager: bool = False) -> DataFrame:
+    """Materialize a multiply-consumed intermediate and truncate its
+    lineage (module docstring: local checkpoint on a local master,
+    reliable checkpoint on any other).
 
-def _reliable_checkpoint(df: DataFrame, eager: bool) -> DataFrame:
+    ``eager=True`` forces computation now (iterative loops that must cut
+    the previous round's DAG before building on it). Use in chains via
+    ``.transform(materialize)``.
+    """
     sc = df.sparkSession.sparkContext
+    # sc.master is a Python attribute: choosing the branch costs no py4j call
+    if sc.master == "local" or sc.master.startswith("local["):
+        return df.localCheckpoint(eager=eager)
     if sc.getCheckpointDir() is None:
         sc.setCheckpointDir(
             os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/spark_graft_checkpoints")
         )
     return df.checkpoint(eager=eager)
-
-
-def materialize(
-    df: DataFrame, *, eager: bool = False, require_barrier: bool = False
-) -> DataFrame:
-    """Materialize a multiply-consumed intermediate per the session policy.
-
-    ``eager=True`` forces computation now (iterative loops that must cut
-    the previous round's DAG before building on it). ``require_barrier``
-    marks sites where the *lineage truncation itself* is load-bearing —
-    Catalyst rewrite bugs (stream_parity's exceptAll path) or plan-size
-    budgets in pointer-doubling / BPE loops — so lineage-keeping modes
-    (``persist``/``none``) fall back to a reliable checkpoint there.
-
-    Use in chains via ``.transform(materialize)``.
-    """
-    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local_checkpoint")
-    if mode not in _MODES:
-        raise ValueError(
-            f"SPARK_GRAFT_MATERIALIZE={mode!r}; expected one of {_MODES}"
-        )
-    if mode == "checkpoint" or (require_barrier and mode in ("persist", "none")):
-        return _reliable_checkpoint(df, eager)
-    if mode == "persist":
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            df.count()
-        return df
-    if mode == "none":
-        return df
-    return df.localCheckpoint(eager=eager)
-
-
-def materialize_barrier(df: DataFrame) -> DataFrame:
-    """``.transform``-friendly wrapper: lazy materialize with a mandatory
-    lineage barrier (see ``require_barrier`` above)."""
-    return materialize(df, require_barrier=True)
 
 
 def run_concurrently(*thunks):

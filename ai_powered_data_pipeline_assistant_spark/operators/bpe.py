@@ -22,7 +22,7 @@ explode + map-side-combined groupBy over distinct words, never the corpus
 (`kmeans_embeddings`' centroid shape). The in-row merge is a JVM
 `aggregate` fold (exact greedy non-overlap: the folded last element equals
 the pair head iff an unmerged head is pending, because a merged token
-A||B can never equal A); `materialize_barrier` truncates the per-round plan (execution.py policy).
+A||B can never equal A); `materialize` truncates the per-round plan (execution.py policy).
 
 Determinism: counts are integers; pair selection is (count DESC, pair_a,
 pair_b) — fully reproducible, so `bpe_probe_audit` pins the whole
@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ai_powered_data_pipeline_assistant_spark.catalog import load_table
-from ai_powered_data_pipeline_assistant_spark.execution import materialize_barrier
+from ai_powered_data_pipeline_assistant_spark.execution import materialize
 
 BPE_ROUNDS = 8
 BPE_MIN_COUNT = 2
@@ -122,7 +122,7 @@ def _train(
             break
         merges.append((rnd, best["pair_a"], best["pair_b"], best["cnt"]))
         words = _merge_pair(words, best["pair_a"], best["pair_b"]).transform(
-            materialize_barrier
+            materialize
         )
     return merges
 

@@ -761,13 +761,13 @@ def ivfpq_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         write_ivfpq_layout_for(spark, emb, tmp)
         codes_dir = os.path.join(tmp, "codes")
-        # require_barrier: the snapshot is re-read AFTER the delete rewrites
-        # these same parquet files — lineage-keeping modes (persist/none)
-        # would recompute n_before post-delete and compare post-state to
-        # itself (silent false pass). Same flag delete_from_ivfpq_layout
-        # uses for its own read-then-overwrite (ADVICE r8).
+        # barrier: the snapshot is re-read AFTER the delete rewrites these
+        # same parquet files — a frame that kept its lineage would
+        # recompute n_before post-delete and compare post-state to itself
+        # (silent false pass). Same barrier delete_from_ivfpq_layout uses
+        # for its own read-then-overwrite (ADVICE r8).
         pre = materialize(
-            _read_codes(spark, codes_dir), eager=True, require_barrier=True
+            _read_codes(spark, codes_dir), eager=True
         )
         files_pre = _codes_partition_files(codes_dir)
         affected = set(delete_from_ivfpq_layout(spark, tmp, victims))
@@ -865,7 +865,7 @@ def ivfpq_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         codes_dir = os.path.join(tmp, "codes")
         # barrier: re-read after the append adds files to the same dirs
         pre = materialize(
-            _read_codes(spark, codes_dir), eager=True, require_barrier=True
+            _read_codes(spark, codes_dir), eager=True
         )
         sizes = {
             int(r["list_id"]): int(r["n"])

@@ -23,7 +23,7 @@ Scale design:
   same join+groupBy primitive extends to large-star/small-star
   (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond"),
   which converges in O(log n) rounds.
-- `materialize_barrier` (execution.py) after every round truncates lineage so the plan and
+- `materialize` (execution.py) after every round truncates lineage so the plan and
   its recompute cost don't grow with the round count.
 - Keep-best is one window over the (tiny) clustered subset: rank by the
   shared quality score (text_analysis.quality_expr), keep rank 1.
@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ai_powered_data_pipeline_assistant_spark.catalog import load_table
-from ai_powered_data_pipeline_assistant_spark.execution import materialize, materialize_barrier
+from ai_powered_data_pipeline_assistant_spark.execution import materialize
 from ai_powered_data_pipeline_assistant_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     minhash_lsh_pairs,
@@ -108,7 +108,7 @@ def connected_components_counted(
        equi-join + groupBy).
 
     Convergence is a scalar sum(label) compare (labels only ever decrease),
-    and `materialize_barrier` truncates lineage so plan size stays constant
+    and `materialize` truncates lineage so plan size stays constant
     across rounds. Sets `connected_components.last_rounds` for tests.
     """
     # Materialize the edge list ONCE: it feeds every propagation round, and
@@ -119,7 +119,7 @@ def connected_components_counted(
         .union(edges.select(F.col("b_id").alias("node"), F.col("a_id").alias("nbr")))
         # lazy: the count below materializes the checkpoint — eager
         # checkpoints would run one extra job each
-        .transform(materialize_barrier)
+        .transform(materialize)
     )
     # Right-size the iteration's partitioning to the EDGE LIST, not the
     # session default: post-LSH edge lists are orders of magnitude smaller
@@ -129,7 +129,7 @@ def connected_components_counted(
     n_edges = sym.count()
     parts = max(1, min(n_edges // 500_000 + 1, 2048))
     if parts < sym.rdd.getNumPartitions():
-        sym = materialize(sym.repartition(parts, "node"), require_barrier=True)
+        sym = materialize(sym.repartition(parts, "node"))
     # Label init folds the FIRST propagation round into the same shuffle the
     # old `select("node").distinct()` already paid: grouping by node costs
     # one exchange either way, and aggregating min(nbr) alongside seeds
@@ -142,7 +142,7 @@ def connected_components_counted(
         sym.groupBy("node")
         .agg(F.min("nbr").alias("_mn"))
         .select("node", F.least(F.col("node"), F.col("_mn")).alias("label"))
-    ).transform(materialize_barrier)
+    ).transform(materialize)
     connected_components.last_rounds = 0
     prev = labels.agg(F.sum("label")).first()[0]
     if prev is None:  # no edges → no clustered nodes
@@ -168,7 +168,7 @@ def connected_components_counted(
             .agg(F.min("nbr_label").alias("label"))
             # lazy: materialized by the convergence sum right below —
             # one job per round instead of two
-            .transform(materialize_barrier)
+            .transform(materialize)
         )
         labels = new_labels
         connected_components.last_rounds = rnd + 1
@@ -369,7 +369,7 @@ def triangle_census(edges: DataFrame) -> DataFrame:
     # upstream pair-generation DAG in the plan (the LSH pipeline ×5 —
     # ~120 Exchanges; the census budget in tests/test_plans.py caps 30).
     # Same pattern as connected_components above.
-    edges = materialize(edges, eager=True, require_barrier=True)
+    edges = materialize(edges, eager=True)
     sym = edges.select(F.col("a_id").alias("node")).unionAll(
         edges.select(F.col("b_id").alias("node"))
     )

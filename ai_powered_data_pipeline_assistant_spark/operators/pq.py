@@ -147,6 +147,30 @@ def assign_codes(
 PQ_TRAIN_SAMPLE_MOD = 1_000_000  # hash-sample granularity (ppm)
 
 
+def resolve_train_sample(train_sample: float | None = None) -> float:
+    """The PQ training-sample fraction: ``train_sample``, else
+    $PQ_TRAIN_SAMPLE, else 1.0 — checked to lie in (0, 1]. A fraction
+    <= 0 trains on an empty sample (every Lloyd cell is empty, so the
+    codebooks silently stay at their init vectors); one > 1 trains on
+    everything yet keys a separate cached IVF-PQ layout."""
+    import os
+
+    if train_sample is None:
+        raw = os.environ.get("PQ_TRAIN_SAMPLE", "1.0")
+        try:
+            train_sample = float(raw)
+        except ValueError:
+            raise ValueError(
+                f"PQ_TRAIN_SAMPLE={raw!r} is not a number in (0, 1]"
+            ) from None
+    if not 0.0 < train_sample <= 1.0:
+        raise ValueError(
+            f"PQ_TRAIN_SAMPLE / train_sample={train_sample!r}; expected a "
+            "fraction in (0, 1]"
+        )
+    return train_sample
+
+
 def _train_pq(
     emb: DataFrame, m_count: int, subdim: int, k: int, iters: int,
     init_offset: int = 0, train_sample: float | None = None,
@@ -168,10 +192,7 @@ def _train_pq(
     training passes stop scanning 100 TB per iteration. The sample is
     hash-deterministic (same rows every run/executor), so training stays
     reproducible for a fixed partitioning."""
-    import os as _os
-
-    if train_sample is None:
-        train_sample = float(_os.environ.get("PQ_TRAIN_SAMPLE", "1.0"))
+    train_sample = resolve_train_sample(train_sample)
     # First k QUALIFYING vectors past the offset (not the id RANGE
     # [offset, offset+k), which under-fills when the caller trains on a
     # filtered subset — e.g. the incremental-maintenance base split whose

@@ -51,10 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_powered_data_pipeline_assistant_spark.catalog import load_table
-from ai_powered_data_pipeline_assistant_spark.execution import (
-    materialize,
-    materialize_barrier,
-)
+from ai_powered_data_pipeline_assistant_spark.execution import materialize
 
 # how long an availableNow audit stream may run before it counts as stuck
 _STREAM_TIMEOUT_S = 300
@@ -209,7 +206,8 @@ def _run_to_memory(
     no_data_batches: bool = True,
 ) -> DataFrame:
     """Replay `fixture` as one arrival file, run `build(stream)`
-    availableNow into a memory sink, and return the sink as a DataFrame.
+    availableNow into a memory sink, and return a materialized snapshot of
+    the sink (its temp view is dropped).
     One file → one micro-batch → every key emits exactly once.
     ``no_data_batches=False`` is for ProcessingTimeTimeout queries, which
     otherwise run no-data batches (state-TTL cleanup) forever; append-mode
@@ -217,21 +215,26 @@ def _run_to_memory(
     with _audit_scope(spark) as tmp:
         name = f"parity_{os.path.basename(tmp)}"
         out = build(_ordered_arrivals(spark, tmp, [fixture]))
-        with _session_conf(
-            spark,
-            "spark.sql.streaming.noDataMicroBatches.enabled",
-            str(no_data_batches).lower(),
-        ):
-            q = (
-                out.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await(q, f"{name} stream")
-    return spark.sql(f"SELECT * FROM {name}")
+        try:
+            with _session_conf(
+                spark,
+                "spark.sql.streaming.noDataMicroBatches.enabled",
+                str(no_data_batches).lower(),
+            ):
+                q = (
+                    out.writeStream.outputMode(output_mode)
+                    .format("memory")
+                    .queryName(name)
+                    .option("checkpointLocation", f"{tmp}/ckpt")
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                _await(q, f"{name} stream")
+            return materialize(spark.table(name), eager=True)
+        finally:
+            # the sink's view holds its rows in driver memory for the
+            # session: snapshot them first, then drop it (also on error)
+            spark.catalog.dropTempView(name)
 
 
 def cdc_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -393,13 +396,11 @@ def job_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         return answer_requests(dedup_requests(stream), kb)
 
     got = _run_to_memory(spark, fixture, build, "append")
-    # materialize_barrier (lineage barrier REQUIRED, all modes): exceptAll trips an
+    # materialize (the lineage barrier is REQUIRED): exceptAll trips an
     # INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on this left-join + concat plan
     # (Catalyst project-collapse bug); materializing the twin sidesteps it
     # and also stops the batch pipeline re-running for each diff direction
-    want = answer_requests(dedup_requests(base_req), kb).transform(
-        materialize_barrier
-    )
+    want = answer_requests(dedup_requests(base_req), kb).transform(materialize)
     n_no_context = got.join(
         kb.select(F.col("doc_id").alias("job_id")), "job_id", "left_anti"
     ).count()
@@ -439,9 +440,7 @@ def channel_fanout_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         got_resp = spark.read.parquet(f"{tmp}/chan/job_responses")
         got_tasks = spark.read.parquet(f"{tmp}/chan/tasks")
         got_logs = spark.read.parquet(f"{tmp}/chan/logs")
-        want_resp = answer_requests(dedup_requests(base_req), kb).transform(
-            materialize_barrier
-        )
+        want_resp = answer_requests(dedup_requests(base_req), kb).transform(materialize)
         want_tasks = want_resp.select(
             F.col("request_id").alias("task_name"),
             F.lit("completed").alias("status"),
@@ -521,7 +520,7 @@ def neardup_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a_id").alias("later_id"),
             F.col("b_id").alias("earlier_id"),
             "jaccard",
-        ).transform(materialize_barrier)
+        ).transform(materialize)
         n_stream = got.count()
         n_batch = want.count()
         mismatches = _sym_diff(want, got)
@@ -598,10 +597,8 @@ def substring_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exact text semantics the oracle recomputes
         dropped_arrival = dropped_intervals_for(
             sized, batch_expr=lambda d: d % nb, hash_keyed=False
-        ).transform(materialize_barrier)
-        want = accounting_for(sized, dropped_arrival).transform(
-            materialize_barrier
-        )
+        ).transform(materialize)
+        want = accounting_for(sized, dropped_arrival).transform(materialize)
         n_stream = got.count()
         n_batch = want.count()
         mismatches = _sym_diff(want, got)
@@ -614,7 +611,7 @@ def substring_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # avoids recomputing the whole pipeline per direction and
         # sidesteps the Catalyst project-collapse class documented at the
         # accounting leg (round-10 review)
-        want_text = materialize_barrier(
+        want_text = materialize(
             rewrite_for(sized, dropped_arrival).select(*text_cols)
         )
         rw_mismatch = _sym_diff(got_text, want_text)
@@ -661,7 +658,7 @@ def _replay_lsh_clusters(docs: DataFrame, nb: int, state: str) -> DataFrame:
         process_cluster_batch,
     )
 
-    pairs = materialize_barrier(minhash_lsh_pairs_for(docs).select("a_id", "b_id"))
+    pairs = materialize(minhash_lsh_pairs_for(docs).select("a_id", "b_id"))
     arrival = F.greatest(F.col("a_id") % nb, F.col("b_id") % nb)
     for i in range(nb):
         process_cluster_batch(pairs.filter(arrival == i), i, state)
@@ -716,8 +713,8 @@ def neardup_cluster_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame
         pairs = _replay_lsh_clusters(docs, nb, state)
         got = resolved_roots(spark, state).select(
             "doc_id", "cluster_id"
-        ).transform(materialize_barrier)
-        want = materialize_barrier(
+        ).transform(materialize)
+        want = materialize(
             connected_components(pairs).select(
                 F.col("node").alias("doc_id"),
                 F.col("label").alias("cluster_id"),
@@ -787,7 +784,7 @@ def media_phash_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # explicit schema: a zero-pair corpus leaves only _SUCCESS markers
         # in the batch partitions, and schema inference would crash where
         # the oracle correctly reports n_pairs = 0 (round-11 review)
-        got = materialize_barrier(
+        got = materialize(
             spark.read.schema(f"{PAIRS_SCHEMA}, batch_id long")
             .parquet(pairs_dir)
             .select("later_id", "earlier_id", "hamming")
@@ -797,7 +794,7 @@ def media_phash_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         bb = F.col("b_id") % nb
         # arrival orientation: later = the endpoint whose batch is later;
         # same batch → the greater id (a_id < b_id in the batch frame)
-        want = materialize_barrier(
+        want = materialize(
             batch_pairs.select(
                 F.when(ba > bb, F.col("a_id"))
                 .otherwise(F.col("b_id"))
@@ -992,7 +989,7 @@ def media_cluster_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _audit_scope(spark, drop_state) as tmp:
         state = f"{tmp}/state"
         media = media_table(spark, sf_dir)
-        pairs = materialize_barrier(
+        pairs = materialize(
             _phash_pairs(_phash_frame(media)).select("a_id", "b_id")
         )
         arrival = F.greatest(F.col("a_id") % nb, F.col("b_id") % nb)
@@ -1006,8 +1003,8 @@ def media_cluster_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.octet_length("payload").cast("long").alias("bytes"),
         )
         fam = resolved_roots(spark, state).join(sized, "doc_id")
-        got = materialize_barrier(_keep_best(fam, "doc_id", "cluster_id"))
-        want = materialize_barrier(
+        got = materialize(_keep_best(fam, "doc_id", "cluster_id"))
+        want = materialize(
             media_phash_keep_best(spark, sf_dir).select(*got.columns)
         )
         mismatches = _sym_diff(got, want)
@@ -1188,10 +1185,10 @@ def media_crawl_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 media.filter(F.col("media_id") % nb == i), i, state, out,
                 compact_every=2,
             )
-        got_curated = materialize_barrier(
+        got_curated = materialize(
             _media_output(spark, out, "curated").select("media_id", "modality")
         )
-        got_fams = materialize_barrier(
+        got_fams = materialize(
             media_keep_best_state(spark, state).select(
                 "family_id", "modality", "family_size",
                 "keeper_id", "keeper_bytes",
@@ -1220,7 +1217,7 @@ def media_crawl_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("b_id"))
             .alias("media_id")
         ).distinct()
-        want_curated = materialize_barrier(
+        want_curated = materialize(
             keepers.select("media_id", "modality").join(
                 later_ids, "media_id", "left_anti"
             )
@@ -1228,7 +1225,7 @@ def media_crawl_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         comp = connected_components(kpairs.select("a_id", "b_id")).select(
             F.col("node").alias("media_id"), F.col("label").alias("family_id")
         )
-        want_fams = materialize_barrier(
+        want_fams = materialize(
             _keep_best(
                 comp.join(sized.select("media_id", "modality", "bytes"), "media_id"),
                 "media_id",
@@ -1441,11 +1438,10 @@ def cluster_state_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         before = materialize(
             resolved_roots(spark, state).select("doc_id", "cluster_id"),
             eager=True,
-            require_barrier=True,
         )
         red_before = read_redirects(spark, state).count()
         stats = compact_cluster_state(spark, state)
-        after = materialize_barrier(
+        after = materialize(
             resolved_roots(spark, state).select("doc_id", "cluster_id")
         )
         preserved = _sym_diff(before, after) == 0
@@ -1731,7 +1727,7 @@ def _one_pass_codes(spark: SparkSession, layout: str, vecs: DataFrame) -> DataFr
     )
 
     centroids, _cm, pq_cents, _, _ = read_ivfpq_artifacts(spark, layout)
-    return materialize_barrier(
+    return materialize(
         assign_codes(residual_frame(vecs, centroids), pq_cents, PQ_SUBDIM).select(
             "vec_id", "list_id", *[F.col(f"_c{m}") for m in range(PQ_M)]
         )
@@ -1799,7 +1795,7 @@ def ann_ingest_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         _await(q, "ANN ingest stream")
         centroids, cent_map, pq_cents, _, _ = read_ivfpq_artifacts(spark, layout)
         ref = _one_pass_codes(spark, layout, emb)
-        streamed = materialize_barrier(_index_codes(spark, layout))
+        streamed = materialize(_index_codes(spark, layout))
         codes_mm = _sym_diff(streamed, ref)
         # replay batch 0's append against the finished index: dynamic
         # overwrite of its own partitions must leave the rows identical
@@ -1910,7 +1906,7 @@ def crawl_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             pair_cond=lambda a, b: (a_b(a) > a_b(b))
             | ((a_b(a) == a_b(b)) & (a > b)),
         ).select(F.col("a_id").alias("doc_id")).distinct()
-        want_curated = materialize_barrier(
+        want_curated = materialize(
             arrivals.select("doc_id").join(later, "doc_id", "left_anti")
         )
         cur_mm = _sym_diff(got_curated, want_curated)
@@ -1923,7 +1919,7 @@ def crawl_pipeline_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         ref = _one_pass_codes(spark, layout, kept_vecs)
-        streamed = materialize_barrier(_index_codes(spark, layout))
+        streamed = materialize(_index_codes(spark, layout))
         idx_mm = _sym_diff(streamed, ref)
         n_arrivals = arrivals.count()
     return spark.createDataFrame(

@@ -91,7 +91,7 @@ def occ_for(
 ) -> DataFrame:
     """(doc_id, pos, wk) window occurrences, materialized — occ always
     feeds BOTH the first-occurrence aggregate and the join probe side, so
-    the explode runs once per session policy.
+    the explode runs once.
 
     ``wk`` is the shuffle/join key: by default the 128-bit md5 of the
     window text (``unhex`` → 16-byte binary — the production shape the

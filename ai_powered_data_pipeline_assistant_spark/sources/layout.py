@@ -320,7 +320,6 @@ def compact_ivfpq_layout(spark: SparkSession, layout_path: str) -> int:
         # hash-align tasks to partition values → one file per directory
         codes.repartition(*[F.col(c) for c in part_cols]),
         eager=True,
-        require_barrier=True,
     )
     staged.select(*data_cols, *part_cols).write.mode("overwrite").partitionBy(
         *part_cols
@@ -364,7 +363,7 @@ def delete_from_ivfpq_layout(
     # |affected lists| × list size, not the index.
     kept = codes.filter(
         F.col("list_id").isin(affected) & ~F.col("vec_id").isin(vec_ids)
-    ).transform(lambda d: materialize(d, eager=True, require_barrier=True))
+    ).transform(lambda d: materialize(d, eager=True))
     data_cols = [c for c in codes.columns if c != "list_id"]
     (
         kept.select(*data_cols, "list_id")
@@ -541,13 +540,17 @@ def ensure_ivfpq_layout(spark: SparkSession, sf_dir: str) -> str:
     codes _SUCCESS marker, keyed by the source fingerprint so a
     regenerated base table invalidates the cached index). The effective
     PQ training-sample fraction is folded into the key — codebook
-    training reads $PQ_TRAIN_SAMPLE inside _train_pq, so changing the
-    knob between runs must not silently serve an index trained at the
-    old fraction (ADVICE r8)."""
+    training reads $PQ_TRAIN_SAMPLE inside _train_pq (both through
+    pq.resolve_train_sample), so changing the knob between runs must not
+    silently serve an index trained at the old fraction (ADVICE r8)."""
     import os
     import tempfile
 
-    train_sample = float(os.environ.get("PQ_TRAIN_SAMPLE", "1.0"))
+    from ai_powered_data_pipeline_assistant_spark.operators.pq import (
+        resolve_train_sample,
+    )
+
+    train_sample = resolve_train_sample()
     # v2: codes rebalanced to ~one file per list at build (round 12) —
     # the version bump invalidates cached v1 layouts whose per-list file
     # sprawl the pruned query path would otherwise keep paying.

@@ -65,10 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ai_powered_data_pipeline_assistant_spark import hadoop_fs
-from ai_powered_data_pipeline_assistant_spark.execution import (
-    materialize,
-    materialize_barrier,
-)
+from ai_powered_data_pipeline_assistant_spark.execution import materialize
 from ai_powered_data_pipeline_assistant_spark.streaming import (
     state_compaction as sc,
 )
@@ -100,7 +97,7 @@ def _flat_redirects(redirects: DataFrame) -> DataFrame:
     depth. Work is O(merge events · log depth), corpus-independent.
     Convergence is a scalar sum compare (targets only ever decrease —
     min-rule labels)."""
-    flat = materialize_barrier(
+    flat = materialize(
         redirects.select("old_root", F.col("new_root").alias("final_root"))
     )
     prev = flat.agg(F.sum("final_root")).first()[0]
@@ -111,7 +108,7 @@ def _flat_redirects(redirects: DataFrame) -> DataFrame:
             F.col("old_root").alias("final_root"),
             F.col("final_root").alias("hop"),
         )
-        flat = materialize_barrier(
+        flat = materialize(
             flat.join(hop, "final_root", "left").select(
                 "old_root",
                 F.coalesce("hop", "final_root").alias("final_root"),
@@ -199,7 +196,7 @@ def process_cluster_batch(
         .distinct()
     )
     # batch-sized CC over RESOLVED roots (never the accumulated graph)
-    groups = materialize_barrier(
+    groups = materialize(
         connected_components(edges).select(
             F.col("node").alias("rroot"), F.col("label").alias("gl")
         )

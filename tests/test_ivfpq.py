@@ -611,6 +611,7 @@ def test_append_returns_routed_lists_of_its_partition(spark, sf_dir):
     import tempfile
 
     from ai_powered_data_pipeline_assistant_spark.catalog import load_table
+    from ai_powered_data_pipeline_assistant_spark.execution import materialize
     from ai_powered_data_pipeline_assistant_spark.sources.layout import (
         append_ivfpq_layout,
     )
@@ -628,7 +629,7 @@ def test_append_returns_routed_lists_of_its_partition(spark, sf_dir):
         # pipeline's all-duplicate batch is a checkpointed empty frame)
         empties = [
             emb.limit(0),
-            emb.filter(F.col("vec_id") < 0).localCheckpoint(eager=True),
+            materialize(emb.filter(F.col("vec_id") < 0), eager=True),
         ]
         for batch_id, empty in enumerate(empties, start=1):
             assert append_ivfpq_layout(spark, layout, empty, batch_id=batch_id) == []

@@ -4,6 +4,8 @@ round-trip, codebook accounting, and the retrieval-quality bounds."""
 
 from __future__ import annotations
 
+import pytest
+
 from ai_powered_data_pipeline_assistant_spark.operators.pq import (
     PQ_K,
     PQ_M,
@@ -12,6 +14,7 @@ from ai_powered_data_pipeline_assistant_spark.operators.pq import (
     pq_encode,
     pq_probe_audit,
     pq_recall_audit,
+    resolve_train_sample,
 )
 
 
@@ -94,3 +97,24 @@ def test_sampled_training_fraction_one_is_exact_default(spark, sf_dir):
         train_sample=1.0,
     )
     assert full == explicit
+
+
+@pytest.mark.parametrize("raw", ["0", "-0.1", "1.5", "abc"])
+def test_train_sample_out_of_range_raises(monkeypatch, raw):
+    """A fraction <= 0 would train on an empty sample (codebooks stuck at
+    init); one > 1 would key a separate cached layout. Both read sites go
+    through one resolver, which refuses them by name."""
+    monkeypatch.setenv("PQ_TRAIN_SAMPLE", raw)
+    with pytest.raises(ValueError, match="PQ_TRAIN_SAMPLE"):
+        resolve_train_sample()
+    if raw != "abc":
+        with pytest.raises(ValueError, match="PQ_TRAIN_SAMPLE"):
+            resolve_train_sample(float(raw))
+
+
+def test_train_sample_resolves_in_range(monkeypatch):
+    monkeypatch.delenv("PQ_TRAIN_SAMPLE", raising=False)
+    assert resolve_train_sample() == 1.0
+    assert resolve_train_sample(0.25) == 0.25
+    monkeypatch.setenv("PQ_TRAIN_SAMPLE", "0.5")
+    assert resolve_train_sample() == 0.5

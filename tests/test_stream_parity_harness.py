@@ -104,3 +104,13 @@ def test_processing_time_timeout_query_ends_by_itself(spark, monkeypatch):
     got = {r.user_id: (r.last_op, r.last_value) for r in state.collect()}
     assert got == {1: ("click", 2.5), 2: ("view", 4.0)}
     assert spark.conf.get(no_data) == prev
+
+
+def test_run_to_memory_drops_its_sink_view(spark):
+    """The memory sink's temp view holds the result rows in driver memory;
+    `_run_to_memory` returns a materialized snapshot and drops the view,
+    so no `parity_*` view outlives the call."""
+    got = sp._run_to_memory(spark, spark.range(5), lambda s: s, "append")
+    assert sorted(r.id for r in got.collect()) == [0, 1, 2, 3, 4]
+    views = [t.name for t in spark.catalog.listTables()]
+    assert not [v for v in views if v.startswith("parity_")], views

@@ -176,12 +176,13 @@ def test_k_plan_single_pass_plan_shape(spark, sf_dir, monkeypatch):
     the full-lineage plan (materialization off, so checkpoints don't
     truncate what we're counting) must carry exactly one Generate (the
     flattened all-K window array), not one explode per candidate K."""
+    from ai_powered_data_pipeline_assistant_spark.operators import substring
     from ai_powered_data_pipeline_assistant_spark.operators.substring import (
         SUBSTR_K_CANDIDATES,
         substring_k_plan,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "none")
+    monkeypatch.setattr(substring, "materialize", lambda df, **_: df)
     plan = (
         substring_k_plan(spark, sf_dir)
         ._jdf.queryExecution()
@@ -189,9 +190,9 @@ def test_k_plan_single_pass_plan_shape(spark, sf_dir, monkeypatch):
         .toString()
     )
     # the ONE shared occ frame feeds both sides of the first-wins
-    # self-join, so full lineage shows the explode at most twice (the
-    # session materialize policy folds it to one execution); the old
-    # per-K loop showed 2·|candidates| = 8
+    # self-join, so full lineage shows the explode at most twice
+    # (materialize folds it to one execution); the old per-K loop showed
+    # 2·|candidates| = 8
     assert 1 <= plan.count("Generate explode") <= 2, plan
     assert "CartesianProductExec" not in plan
     assert len(SUBSTR_K_CANDIDATES) == 4  # sweep width unchanged

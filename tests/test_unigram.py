@@ -141,11 +141,12 @@ def test_fertility_report_viterbi_stays_vocab_side(spark, sf_dir, monkeypatch):
     full-lineage plan (materialization off) the probe side (the corpus
     explode, printed before the first BroadcastExchange) must carry no
     EvalPython node; the one ArrowEvalPython lives under the broadcast."""
+    from ai_powered_data_pipeline_assistant_spark.operators import unigram
     from ai_powered_data_pipeline_assistant_spark.operators.unigram import (
         tokenizer_fertility_report,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "none")
+    monkeypatch.setattr(unigram, "materialize", lambda df, **_: df)
     plan = (
         tokenizer_fertility_report(spark, sf_dir)
         ._jdf.queryExecution()
